@@ -21,28 +21,26 @@ Reference semantics (``ontology_processor.py:152-211``):
   dedup (quirk Q4: closure rows unique per subject).
 
 Spark-first design: the reference runs one recursive SQLite traversal
-*per entity* (``:197``). We instead compute ONE global closure as an
-iterative frontier self-join to fixpoint (semi-naive evaluation):
-each iteration joins the current frontier against the (broadcastable)
-predicate-filtered edge set, anti-joins out pairs already reached, and
-unions into the accumulator. ``localCheckpoint()`` every iteration
-truncates lineage so plan depth stays O(1) instead of O(depth)
-(SURVEY.md §4.2.1). Iteration count is O(DAG height) — tens, never
-data-sized. Root/hub ancestors concentrate on few keys; the distinct
-inside the loop shuffles on (subject, object) pairs which are
-well-spread, so no salting is needed here (the pair key, not the hot
-ancestor key, is the shuffle key).
+*per entity* (``:197``). We instead compute ONE global closure, by
+path doubling or as a frontier fixpoint on
+:func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint` (shared
+with the incremental add and delete): each round pins one state with
+``localCheckpoint`` (plan depth O(1), SURVEY.md §4.2.1) and reads its
+row count from that same job. The shuffle key is the (subject, object)
+pair, not the hot ancestor key, so no salting is needed. Rounds are
+O(DAG height) (O(log2 height) doubling) — tens, never data-sized.
 
 At 100 TB-scale the edge set (ontology graph) is small (≤ millions of
-rows) while the *pair* accumulator can reach |terms| × depth; both stay
+rows) while the *pair* state can reach |terms| × depth; both stay
 distributed — nothing is collected to the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.fixpoint import BORN, pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.curie import matches_ontology
 from ontology_loader_spark.partitioning import state_partitions
 from ontology_loader_spark.schemas import (
@@ -50,6 +48,15 @@ from ontology_loader_spark.schemas import (
     DEFAULT_PREDICATES,
     ONTOLOGY_RELATION_TYPE,
 )
+
+# Broadcast ceiling for an ontology-closure pair set (|terms| × depth
+# pairs): the doubling join here and mention_ancestor_triples in
+# pipeline.py. Small/mid ontologies (GO, ENVO: ≤~100k terms) sit far
+# under it; NCBITaxon-scale closures (~2.5M terms × depth 20-30 →
+# 50-75M pairs, multi-GB serialized) blow past Spark's broadcast
+# ceiling and must shuffle instead. Same measured auto-dispatch recipe
+# as operators/dedup.py::BROADCAST_PAIRS_MAX.
+BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
 
 
 def relevant_entities(term_dict: DataFrame, ontology: str) -> DataFrame:
@@ -126,65 +133,63 @@ def ancestor_closure(
         SELECT s, 'entailed_isa_partof_closure', o FROM reach
         WHERE <F1 on o>
 
-    We keep the explicit driver loop (semi-naive, localCheckpoint per
-    iteration) for lineage/checkpoint control (SURVEY.md §4.2.1).
-
     ``strategy``:
 
-    - ``"frontier"``: semi-naive BFS — O(depth) iterations, minimal
-      per-iteration intermediates. Best when depth is small or
-      per-iteration data is large.
+    - ``"frontier"``: semi-naive BFS on
+      :func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint` —
+      O(depth) rounds, each stepping only the pairs born in the
+      previous round. Best when depth is small or per-round data is
+      large.
     - ``"doubling"`` (default): path-doubling (repeated squaring of the
-      reachability relation) — O(log2 depth) iterations at the cost of
+      reachability relation) — O(log2 depth) rounds at the cost of
       denser intermediates. Best when driver-side iteration overhead
       dominates (deep hierarchies, many small jobs) — this is the
       option that keeps the serial fraction negligible in the
       two-cluster-size scaling gate.
+
+    Both raise ``RuntimeError`` past ``max_iterations`` rounds.
     """
-    hedges = (
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct()
-    )
     # The ontology edge set is small relative to the fact tables —
-    # cache it; it is the probe side of every iteration.
-    hedges = hedges.localCheckpoint(eager=True)
-
+    # pin it; it is the probe side of every iteration.
+    hedges, n_hedges = pin_count(
+        select_hierarchy_edges(edges, predicates).select("subject", "object").distinct()
+    )
     if strategy == "doubling":
-        return _closure_doubling(hedges, relevant, ontology, max_iterations)
+        return _closure_doubling(hedges, n_hedges, relevant, ontology, max_iterations)
 
-    ids = relevant.select(F.col("id").alias("s"))
     # Reflexive seed (Q1): every relevant entity reaches itself.
-    closure = ids.select(F.col("s"), F.col("s").alias("o")).localCheckpoint(eager=True)
-    frontier = closure
+    reach = semi_naive_fixpoint(
+        relevant.select(F.col("id").alias("s"), F.col("id").alias("o")),
+        lambda f: f.join(F.broadcast(hedges), f["o"] == hedges["subject"]).select(
+            f["s"], hedges["object"].alias("o")
+        ),
+        ["s", "o"],
+        max_iterations=max_iterations,
+        op_name="ancestor_closure",
+    )
+    return _emit(reach, ontology)
 
-    for _ in range(max_iterations):
-        stepped = (
-            frontier.join(
-                F.broadcast(hedges),
-                frontier["o"] == hedges["subject"],
-                "inner",
-            )
-            .select(frontier["s"], hedges["object"].alias("o"))
-            .distinct()
-        )
-        new = stepped.join(closure, ["s", "o"], "left_anti").localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        closure = closure.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    else:
-        raise RuntimeError(
-            f"ancestor_closure did not converge in {max_iterations} iterations "
-            "(cycle-heavy graph deeper than the bound?)"
-        )
 
-    return closure.filter(matches_ontology(F.col("o"), ontology)).select(
+def _emit(pairs: DataFrame, ontology: str) -> DataFrame:
+    """J3 projection of reach pairs ``(s, o)``: F1 on the emitted
+    ancestor only (Q2), in the closure-triple shape."""
+    return pairs.filter(matches_ontology(F.col("o"), ontology)).select(
         F.col("s").alias("subject"),
         F.lit(CLOSURE_PREDICATE).alias("predicate"),
         F.col("o").alias("object"),
         F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
     )
+
+
+def _hedge_set(edges: DataFrame, predicates, broadcast_edges_max: int):
+    """Pinned hierarchy ``(subject, object)`` pairs (duplicates are
+    absorbed by the fixpoint's reduction), and the side every round
+    joins them as: broadcast under ``broadcast_edges_max`` rows, else
+    a plain shuffle join (AQE), decided by the pin's observed count."""
+    hedges, n = pin_count(
+        select_hierarchy_edges(edges, predicates).select("subject", "object")
+    )
+    return hedges, F.broadcast(hedges) if n <= broadcast_edges_max else hedges
 
 
 def incremental_closure_update(
@@ -211,96 +216,46 @@ def incremental_closure_update(
     (old ∪ new) edge set from the new edges' subjects — the number of
     PAIR rows iterated is proportional to the delta's ancestor cone,
     never the old closure — intersected with the closure domain. The
-    forward fixpoint then iterates only the genuinely-new pairs
-    against the full edge set, anti-joining out prior pairs.
+    forward fixpoint then steps only the genuinely-new pairs against
+    the full edge set, with the prior pairs as its ``known`` rows.
 
-    Each fixpoint step joins the frontier against the full hierarchy
-    edge set: broadcast when that edge set is small enough
-    (``broadcast_edges_max`` rows — ontology hierarchies are
-    dictionary-bounded, so this is the common case), otherwise a plain
-    shuffle join per iteration (AQE picks the strategy) — the frontier
-    side stays delta-sized either way.
+    Each round joins the delta-sized frontier against the full
+    hierarchy edge set, broadcast under ``broadcast_edges_max`` rows
+    (ontology hierarchies are dictionary-bounded: the common case).
 
     ``prior_closure``: (subject, predicate, object, type) as produced
     by :func:`ancestor_closure` over ``edges``. Returns the closure of
     ``edges ∪ new_edges`` in the same shape, equal to a fresh
-    :func:`ancestor_closure` run (pinned by a randomized test)."""
-    all_hedges = (
-        select_hierarchy_edges(edges.unionByName(new_edges), predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
+    :func:`ancestor_closure` run (pinned by a randomized test). New
+    pairs never include a prior pair (those are ``known``), so the
+    result is a disjoint union and needs no distinct."""
+    all_hedges, hedges_side = _hedge_set(
+        edges.unionByName(new_edges), predicates, broadcast_edges_max
     )
-    # one count over the checkpointed edge set decides the join
-    # strategy for every fixpoint iteration below
-    if all_hedges.count() <= broadcast_edges_max:
-        hedges_side = F.broadcast(all_hedges)
-    else:
-        hedges_side = all_hedges
-    new_h = (
-        select_hierarchy_edges(new_edges, predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    prior_pairs = prior_closure.select(
-        F.col("subject").alias("s"), F.col("object").alias("o")
-    )
+    new_h = select_hierarchy_edges(new_edges, predicates)
 
     revreach = _reverse_reach(
-        all_hedges, hedges_side, new_h.select("subject"), max_iterations,
-        "incremental_closure_update",
+        all_hedges, hedges_side, new_h, max_iterations, "incremental_closure_update"
     )
-
-    # seed: (u ∈ closure domain) →* a, new edge a → b  ⇒  frontier (u, b)
-    frontier = (
+    # seed: (u ∈ closure domain) →* a, new edge a → b  ⇒  pair (u, b)
+    seed = (
         revreach.join(
             F.broadcast(relevant.withColumnRenamed("id", "u")), "u", "left_semi"
         )
         .join(new_h.withColumnRenamed("subject", "a"), "a")
         .select(F.col("u").alias("s"), F.col("object").alias("o"))
-        .distinct()
-        .localCheckpoint(eager=True)
     )
-
-    known = prior_pairs.localCheckpoint(eager=True)
-    added = frontier.join(known, ["s", "o"], "left_anti").localCheckpoint(eager=True)
-    acc = added
-    frontier = added
-    for _ in range(max_iterations):
-        if frontier.isEmpty():
-            break
-        stepped = (
-            frontier.join(
-                hedges_side,
-                frontier["o"] == all_hedges["subject"],
-            )
-            .select(frontier["s"], all_hedges["object"].alias("o"))
-            .distinct()
-        )
-        new_pairs = (
-            stepped.join(known, ["s", "o"], "left_anti")
-            .join(acc, ["s", "o"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        acc = acc.unionByName(new_pairs).localCheckpoint(eager=True)
-        frontier = new_pairs
-    else:
-        raise RuntimeError(
-            f"incremental_closure_update did not converge in {max_iterations}"
-        )
-
-    emitted = (
-        acc.filter(matches_ontology(F.col("o"), ontology))
-        .select(
-            F.col("s").alias("subject"),
-            F.lit(CLOSURE_PREDICATE).alias("predicate"),
-            F.col("o").alias("object"),
-            F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
-        )
+    reach = semi_naive_fixpoint(
+        seed,
+        lambda f: f.join(hedges_side, f["o"] == all_hedges["subject"]).select(
+            f["s"], all_hedges["object"].alias("o")
+        ),
+        ["s", "o"],
+        known=prior_closure.selectExpr("subject AS s", "object AS o"),
+        max_iterations=max_iterations,
+        op_name="incremental_closure_update",
     )
-    return prior_closure.unionByName(emitted).distinct()
+    return prior_closure.unionByName(_emit(reach.filter(F.col(BORN) >= 0), ontology))
 
 
 def _reverse_reach(
@@ -309,39 +264,24 @@ def _reverse_reach(
     seeds: DataFrame,
     max_iterations: int,
     op_name: str,
+    keys: tuple[str, ...] = ("u", "a"),
 ) -> DataFrame:
     """Reverse BFS over the hierarchy edge set: revreach(u, a) ⇔
-    u →* a over ``all_hedges``, seeded reflexively at each row of
-    ``seeds`` (one column ``subject``). The pair count iterated is
-    proportional to the seeds' ancestor cone, never the full closure —
-    the property both incremental-maintenance directions rely on.
-    ``hedges_side`` is ``all_hedges`` possibly wrapped in a broadcast
-    hint (decided once by the caller for every iteration)."""
-    revreach = seeds.select(
-        F.col("subject").alias("u"), F.col("subject").alias("a")
-    ).distinct().localCheckpoint(eager=True)
-    rfrontier = revreach
-    for _ in range(max_iterations):
-        stepped = (
-            rfrontier.join(
-                hedges_side,
-                rfrontier["u"] == all_hedges["object"],
-            )
-            .select(all_hedges["subject"].alias("u"), rfrontier["a"])
-            .distinct()
-        )
-        new_rev = stepped.join(revreach, ["u", "a"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new_rev.isEmpty():
-            break
-        revreach = revreach.unionByName(new_rev).localCheckpoint(eager=True)
-        rfrontier = new_rev
-    else:
-        raise RuntimeError(
-            f"{op_name} reverse pass did not converge in {max_iterations}"
-        )
-    return revreach
+    u →* a over ``all_hedges``, seeded reflexively at each ``subject``
+    of ``seeds``. The row count iterated is proportional to the seeds'
+    ancestor cone, never the full closure — the property both
+    incremental-maintenance directions rely on. ``keys=("u",)`` keeps
+    only the reaching nodes (the delete needs no seed per row).
+    ``hedges_side``: see :func:`_hedge_set`."""
+    return semi_naive_fixpoint(
+        seeds.select(F.col("subject").alias("u"), F.col("subject").alias("a")),
+        lambda f: f.join(hedges_side, f["u"] == all_hedges["object"]).select(
+            all_hedges["subject"].alias("u"), *keys[1:]
+        ),
+        keys,
+        max_iterations=max_iterations,
+        op_name=f"{op_name} reverse pass",
+    ).select(*keys)
 
 
 def incremental_closure_delete(
@@ -382,31 +322,22 @@ def incremental_closure_delete(
     ``prior_closure`` must be the closure of ``edges``; returns the
     closure of ``edges − deleted_edges``, equal to a fresh
     :func:`ancestor_closure` run (randomized-delta test + gate)."""
-    old_h = (
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if old_h.count() <= broadcast_edges_max:
-        hedges_side = F.broadcast(old_h)
-    else:
-        hedges_side = old_h
-    del_h = (
-        select_hierarchy_edges(deleted_edges, predicates)
-        .select("subject", "object")
-        .distinct()
-    )
-
+    old_h, hedges_side = _hedge_set(edges, predicates, broadcast_edges_max)
     revreach = _reverse_reach(
-        old_h, hedges_side, del_h.select("subject"), max_iterations,
+        old_h,
+        hedges_side,
+        select_hierarchy_edges(deleted_edges, predicates),
+        max_iterations,
         "incremental_closure_delete",
+        keys=("u",),
     )
-    affected = (
-        revreach.select(F.col("u").alias("id"))
-        .distinct()
-        .join(F.broadcast(relevant), "id", "left_semi")
-        .localCheckpoint(eager=True)
+    # one job measures both sides of the strategy dispatch below: the
+    # cone on the pin, the closure domain on the semi-join's streamed side
+    domain = Observation()
+    affected, n_affected = pin_count(
+        relevant.observe(domain, F.count(F.lit(1)).alias("n")).join(
+            F.broadcast(revreach.select(F.col("u").alias("id"))), "id", "left_semi"
+        )
     )
 
     kept = prior_closure.join(
@@ -423,13 +354,7 @@ def incremental_closure_delete(
         ["subject", "predicate", "object"],
         "left_anti",
     )
-    # both sides of the dispatch are dictionary-bounded counts (the
-    # closure domain, not the corpus) — two cheap actions
-    strategy = (
-        "doubling"
-        if affected.count() * 2 >= relevant.count()
-        else "frontier"
-    )
+    strategy = "doubling" if n_affected * 2 >= domain.get["n"] else "frontier"
     rederived = ancestor_closure(
         remaining, affected, ontology, predicates, max_iterations,
         strategy=strategy,
@@ -438,50 +363,39 @@ def incremental_closure_delete(
 
 
 def _closure_doubling(
-    hedges: DataFrame, relevant: DataFrame, ontology: str, max_iterations: int
+    hedges: DataFrame, n: int, relevant: DataFrame, ontology: str, max_iterations: int
 ) -> DataFrame:
-    """Path-doubling reachability: square the pair relation until the
-    fixpoint — reach(k+1) = reach(k) ∪ (reach(k) ⋈ reach(k)); pair
-    count is the convergence test (one action per iteration)."""
+    """Path-doubling reachability over the ``n`` pinned distinct
+    ``hedges``: square the pair relation until the fixpoint —
+    reach(k+1) = reach(k) ∪ (reach(k) ⋈ reach(k)); the pair count,
+    observed on each round's pin, is the convergence test (one action
+    per round)."""
     spark = hedges.sparkSession
     reach = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
-    reach = reach.localCheckpoint(eager=True)
-    n = reach.count()
     for _ in range(max_iterations):
+        right = reach.alias("r")
+        if n <= BROADCAST_CLOSURE_PAIRS_MAX:
+            right = F.broadcast(right)
         squared = (
             reach.alias("l")
-            .join(reach.alias("r"), F.col("l.o") == F.col("r.s"))
+            .join(right, F.col("l.o") == F.col("r.s"))
             .select(F.col("l.s").alias("s"), F.col("r.o").alias("o"))
         )
         # iteration-state width follows the observed pair count:
         # dictionary-scale graphs stay on a few tasks per round,
         # corpus-scale graphs fan out up to the session shuffle width
-        reach = (
+        reach, n2 = pin_count(
             reach.unionByName(squared)
             .distinct()
             .coalesce(state_partitions(spark, n * 2))
-            .localCheckpoint(eager=True)
         )
-        n2 = reach.count()
         if n2 == n:
             break
         n = n2
     else:
-        raise RuntimeError(
-            f"_closure_doubling did not converge in {max_iterations} iterations"
-        )
+        raise RuntimeError(f"ancestor_closure did not converge in {max_iterations}")
     rel = relevant.select(F.col("id").alias("s"))
-    reached = rel.join(reach, "s", "inner").select("s", "o")
+    reached = F.broadcast(rel).join(reach, "s", "inner").select("s", "o")
     reflexive = rel.select("s", F.col("s").alias("o"))
     # a cycle can make s reach itself — dedup against the reflexive seed
-    return (
-        reflexive.unionByName(reached)
-        .distinct()
-        .filter(matches_ontology(F.col("o"), ontology))
-        .select(
-            F.col("s").alias("subject"),
-            F.lit(CLOSURE_PREDICATE).alias("predicate"),
-            F.col("o").alias("object"),
-            F.lit(ONTOLOGY_RELATION_TYPE).alias("type"),
-        )
-    )
+    return _emit(reflexive.unionByName(reached).distinct(), ontology)

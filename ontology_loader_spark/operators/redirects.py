@@ -9,6 +9,7 @@ each obsolete term resolves to a live replacement by following
 Chains are short (ontology curation rarely nests redirects more than a
 few hops) — the loop is O(max chain length) broadcast self-joins over a
 tiny table (obsolete terms only), never touching the fact tables.
+A ``replaced_by`` cycle (curation error) ends early: see below.
 """
 
 from __future__ import annotations
@@ -16,22 +17,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.fixpoint import pin_count
+
 
 def redirect_map(term_dict: DataFrame, max_iterations: int = 16) -> DataFrame:
     """(src, dst): src = obsolete term id, dst = the live end of its
-    ``replaced_by`` chain."""
-    hops = (
+    ``replaced_by`` chain; a src on (or leading into) a cycle gets one
+    dst inside it. Raises ``RuntimeError`` if ``max_iterations`` rounds
+    end before the hop-count bound below with chains still stepping."""
+    hops, n_hops = pin_count(
         term_dict.filter(F.col("is_obsolete") & F.col("replaced_by").isNotNull())
         .select(F.col("id").alias("hop_src"), F.col("replaced_by").alias("hop_dst"))
-        .localCheckpoint(eager=True)
     )
     redirect = hops.select(
         F.col("hop_src").alias("src"), F.col("hop_dst").alias("dst")
     )
-    for _ in range(max_iterations):
+    # a step back to its own src is dropped, and a chain of more steps
+    # than hops revisits a term: stopping after n_hops rounds is exact
+    for _ in range(min(n_hops, max_iterations)):
         stepped = (
             redirect.join(hops, redirect["dst"] == hops["hop_src"], "inner")
             .select("src", F.col("hop_dst").alias("dst"))
+            .filter(F.col("dst") != F.col("src"))
         )
         if stepped.isEmpty():
             break
@@ -43,4 +50,7 @@ def redirect_map(term_dict: DataFrame, max_iterations: int = 16) -> DataFrame:
             .unionByName(stepped)
             .localCheckpoint(eager=True)
         )
+    else:
+        if n_hops > max_iterations:
+            raise RuntimeError(f"redirect_map did not converge in {max_iterations}")
     return redirect

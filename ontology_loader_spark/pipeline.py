@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.operators.classes import build_ontology_classes
 from ontology_loader_spark.operators.closure import (
+    BROADCAST_CLOSURE_PAIRS_MAX,
     ancestor_closure,
     direct_relations,
     relevant_entities,
@@ -36,15 +37,6 @@ from ontology_loader_spark.operators.relations import (
     union_relations,
 )
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
-
-
-# Broadcast ceiling for the ontology-closure pair set in
-# mention_ancestor_triples: |terms| × depth pairs. Small/mid ontologies
-# (GO, ENVO: ≤~100k terms) sit far under it; NCBITaxon-scale closures
-# (~2.5M terms × depth 20-30 → 50-75M pairs, multi-GB serialized) blow
-# past Spark's broadcast ceiling and must shuffle instead. Same measured
-# auto-dispatch recipe as operators/dedup.py::BROADCAST_PAIRS_MAX.
-BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
 
 
 @dataclass

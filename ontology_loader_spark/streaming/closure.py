@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.fixpoint import pin_count
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
     incremental_closure_delete,
@@ -96,8 +97,8 @@ class StreamingClosureMaintainer:
             # contributes no delta
             .join(self.edges, EDGE_KEY, "left_anti")
         )
-        adds = _pin(adds)
-        if not adds.isEmpty():
+        adds, n_adds = pin_count(adds)
+        if n_adds:
             new_edges = _pin(self.edges.unionByName(adds))
             self.closure = _pin(
                 incremental_closure_update(
@@ -117,8 +118,8 @@ class StreamingClosureMaintainer:
             .dropDuplicates(EDGE_KEY)
             .join(self.edges, EDGE_KEY, "left_semi")
         )
-        dels = _pin(dels)
-        if not dels.isEmpty():
+        dels, n_dels = pin_count(dels)
+        if n_dels:
             self.closure = _pin(
                 incremental_closure_delete(
                     self.edges,

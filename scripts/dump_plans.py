@@ -96,6 +96,9 @@ def main() -> None:
            "pushdown beats materializing a corpus-sized (or larger)",
            "intermediate to executor disks. A multi-scan corpus_prep plan",
            "is therefore the intended shape, not a missed optimization.",
+           "Fixpoint state is one pinned `(keys, born)` frame per round",
+           "(`fixpoint.semi_naive_fixpoint`): one groupBy, one localCheckpoint,",
+           "and the round's new-row count observed on that same job.",
            "", *summary, "", *sections]
     (REPO / "PLANS.md").write_text("\n".join(out))
     print("\n".join(summary))
