@@ -35,34 +35,38 @@ def semi_naive_fixpoint(
     seed: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     keys: Iterable[str],
+    *,
+    max_iterations: int,
+    op_name: str,
     known: DataFrame | None = None,
-    max_iterations: int = 64,
-    op_name: str = "semi_naive_fixpoint",
 ) -> DataFrame:
-    """Least fixpoint of ``known ∪ seed ∪ step(new rows)`` over ``keys``,
-    as one pinned ``(keys, born)`` frame: ``known`` rows are born at -1,
-    seed rows at 0, rows first reached in round r at r. Round r unions
-    ``step(state.filter(born == r - 1))`` into the state, reduces it
-    with one ``groupBy(keys).agg(min(born))`` and pins it; the round's
-    new-row count is observed on that pin's job.
+    """Least fixpoint of ``seed ∪ step(new rows)`` over ``keys``, minus
+    the rows of ``known``, as one pinned ``(keys, born)`` frame: seed
+    rows are born at 0, rows first reached in round r at r. Round r
+    unions ``step(state.filter(born == r - 1))`` into the state,
+    reduces it with one ``groupBy(keys).agg(min(born))`` and pins it;
+    the round's new-row count is observed on that pin's job.
 
     ``step`` maps the frontier (last round's new rows: ``keys`` and
     ``born``) to candidate rows with the ``keys`` columns; duplicates
     and rows already in the state are absorbed by the reduction.
-    ``known`` rows are never stepped from. Returns the pinned state;
-    ``born >= 0`` selects the rows not in ``known``. Raises
-    ``RuntimeError`` naming ``op_name`` when round ``max_iterations``
-    still produced new rows. Logs one DEBUG record per call with the
-    round count and each round's new-row count (round 0 = seed)."""
+    ``known`` rows (a pinned frame, read every round) join the
+    reduction at born -1 and are dropped before the pin: they are never
+    stepped from, and the pin stays delta-sized however large ``known``
+    is (an add batch's prior closure). Raises ``RuntimeError`` naming ``op_name`` when round
+    ``max_iterations`` still produced new rows. Logs one DEBUG record
+    per call with the round count and each round's new-row count
+    (round 0 = seed)."""
     keys = list(keys)
     born = F.col(BORN)
     rows = seed.select(*keys, F.lit(0).alias(BORN))
-    if known is not None:
-        rows = known.select(*keys, F.lit(-1).alias(BORN)).unionByName(rows)
+    prior = None if known is None else known.select(*keys, F.lit(-1).alias(BORN))
     counts: list[int] = []
     while True:
         r = len(counts)
-        state = rows.groupBy(*keys).agg(F.min(BORN).alias(BORN))
+        if prior is not None:
+            rows = prior.unionByName(rows)
+        state = rows.groupBy(*keys).agg(F.min(BORN).alias(BORN)).filter(born >= 0)
         state, n = pin_count(state, born == r)
         counts.append(n)
         if not n:

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ontology_loader_spark.fixpoint import BORN, pin_count, semi_naive_fixpoint
+from ontology_loader_spark.fixpoint import pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.curie import matches_ontology
 from ontology_loader_spark.partitioning import state_partitions
 from ontology_loader_spark.schemas import (
@@ -255,7 +255,7 @@ def incremental_closure_update(
         max_iterations=max_iterations,
         op_name="incremental_closure_update",
     )
-    return prior_closure.unionByName(_emit(reach.filter(F.col(BORN) >= 0), ontology))
+    return prior_closure.unionByName(_emit(reach, ontology))
 
 
 def _reverse_reach(
@@ -373,6 +373,8 @@ def _closure_doubling(
     spark = hedges.sparkSession
     reach = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
     for _ in range(max_iterations):
+        # a broadcast side saves the round's two shuffle-join jobs; at
+        # 1.85M pairs it cost no time (doubling closure, local[4])
         right = reach.alias("r")
         if n <= BROADCAST_CLOSURE_PAIRS_MAX:
             right = F.broadcast(right)
@@ -395,7 +397,7 @@ def _closure_doubling(
     else:
         raise RuntimeError(f"ancestor_closure did not converge in {max_iterations}")
     rel = relevant.select(F.col("id").alias("s"))
-    reached = F.broadcast(rel).join(reach, "s", "inner").select("s", "o")
+    reached = rel.join(reach, "s", "inner").select("s", "o")
     reflexive = rel.select("s", F.col("s").alias("o"))
     # a cycle can make s reach itself — dedup against the reflexive seed
     return _emit(reflexive.unionByName(reached).distinct(), ontology)

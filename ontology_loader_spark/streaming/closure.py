@@ -179,7 +179,6 @@ def write_edge_cdc_fixture(spark: SparkSession, edges: DataFrame, out_dir: str) 
             stale.unlink()
     out.mkdir(parents=True, exist_ok=True)
 
-    key = F.crc32(F.concat_ws("|", *EDGE_KEY))
     e = edges.select(*EDGE_KEY).withColumn("_k", key)
     batches = [
         e.filter(F.col("_k") % 29 != 0).drop("_k")

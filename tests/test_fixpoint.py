@@ -69,27 +69,43 @@ def test_incremental_delete_reverse_pass_overrun_raises(spark):
         )
 
 
-def test_redirect_map_overrun_raises_and_cycle_tail_stops(spark):
-    def td(rows):
-        return spark.createDataFrame(
-            [(i, i, "", [], dst is not None, dst) for i, dst in rows],
-            TERM_DICT_SCHEMA,
-        )
+def _redirect_terms(spark, rows):
+    """(id, replaced_by) rows; a term with a replacement is obsolete."""
+    return spark.createDataFrame(
+        [(i, i, "", [], dst is not None, dst) for i, dst in rows],
+        TERM_DICT_SCHEMA,
+    )
 
+
+def _redirects(spark, rows):
+    got = redirect_map(_redirect_terms(spark, rows)).collect()
+    assert len(got) == len({r["src"] for r in got})
+    return {r["src"]: r["dst"] for r in got}
+
+
+def test_redirect_map_overrun_raises(spark):
+    """Four hops need two rounds of pointer jumping."""
     chain = [("P:1", "P:2"), ("P:2", "P:3"), ("P:3", "P:4"), ("P:4", "P:5"),
              ("P:5", None)]
     with pytest.raises(RuntimeError, match="redirect_map"):
-        redirect_map(td(chain), max_iterations=2)
-    assert {r["src"]: r["dst"] for r in redirect_map(td(chain)).collect()} == {
-        f"P:{i}": "P:5" for i in range(1, 5)
-    }
-    # a tail into a 2-cycle keeps stepping round the cycle: the loop
-    # stops after as many rounds as there are hops, inside the cycle
-    tail = [("P:x", "P:a"), ("P:a", "P:b"), ("P:b", "P:a")]
-    got = {r["src"]: r["dst"] for r in redirect_map(td(tail)).collect()}
-    assert set(got) == {"P:x", "P:a", "P:b"}
-    assert got["P:x"] in ("P:a", "P:b")
-    assert got["P:a"] == "P:b" and got["P:b"] == "P:a"
+        redirect_map(_redirect_terms(spark, chain), max_iterations=1)
+    assert _redirects(spark, chain) == {f"P:{i}": "P:5" for i in range(1, 5)}
+
+
+def test_redirect_map_long_chains_and_cycle_tail(spark):
+    """More redirect sources than the default iteration bound: a clean
+    chain of 20 hops, one of exactly 17, and a tail into a 2-cycle.
+    Chains resolve to their live end; the tail and the cycle land
+    inside the cycle, the same way on every run."""
+    rows = [(f"P:c{k}", f"P:c{k + 1}") for k in range(20)] + [("P:c20", None)]
+    rows += [(f"P:d{k}", f"P:d{k + 1}") for k in range(17)] + [("P:d17", None)]
+    rows += [("P:x", "P:y"), ("P:y", "P:a"), ("P:a", "P:b"), ("P:b", "P:a")]
+    got = _redirects(spark, rows)
+    assert {k: got[f"P:c{k}"] for k in range(20)} == dict.fromkeys(range(20), "P:c20")
+    assert {k: got[f"P:d{k}"] for k in range(17)} == dict.fromkeys(range(17), "P:d17")
+    assert {got[s] for s in ("P:x", "P:y", "P:a", "P:b")} <= {"P:a", "P:b"}
+    assert len(got) == 20 + 17 + 4
+    assert _redirects(spark, rows) == got
 
 
 def test_fixpoint_logs_rounds_and_frontier_sizes(spark, caplog):
