@@ -385,11 +385,11 @@ def q_mention_detection_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the no-driver-collect sharded path: the dictionary stays
     distributed; each (shard, salt) task builds only its shard's
     automaton."""
-    from ontology_loader_spark.transcripts.mentions import detect_mentions_sharded
+    from ontology_loader_spark.transcripts.mentions import _detect_mentions_sharded
 
     tr = derive.derive_transcripts(spark, sf_dir)
     md = derive.derive_mention_dict(spark, sf_dir)
-    return detect_mentions_sharded(spark, tr, md)
+    return _detect_mentions_sharded(tr, md)
 
 
 def q_entity_linking_top1(spark: SparkSession, sf_dir: str) -> DataFrame:

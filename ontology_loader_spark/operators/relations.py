@@ -36,56 +36,6 @@ def distinct_relations(all_relations: DataFrame) -> DataFrame:
     return all_relations.dropDuplicates(["subject", "predicate", "object"])
 
 
-def attach_relations_salted(
-    classes: DataFrame, all_relations: DataFrame, n_salt: int = 16
-) -> DataFrame:
-    """A1 with two-phase salted ``collect_list`` (SURVEY.md §7.3.4):
-    hub terms can own very wide relation arrays; phase 1 collects per
-    (subject, salt) so no single reducer materializes a hub's full
-    array alone, phase 2 flattens+sorts the per-salt chunks. Semantics
-    identical to ``attach_relations`` (property-tested)."""
-    rels = distinct_relations(all_relations)
-    phase1 = (
-        rels.withColumn(
-            "salt",
-            F.pmod(F.hash("predicate", "object"), F.lit(n_salt)),
-        )
-        .groupBy("subject", "salt")
-        .agg(
-            F.collect_list(
-                F.struct("subject", "predicate", "object", "type")
-            ).alias("chunk")
-        )
-    )
-    agg = (
-        phase1.groupBy("subject")
-        .agg(F.flatten(F.collect_list("chunk")).alias("unsorted"))
-        .select(
-            F.col("subject").alias("rel_subject"),
-            F.sort_array("unsorted").alias("relations_"),
-        )
-    )
-    return (
-        classes.drop("relations")
-        .join(agg, classes["id"] == agg["rel_subject"], "left")
-        .withColumn(
-            "relations",
-            F.coalesce(
-                F.col("relations_"),
-                F.array().cast(
-                    "array<struct<subject:string,predicate:string,"
-                    "object:string,type:string>>"
-                ),
-            ),
-        )
-        .drop("rel_subject", "relations_")
-        .select(
-            "id", "type", "alternative_names", "definition",
-            "relations", "is_root", "is_obsolete", "name",
-        )
-    )
-
-
 def attach_relations(classes: DataFrame, all_relations: DataFrame) -> DataFrame:
     """A1/Q12 — fill each class's ``relations`` array with every
     relation whose subject is that class id.

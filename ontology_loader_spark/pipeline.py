@@ -364,7 +364,7 @@ def triple_provenance(
 
     Scale shape: the ``ts`` column rides the Arrow detection batch and
     the per-turn argmax (no join-back across duplicate (conv_id,
-    turn_idx) keys — see ``detect_mentions_with_cols``), the closure
+    turn_idx) keys — see ``transcripts/mentions.py::_scan``), the closure
     join reuses the measured broadcast/shuffle_hash dispatch, and the
     final groupBy keys on (term_id, ancestor) with map-side-combinable
     aggregates, so hot high-level ancestors ship partials, not rows.
@@ -374,13 +374,12 @@ def triple_provenance(
         relevant_entities,
     )
     from ontology_loader_spark.transcripts.mentions import (
-        detect_mentions_with_cols,
-        top1_links_with_cols,
+        detect_mentions,
+        top1_links,
     )
 
-    links = top1_links_with_cols(
-        detect_mentions_with_cols(spark, transcripts, mention_dict, ("ts",)),
-        ("ts",),
+    links = top1_links(
+        detect_mentions(spark, transcripts, mention_dict, ("ts",)), ("ts",)
     )
     rel = relevant_entities(term_dict, ontology)
     closure = ancestor_closure(edges, rel, ontology)

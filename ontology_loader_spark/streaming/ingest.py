@@ -115,11 +115,9 @@ def streaming_mention_timeline(
     broadcast dictionary only; the aggregate's state store is keyed
     (term, day), dictionary x active-days sized, additive under
     map-side partials."""
-    from ontology_loader_spark.transcripts.mentions import (
-        detect_mentions_with_cols,
-    )
+    from ontology_loader_spark.transcripts.mentions import detect_mentions
 
-    m = detect_mentions_with_cols(spark, stream, mention_dict, ("ts",))
+    m = detect_mentions(spark, stream, mention_dict, ("ts",))
     return (
         m.select(
             "term_id", F.date_format("ts", "yyyy-MM-dd").alias("day")

@@ -6,8 +6,11 @@ custom stateful operators").
 and the highest contiguous turn_idx prefix (i.e., "how much of the
 conversation can be replayed in order so far") — the streaming twin of
 the batch turn-ordering invariant. State is a compact (count, seen-set
-frontier) tuple; memory is bounded because conversations are bounded
-(~200 turns) and idle conversations time out.
+frontier) tuple; memory per key is bounded because conversations are
+bounded (~200 turns), and every conversation seen keeps its key for the
+life of the query. There is no state timeout: a processing-time
+timeout makes Spark schedule empty no-data batches forever, so an
+``availableNow`` query would never end on its own.
 
 At production scale the groupBy(conv_id) state shuffles once per
 micro-batch on the same key the batch pipeline uses — no separate
@@ -53,10 +56,10 @@ STATE_SCHEMA = StructType(
 def _advance(
     stored: Tuple[int, str, str] | None, idxs
 ) -> Tuple[int, str, int]:
-    """The pure state transition both stateful APIs share: fold a batch
-    of turn indexes into (n_seen, pending-csv, contiguous prefix).
-    Keeping it API-free pins the applyInPandasWithState and
-    transformWithState operators to one semantics definition."""
+    """The pure state transition of ``conversation_progress``: fold a
+    batch of turn indexes into (n_seen, pending-csv, contiguous prefix).
+    Kept free of the streaming API so its semantics are pinned
+    directly by test."""
     if stored is not None:
         n_seen, seen_csv, prefix = stored
         pending = set(int(x) for x in seen_csv.split(",") if x != "")
@@ -85,14 +88,10 @@ def _progress_row(key, n_seen: int, prefix: int) -> pd.DataFrame:
 def _update(
     key: Tuple[str], pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
     stored = tuple(state.get) if state.exists else None
     idxs = [idx for pdf in pdf_iter for idx in pdf["turn_idx"]]
     n_seen, pending_csv, prefix = _advance(stored, idxs)
     state.update((n_seen, pending_csv, prefix))
-    state.setTimeoutDuration(60 * 60 * 1000)
     yield _progress_row(key, n_seen, prefix)
 
 
@@ -106,54 +105,9 @@ def conversation_progress(stream: DataFrame) -> DataFrame:
             outputStructType=PROGRESS_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-class ConversationProgressProcessor:
-    """``transformWithStateInPandas`` form of the same operator — the
-    successor API (typed state handles, timers, TTL on the state
-    variable itself). Semantics are pinned to the
-    ``applyInPandasWithState`` variant by a paired test: identical
-    final per-conversation (n_turns_seen, contiguous_prefix).
-
-    Defined as a plain class (not subclassing at import time) so
-    importing this module never requires the transformWithState
-    runtime deps (``protobuf``, absent in some environments); the
-    factory below mixes in ``StatefulProcessor``. The state transition
-    is the shared :func:`_advance` — one semantics definition for both
-    stateful APIs.
-    """
-
-    STATE_TTL_MS = 60 * 60 * 1000  # idle conversations expire, as before
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "progress", STATE_SCHEMA, ttlDurationMs=self.STATE_TTL_MS
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        stored = tuple(self._state.get()) if self._state.exists() else None
-        idxs = [idx for pdf in rows for idx in pdf["turn_idx"]]
-        n_seen, pending_csv, prefix = _advance(stored, idxs)
-        self._state.update((n_seen, pending_csv, prefix))
-        yield _progress_row(key, n_seen, prefix)
-
-    def close(self) -> None:
-        pass
-
-
-def tws_runtime_available() -> bool:
-    """transformWithStateInPandas needs the protobuf-backed state
-    client (``pyspark.sql.streaming.proto``); absent protobuf, the
-    query crashes at runner init — gate callers/tests on this."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 ASOF_OUT_SCHEMA = StructType(
@@ -210,9 +164,6 @@ def _asof_advance(stored, rows):
 def _asof_update(
     key: Tuple[int], pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
     stored = tuple(state.get) if state.exists else None
     rows = []
     for pdf in pdf_iter:
@@ -222,7 +173,6 @@ def _asof_update(
     best, out = _asof_advance(stored, rows)
     if best is not None:
         state.update(best)
-    state.setTimeoutDuration(60 * 60 * 1000)
     if out:
         yield pd.DataFrame(
             {
@@ -252,12 +202,13 @@ def asof_join_stream(
     under ts-ordered micro-batch delivery is pinned by test via the
     shared :func:`_asof_advance` transition.
 
-    Unlike ``winsorized_stats_stream`` (whose key domain is a small
-    type dictionary and therefore carries NO timeout), this operator
-    keys on user_id — corpus-scale — so idle users ARE evicted after
-    1h of processing time: bounded state is the right trade here, and
-    a left arriving after its user's eviction re-matches from scratch
-    (NULL until a fresh right) exactly as a cold start would."""
+    State bound: one row per user ever seen, kept for the life of the
+    query. There is no state timeout — a processing-time timeout makes
+    Spark schedule empty no-data batches forever, so an
+    ``availableNow`` query would never end on its own. Evicting idle
+    users needs an event-time watermark (and a rule for a left that
+    arrives after its user's eviction), which this operator does not
+    take."""
     sided = stream.filter(
         F.col("event_type").isin(left_type, right_type)
     ).select(
@@ -274,29 +225,7 @@ def asof_join_stream(
         outputStructType=ASOF_OUT_SCHEMA,
         stateStructType=ASOF_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def conversation_progress_tws(stream: DataFrame) -> DataFrame:
-    """``transformWithStateInPandas`` migration of
-    :func:`conversation_progress` (same output schema + semantics)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type(
-        "ConversationProgressStateful",
-        (ConversationProgressProcessor, StatefulProcessor),
-        {},
-    )
-    return (
-        stream.select("conv_id", "turn_idx")
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=cls(),
-            outputStructType=PROGRESS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

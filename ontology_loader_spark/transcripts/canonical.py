@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ontology_loader_spark.operators.redirects import redirect_map
 from ontology_loader_spark.transcripts.mentions import (
     detect_mentions,
-    detect_mentions_with_cols,
     top1_links,
 )
 
@@ -111,7 +110,7 @@ def term_activity(
     aggregate complement of ``mention_timeline``'s per-day grain.
     Day strings are ``yyyy-MM-dd`` so min/max are chronological in
     both engines."""
-    m = detect_mentions_with_cols(spark, transcripts, mention_dict, ("ts",))
+    m = detect_mentions(spark, transcripts, mention_dict, ("ts",))
     day = F.date_format("ts", "yyyy-MM-dd")
     return (
         m.select("term_id", "conv_id", day.alias("day"))

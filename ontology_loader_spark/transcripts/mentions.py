@@ -9,19 +9,23 @@ specific), top-1 per turn with term-id tie-break.
 
 Design for scale:
 
-- The mention dictionary is broadcast once per executor (a Spark
-  broadcast variable holding a plain list — ontology dictionaries are
-  ≤ millions of rows; the UDF builds its matcher once per Arrow batch
-  iterator, NOT once per row).
-- Detection runs in ``mapInPandas`` — Arrow-batched, zero
-  row-at-a-time Python in the driver plan. Matching is a first-byte
-  bucketed scan (a lightweight Aho-Corasick stand-in with no external
-  deps): candidate terms are grouped by their first character so each
-  text only scans terms whose first char occurs in it. Determinism:
-  matching depends only on (text, dictionary) — never on batch
-  boundaries or partitioning (SURVEY.md §7.3.5).
-- Top-1 selection is a window over (conv_id, turn_idx) — key
-  cardinality is the turn count, uniformly hash-distributed, no skew.
+- One detector, :func:`detect_mentions`, with a measured dispatch: the
+  collect that ships the dictionary stops one row past
+  ``BROADCAST_DICT_ROWS_MAX`` (``operators/graph.py``). Up to that
+  ceiling the rows are broadcast once per executor and scanned in
+  ``mapInPandas``, Arrow-batched, with the matcher built once per batch
+  iterator, NOT once per row. Past it the dictionary stays distributed:
+  texts and dictionary shards cogroup on ``(shard, salt)`` and each
+  group builds only its shard's matcher.
+- Both arms run the same scan body (:func:`_scan`) over a pure-Python
+  Aho-Corasick automaton (:func:`_build_matcher`, no external deps):
+  one pass over each text whatever the dictionary size. Matching
+  depends only on (text, dictionary) — never on batch boundaries or
+  partitioning (SURVEY.md §7.3.5). Optional transcript columns
+  (``extra_cols``, e.g. ``ts``) ride with their row through the scan.
+- One linker, :func:`top1_links`: a window over (conv_id, turn_idx) —
+  key cardinality is the turn count, uniformly hash-distributed, no
+  skew.
 - Hot-term aggregations (mention counts) go through two-phase salted
   aggregation: hub terms dominate mention traffic (north rule's
   "salted-key broadcast linking ... to kill hot-entity skew").
@@ -29,15 +33,18 @@ Design for scale:
 
 from __future__ import annotations
 
+import logging
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from pyspark.sql.types import IntegerType
-
+from ontology_loader_spark.operators.graph import BROADCAST_DICT_ROWS_MAX
 from ontology_loader_spark.schemas import MENTION_SCHEMA
+
+log = logging.getLogger(__name__)
 
 
 def _build_matcher(dict_rows: list[tuple[str, str]]):
@@ -97,125 +104,133 @@ def _build_matcher(dict_rows: list[tuple[str, str]]):
     return match
 
 
+def _scan(match, pdf: pd.DataFrame, extra_cols: tuple[str, ...]) -> pd.DataFrame:
+    """The one scan body: texts -> one row per (text row, matching
+    term), ``(conv_id, turn_idx, term_id, surface, *extra_cols)``.
+
+    Carried columns ride with the row by POSITION (``iloc``), not by a
+    join-back: (conv_id, turn_idx) is not unique in dirty corpora
+    (duplicate turn_idx per conversation, SURVEY.md §7.3.5), so an
+    equi-join would fan out across the duplicates, while the position
+    keeps each physical row's own ``ts``/role at zero shuffle cost."""
+    idxs, term_ids, surfaces = [], [], []
+    for i, text in enumerate(pdf["text"]):
+        for term_id, surface in match(text):
+            idxs.append(i)
+            term_ids.append(term_id)
+            surfaces.append(surface)
+    base = pdf.iloc[idxs].reset_index(drop=True)
+    out = pd.DataFrame(
+        {
+            "conv_id": base["conv_id"].astype("object"),
+            "turn_idx": base["turn_idx"].astype("int32"),
+            "term_id": pd.Series(term_ids, dtype="object"),
+            "surface": pd.Series(surfaces, dtype="object"),
+        }
+    )
+    for c in extra_cols:
+        out[c] = base[c]
+    return out
+
+
+def _texts(transcripts: DataFrame, extra_cols: tuple[str, ...]):
+    """The scanned columns and the output schema they imply."""
+    src = transcripts.select("conv_id", "turn_idx", "text", *extra_cols)
+    schema = T.StructType(
+        list(MENTION_SCHEMA.fields) + [src.schema[c] for c in extra_cols]
+    )
+    return src, schema
+
+
 def detect_mentions(
-    spark: SparkSession, transcripts: DataFrame, mention_dict: DataFrame
+    spark: SparkSession,
+    transcripts: DataFrame,
+    mention_dict: DataFrame,
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Emit one row per (turn, matching term): (conv_id, turn_idx,
-    term_id, surface)."""
-    dict_rows = [(r["id"], r["name"]) for r in mention_dict.select("id", "name").collect()]
+    """Emit one row per (turn row, matching term): ``(conv_id,
+    turn_idx, term_id, surface, *extra_cols)``.
+
+    The dictionary is measured by the collect that ships it: at most
+    ``BROADCAST_DICT_ROWS_MAX`` rows are broadcast and scanned in
+    ``mapInPandas``; a dictionary past that bound (the collect stops
+    one row beyond it) goes to :func:`_detect_mentions_sharded`, which
+    never holds it on the driver."""
+    dict_rows = [
+        tuple(r)
+        for r in mention_dict.select("id", "name")
+        .limit(BROADCAST_DICT_ROWS_MAX + 1)
+        .collect()
+    ]
+    n, ceiling = len(dict_rows), BROADCAST_DICT_ROWS_MAX
+    choice = "sharded" if n > ceiling else "collected"
+    log.debug("detect_mentions: %d dictionary rows, ceiling %d -> %s", n, ceiling,
+              choice, extra={"op_name": "detect_mentions", "measured": n,
+                             "threshold": ceiling, "choice": choice})
+    if choice == "sharded":
+        return _detect_mentions_sharded(transcripts, mention_dict, extra_cols)
     bc = spark.sparkContext.broadcast(dict_rows)
+    src, schema = _texts(transcripts, extra_cols)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         match = _build_matcher(bc.value)
         for pdf in batches:
-            conv_ids, turn_idxs, term_ids, surfaces = [], [], [], []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                for term_id, surface in match(text):
-                    conv_ids.append(conv_id)
-                    turn_idxs.append(turn_idx)
-                    term_ids.append(term_id)
-                    surfaces.append(surface)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pd.Series(conv_ids, dtype="object"),
-                    "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                    "term_id": pd.Series(term_ids, dtype="object"),
-                    "surface": pd.Series(surfaces, dtype="object"),
-                }
-            )
+            yield _scan(match, pdf, extra_cols)
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-        run, schema=MENTION_SCHEMA
-    )
+    return src.mapInPandas(run, schema=schema)
 
 
-def detect_mentions_sharded(
-    spark: SparkSession,
+def _detect_mentions_sharded(
     transcripts: DataFrame,
     mention_dict: DataFrame,
+    extra_cols: tuple[str, ...] = (),
     n_shards: int = 4,
     n_salt: int = 4,
 ) -> DataFrame:
-    """Mention detection for dictionaries too large for one driver
-    collect + broadcast (the ``detect_mentions`` path tops out around
-    ~1M surfaces of driver/broadcast memory).
-
-    Fully distributed — the dictionary never touches the driver:
+    """The arm of :func:`detect_mentions` for dictionaries past the
+    broadcast ceiling. Fully distributed — the dictionary never
+    touches the driver:
 
     - every dictionary row goes to shard ``hash(term_id) % n_shards``
       and is replicated across the ``n_salt`` text salts of that shard;
     - every text row is replicated across all ``n_shards`` shards and
       goes to salt ``hash(conv_id, turn_idx) % n_salt``;
-    - ``applyInPandas`` over groups keyed ``(shard, salt)`` builds the
-      shard's Aho-Corasick automaton executor-side from the dictionary
-      rows IN the group and scans the group's texts with it.
+    - the two sides cogroup on ``(shard, salt)``: each group builds
+      its shard's Aho-Corasick automaton executor-side from the
+      group's dictionary rows and scans the group's texts with
+      :func:`_scan`.
 
     Memory bound per task: ``|dict| / n_shards`` automaton states +
-    ``|texts| / n_salt`` rows — both knobs independent, so neither the
-    dictionary nor the corpus ever has to fit anywhere whole. Cost:
-    texts shuffle ``n_shards``× and dict rows ``n_salt``× (the price of
-    not broadcasting). Shards partition the term set, so the per-shard
-    outputs union to exactly the unsharded result — no dedup needed;
-    matching depends only on (text, shard dictionary), never on group
-    or batch boundaries.
-    """
-    shard_of_term = F.pmod(F.hash("id"), F.lit(n_shards))
-    salt_of_text = F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt))
-
-    dict_part = (
-        mention_dict.select(
-            shard_of_term.alias("shard"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
-            F.lit(None).cast("string").alias("conv_id"),
-            F.lit(None).cast("int").alias("turn_idx"),
-            F.lit(None).cast("string").alias("text"),
-            F.col("id").alias("d_term_id"),
-            F.col("name").alias("d_surface"),
-        )
+    ``|texts| / n_salt`` rows. Cost: texts shuffle ``n_shards``× and
+    dictionary rows ``n_salt``× (the price of not broadcasting).
+    Shards partition the term set, so the per-shard outputs union to
+    exactly the collected arm's result; matching depends only on
+    (text, shard dictionary), never on group or batch boundaries."""
+    src, schema = _texts(transcripts, extra_cols)
+    dict_part = mention_dict.select(
+        F.pmod(F.hash("id"), F.lit(n_shards)).alias("shard"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))).alias("salt"),
+        "id",
+        "name",
     )
-    text_part = (
-        transcripts.select(
-            F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))).alias("shard"),
-            salt_of_text.alias("salt"),
-            "conv_id",
-            "turn_idx",
-            "text",
-            F.lit(None).cast("string").alias("d_term_id"),
-            F.lit(None).cast("string").alias("d_surface"),
-        )
+    text_part = src.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))).alias("shard"),
+        F.pmod(F.hash("conv_id", "turn_idx"), F.lit(n_salt)).alias("salt"),
+        *src.columns,
     )
-    unioned = dict_part.unionByName(text_part)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        is_dict = pdf["d_term_id"].notna()
-        match = _build_matcher(
-            list(zip(pdf.loc[is_dict, "d_term_id"], pdf.loc[is_dict, "d_surface"]))
-        )
-        conv_ids, turn_idxs, term_ids, surfaces = [], [], [], []
-        texts = pdf.loc[~is_dict]
-        for conv_id, turn_idx, text in zip(
-            texts["conv_id"], texts["turn_idx"], texts["text"]
-        ):
-            for term_id, surface in match(text):
-                conv_ids.append(conv_id)
-                turn_idxs.append(turn_idx)
-                term_ids.append(term_id)
-                surfaces.append(surface)
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series(conv_ids, dtype="object"),
-                "turn_idx": pd.Series(turn_idxs, dtype="int32"),
-                "term_id": pd.Series(term_ids, dtype="object"),
-                "surface": pd.Series(surfaces, dtype="object"),
-            }
-        )
+    def run(dict_pdf: pd.DataFrame, text_pdf: pd.DataFrame) -> pd.DataFrame:
+        match = _build_matcher(list(zip(dict_pdf["id"], dict_pdf["name"])))
+        return _scan(match, text_pdf, extra_cols)
 
-    return unioned.groupBy("shard", "salt").applyInPandas(run, schema=MENTION_SCHEMA)
+    return (
+        dict_part.groupBy("shard", "salt")
+        .cogroup(text_part.groupBy("shard", "salt"))
+        .applyInPandas(run, schema=schema)
+    )
 
 
-@F.pandas_udf(IntegerType())
+@F.pandas_udf(T.IntegerType())
 def link_score(surface: pd.Series) -> pd.Series:
     """Vectorized link score: surface-form length (longer = more
     specific). Kept as a pandas UDF deliberately — this is the slot
@@ -224,29 +239,14 @@ def link_score(surface: pd.Series) -> pd.Series:
     return surface.str.len().astype("int32")
 
 
-def top1_links(mentions: DataFrame) -> DataFrame:
-    """Top-1 candidate per turn: score desc, term_id asc tie-break."""
-    scored = mentions.withColumn("score", link_score(F.col("surface")))
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        F.col("score").desc(), F.col("term_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select("conv_id", "turn_idx", "term_id", "surface")
-    )
+def top1_links(mentions: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """Top-1 candidate per turn: score desc, term_id asc tie-break.
 
-
-def top1_links_with_cols(
-    mentions: DataFrame, extra_cols: tuple[str, ...]
-) -> DataFrame:
-    """:func:`top1_links` carrying extra mention columns (e.g. ``ts``
-    from :func:`detect_mentions_with_cols`) through the per-turn
-    argmax — same score/tie-break, same bounded window, with the
-    carried columns APPENDED to the ordering: duplicate (conv_id,
-    turn_idx) keys (dirty corpora, SURVEY.md §7.3.5) can tie on
-    (score, term_id) across physical rows whose carried values differ,
-    and the winner's carried values must not depend on row order."""
+    Carried mention columns (e.g. ``ts``) are kept and APPENDED to the
+    ordering: duplicate (conv_id, turn_idx) keys (dirty corpora,
+    SURVEY.md §7.3.5) can tie on (score, term_id) across physical rows
+    whose carried values differ, and the winner's carried values must
+    not depend on row order."""
     scored = mentions.withColumn("score", link_score(F.col("surface")))
     w = Window.partitionBy("conv_id", "turn_idx").orderBy(
         F.col("score").desc(),
@@ -316,66 +316,6 @@ def mention_counts_salted(mentions: DataFrame, n_salt: int = 16) -> DataFrame:
     return phase1.groupBy("term_id").agg(F.sum("partial").alias("n_mentions"))
 
 
-def detect_mentions_with_cols(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    mention_dict: DataFrame,
-    extra_cols: tuple[str, ...],
-) -> DataFrame:
-    """:func:`detect_mentions` with transcript columns carried through
-    the Arrow batch: output (conv_id, turn_idx, term_id, surface,
-    *extra_cols). Kept as a separate function so the hot detection
-    path stays byte-identical for its many gate consumers.
-
-    Why passthrough instead of a join-back: (conv_id, turn_idx) is NOT
-    unique in dirty corpora (duplicate turn_idx per conversation —
-    SURVEY.md §7.3.5), so re-attaching ts/role by equi-join would
-    fan out across the duplicates; carrying the column with the row
-    through the batch preserves exact row-level provenance at zero
-    shuffle cost."""
-    import pyspark.sql.types as T
-
-    dict_rows = [
-        (r["id"], r["name"]) for r in mention_dict.select("id", "name").collect()
-    ]
-    bc = spark.sparkContext.broadcast(dict_rows)
-    in_cols = ["conv_id", "turn_idx", "text", *extra_cols]
-    src = transcripts.select(*in_cols)
-    extra_fields = [src.schema[c] for c in extra_cols]
-    out_schema = T.StructType(list(MENTION_SCHEMA.fields) + extra_fields)
-    out_names = [f.name for f in out_schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        match = _build_matcher(bc.value)
-        for pdf in batches:
-            idxs, term_ids, surfaces = [], [], []
-            for i, text in enumerate(pdf["text"]):
-                for term_id, surface in match(text):
-                    idxs.append(i)
-                    term_ids.append(term_id)
-                    surfaces.append(surface)
-            if not idxs:
-                # yield nothing for a matchless batch: an empty pandas
-                # frame with all-NA object columns trips dtype
-                # inference in the Arrow serializer (FutureWarning
-                # today, wrong dtypes tomorrow)
-                continue
-            base = pdf.iloc[idxs].reset_index(drop=True)
-            out = pd.DataFrame(
-                {
-                    "conv_id": base["conv_id"].astype("object"),
-                    "turn_idx": base["turn_idx"].astype("int32"),
-                    "term_id": pd.Series(term_ids, dtype="object"),
-                    "surface": pd.Series(surfaces, dtype="object"),
-                }
-            )
-            for c in extra_cols:
-                out[c] = base[c]
-            yield out[out_names]
-
-    return src.mapInPandas(run, schema=out_schema)
-
-
 def mention_timeline(
     spark: SparkSession, transcripts: DataFrame, mention_dict: DataFrame
 ) -> DataFrame:
@@ -384,12 +324,11 @@ def mention_timeline(
     input ('when did the corpus start talking about <term>?').
 
     Scale shape: detection is the Arrow slot with ``ts`` carried
-    through the batch (no join-back, see
-    :func:`detect_mentions_with_cols`); the aggregate is one
+    through the batch (no join-back, see :func:`_scan`); the aggregate is one
     groupBy((term_id, day)) — hub terms are spread across days, and
     count/count-distinct partials combine map-side, so hot-term skew
     is additive only."""
-    m = detect_mentions_with_cols(spark, transcripts, mention_dict, ("ts",))
+    m = detect_mentions(spark, transcripts, mention_dict, ("ts",))
     return (
         m.select(
             "term_id",

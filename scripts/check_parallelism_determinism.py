@@ -116,7 +116,8 @@ def _stream_asof(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    if not q.awaitTermination(300):
+        raise RuntimeError(f"stream {name} did not end within 300 s")
     return spark.sql(f"select * from {name}")
 
 
@@ -137,7 +138,8 @@ def _stream_winsor(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    if not q.awaitTermination(300):
+        raise RuntimeError(f"stream {name} did not end within 300 s")
     # final emission per type (n_events grows monotonically)
     emitted = spark.sql(f"select * from {name}")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
@@ -195,7 +197,8 @@ def _stream_conv_stats(spark, sf_dir: str, ckpt: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    if not q.awaitTermination(300):
+        raise RuntimeError(f"stream {name} did not end within 300 s")
     emitted = spark.sql(f"select * from {name}")
     w = Window.partitionBy("conv_id").orderBy(F.desc("n_turns"))
     return (

@@ -243,14 +243,9 @@ def test_term_depth_matches_lca_fixture(spark):
     assert got == want
 
 
-def test_detect_mentions_with_cols_matches_base_and_carries_ts(spark):
-    from ontology_loader_spark.transcripts.mentions import (
-        detect_mentions,
-        detect_mentions_with_cols,
-    )
-
-    # duplicate (conv_id, turn_idx) keys with DIFFERENT ts: a join-back
-    # would fan out; the passthrough must keep row-level provenance
+def _dup_key_corpus(spark):
+    """Duplicate (conv_id, turn_idx) keys with DIFFERENT ts: a join-back
+    would fan out; the passthrough must keep row-level provenance."""
     transcripts = spark.createDataFrame(
         [
             ("a", 0, "user", "widget alpha here", None, _ts(1, 0)),
@@ -263,17 +258,87 @@ def test_detect_mentions_with_cols_matches_base_and_carries_ts(spark):
     mention_dict = spark.createDataFrame(
         [("FIX:1", "widget alpha")], "id string, name string"
     )
+    return transcripts, mention_dict
+
+
+def test_detect_mentions_extra_cols_matches_base_and_carries_ts(spark):
+    from ontology_loader_spark.transcripts.mentions import detect_mentions
+
+    transcripts, mention_dict = _dup_key_corpus(spark)
     base = sorted(
         tuple(r)
         for r in detect_mentions(spark, transcripts, mention_dict).collect()
     )
-    with_ts = detect_mentions_with_cols(
-        spark, transcripts, mention_dict, ("ts",)
+    with_ts = detect_mentions(
+        spark, transcripts, mention_dict, extra_cols=("ts",)
     ).collect()
     assert sorted((r["conv_id"], r["turn_idx"], r["term_id"], r["surface"])
                   for r in with_ts) == base
     assert {r["ts"] for r in with_ts} == {_ts(1, 0), _ts(2, 0)}
     assert len(with_ts) == 2  # one row per PHYSICAL matching turn row
+
+
+def test_sharded_arm_carries_ts_like_collected_arm(spark):
+    """The sharded arm keeps each physical row's own ts, exactly as the
+    collected arm does, on duplicate turn keys."""
+    from ontology_loader_spark.transcripts.mentions import (
+        _detect_mentions_sharded,
+        detect_mentions,
+    )
+
+    transcripts, mention_dict = _dup_key_corpus(spark)
+    collected = sorted(map(tuple, detect_mentions(
+        spark, transcripts, mention_dict, ("ts",)).collect()))
+    for n_shards, n_salt in ((1, 1), (4, 4), (3, 2)):
+        sharded = sorted(map(tuple, _detect_mentions_sharded(
+            transcripts, mention_dict, ("ts",), n_shards=n_shards,
+            n_salt=n_salt).collect()))
+        assert sharded == collected
+    assert len(collected) == 2
+
+
+def test_detect_mentions_dispatches_past_ceiling(spark, monkeypatch):
+    """A dictionary larger than the broadcast ceiling goes to the
+    sharded arm and returns the collected arm's rows."""
+    from ontology_loader_spark.transcripts import mentions
+
+    transcripts, _ = _dup_key_corpus(spark)
+    md = spark.createDataFrame(
+        [("FIX:1", "widget alpha"), ("FIX:2", "alpha"), ("FIX:3", "nothing")],
+        "id string, name string",
+    )
+    collected = sorted(map(tuple, mentions.detect_mentions(
+        spark, transcripts, md, ("ts",)).collect()))
+    calls = []
+    sharded_arm = mentions._detect_mentions_sharded
+    monkeypatch.setattr(mentions, "BROADCAST_DICT_ROWS_MAX", 2)
+    monkeypatch.setattr(mentions, "_detect_mentions_sharded",
+                        lambda *a, **k: calls.append(a) or sharded_arm(*a, **k))
+    got = sorted(map(tuple, mentions.detect_mentions(
+        spark, transcripts, md, ("ts",)).collect()))
+    assert len(calls) == 1
+    assert got == collected
+    assert len(got) == 5
+
+
+def test_top1_links_extra_cols_picks_same_link(spark):
+    from ontology_loader_spark.transcripts.mentions import (
+        detect_mentions,
+        top1_links,
+    )
+
+    transcripts, _ = _dup_key_corpus(spark)
+    md = spark.createDataFrame(
+        [("FIX:1", "widget alpha"), ("FIX:2", "alpha"), ("FIX:0", "widget")],
+        "id string, name string",
+    )
+    m = detect_mentions(spark, transcripts, md, ("ts",))
+    key = ("conv_id", "turn_idx", "term_id", "surface")
+    plain = sorted(tuple(r) for r in top1_links(m).collect())
+    with_ts = top1_links(m, ("ts",)).collect()
+    assert sorted(tuple(r[c] for c in key) for r in with_ts) == plain
+    # duplicate key (a, 0): the carried ts is the smallest of the tied rows
+    assert [r["ts"] for r in with_ts] == [_ts(1, 0)]
 
 
 def test_mention_timeline_hand_case(spark):

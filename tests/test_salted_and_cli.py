@@ -1,39 +1,15 @@
-"""Salted A1 equals plain A1; CLI runs end-to-end through its real
-surface (subprocess)."""
+"""The CLI runs end-to-end through its real surface (subprocess)."""
 
 import subprocess
 import sys
 from pathlib import Path
 
-from ontology_loader_spark.operators.classes import build_ontology_classes
-from ontology_loader_spark.operators.closure import (
-    ancestor_closure,
-    direct_relations,
-    relevant_entities,
-)
-from ontology_loader_spark.operators.relations import (
-    attach_relations,
-    attach_relations_salted,
-    union_relations,
-)
 from ontology_loader_spark.schemas import EDGE_SCHEMA, TERM_DICT_SCHEMA
 
 REPO = Path(__file__).resolve().parent.parent
 
 TERMS = [(f"S:{i}", f"n{i}", "", [], i % 7 == 6, None) for i in range(30)]
 EDGES = [(f"S:{i}", "rdfs:subClassOf", f"S:{i // 2}") for i in range(2, 30)]
-
-
-def test_salted_attach_equals_plain(spark):
-    td = spark.createDataFrame(TERMS, TERM_DICT_SCHEMA)
-    ed = spark.createDataFrame(EDGES, EDGE_SCHEMA)
-    rel = relevant_entities(td, "s")
-    bag = union_relations(direct_relations(ed, rel), ancestor_closure(ed, rel, "s"))
-    classes = build_ontology_classes(td, ed, "s")
-    plain = {r["id"]: r["relations"] for r in attach_relations(classes, bag).collect()}
-    salted = {r["id"]: r["relations"]
-              for r in attach_relations_salted(classes, bag, n_salt=4).collect()}
-    assert plain == salted
 
 
 def test_cli_end_to_end(spark, tmp_path):

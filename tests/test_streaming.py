@@ -43,7 +43,7 @@ def test_windowed_counts_match_batch(spark, transcript_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not end within 120 s"
     got = {
         (r["window_start"], r["role"]): r["n_turns"]
         for r in spark.sql("select * from turn_counts").collect()
@@ -71,7 +71,7 @@ def test_foreach_batch_mentions_match_batch(spark, transcript_dir, tmp_path):
     stream = stream_transcripts(spark, transcript_dir)
     q = foreach_batch_mentions(spark, stream, md, writer,
                                str(tmp_path / "ckpt2")).start()
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not end within 120 s"
 
     batch = spark.read.parquet(transcript_dir)
     want = sorted(
@@ -113,7 +113,7 @@ def test_streaming_exact_dedup(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "stream did not end within 180 s"
     got = spark.sql("select digest from stream_dedup").collect()
     assert len(got) == 10                      # one row per distinct text
     assert len({r["digest"] for r in got}) == 10
@@ -137,7 +137,7 @@ def test_streaming_mention_timeline_matches_batch(spark, transcript_dir, tmp_pat
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "stream did not end within 120 s"
     got = {
         (r["term_id"], r["day"]): r["n_mentions"]
         for r in spark.sql("select * from mention_timeline_stream").collect()

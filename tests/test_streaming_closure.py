@@ -102,7 +102,7 @@ def test_end_to_end_streaming_query_foreach_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    assert q.awaitTermination(240), "stream did not end within 240 s"
 
     assert m.batches_applied >= 1
     assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))

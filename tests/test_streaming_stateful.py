@@ -4,7 +4,6 @@ contiguous prefix), even with out-of-order arrival across micro-batches."""
 
 import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from ontology_loader_spark.schemas import TRANSCRIPT_SCHEMA
@@ -37,7 +36,7 @@ def test_conversation_progress(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "stream did not end within 180 s"
 
     # update mode emits one row per conv per micro-batch; the final
     # state is the row with the max n_turns_seen per conv
@@ -54,55 +53,8 @@ def test_conversation_progress(spark, tmp_path):
     assert final["c2"] == (3, 1)
 
 
-@pytest.mark.skipif(
-    not __import__("ontology_loader_spark.streaming.stateful",
-                   fromlist=["tws_runtime_available"]).tws_runtime_available(),
-    reason="transformWithStateInPandas needs protobuf (not in this env); "
-           "semantics are pinned via the shared _advance transition + "
-           "test_advance_transition_shared below",
-)
-def test_conversation_progress_tws_matches_apply_in_pandas(spark, tmp_path):
-    """The transformWithStateInPandas migration must land on the same
-    final per-conversation state as the applyInPandasWithState
-    operator on the same out-of-order stream."""
-    from ontology_loader_spark.streaming.stateful import conversation_progress_tws
-
-    rows = [
-        ("c1", i, "user", f"t{i}", None, BASE) for i in [3, 0, 4, 1, 2]
-    ] + [
-        ("c2", i, "user", f"t{i}", None, BASE) for i in [0, 2, 3]
-    ]
-    src = tmp_path / "src_tws"
-    spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).repartition(4).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    stream = stream_transcripts(spark, str(src), max_files_per_trigger=1)
-    q = (
-        conversation_progress_tws(stream)
-        .writeStream.format("memory")
-        .queryName("conv_progress_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    final = {
-        r["conv_id"]: (r["n_turns_seen"], r["contiguous_prefix"])
-        for r in spark.sql(
-            """select conv_id, n_turns_seen, contiguous_prefix from (
-                 select *, row_number() over (partition by conv_id
-                     order by n_turns_seen desc) rn from conv_progress_tws
-               ) where rn = 1"""
-        ).collect()
-    }
-    assert final == {"c1": (5, 5), "c2": (3, 1)}
-
-
 def test_advance_transition_shared():
-    """Both stateful operators fold through the one pure transition
+    """The stateful operator folds through one pure transition
     function; pin its semantics directly (out-of-order arrival, gap
     stall, gap fill across calls)."""
     from ontology_loader_spark.streaming.stateful import _advance
@@ -114,23 +66,6 @@ def test_advance_transition_shared():
     st = _advance(st, [1])
     assert st == (4, "", 4)             # gap filled -> prefix jumps
     assert _advance(st, []) == (4, "", 4)   # idempotent on empty batch
-
-def test_tws_query_constructs(spark):
-    """The transformWithState plan must at least construct and analyze
-    (API-level migration check that runs without protobuf)."""
-    from ontology_loader_spark.streaming.ingest import stream_transcripts
-    from ontology_loader_spark.streaming.stateful import (
-        PROGRESS_SCHEMA,
-        conversation_progress_tws,
-    )
-    import tempfile, os
-    from ontology_loader_spark.schemas import TRANSCRIPT_SCHEMA
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "src")
-        spark.createDataFrame([], TRANSCRIPT_SCHEMA).write.parquet(src)
-        out = conversation_progress_tws(stream_transcripts(spark, src))
-        assert out.schema == PROGRESS_SCHEMA
-        assert out.isStreaming
 
 
 # ---------------------------------------------------- streaming as-of
@@ -222,7 +157,7 @@ def test_asof_join_stream_query(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "stream did not end within 180 s"
 
     got = {
         r["l_event_id"]: (r["user_id"], r["l_ts"], r["l_value"],
@@ -299,7 +234,7 @@ def test_winsorized_stream_query_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "stream did not end within 180 s"
 
     # last emission per type = max n_events per type (monotone growth)
     emitted = spark.sql("select * from winsor_stream").collect()
@@ -408,7 +343,7 @@ def test_conv_stats_stream_query_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180), "stream did not end within 180 s"
 
     emitted = spark.sql("select * from conv_stats_stream").collect()
     last: dict = {}

@@ -131,8 +131,8 @@ def test_sharded_detection_equals_broadcast(spark):
     physical only."""
     from ontology_loader_spark.inputs import derive
     from ontology_loader_spark.transcripts.mentions import (
+        _detect_mentions_sharded,
         detect_mentions,
-        detect_mentions_sharded,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -140,8 +140,8 @@ def test_sharded_detection_equals_broadcast(spark):
     md = derive.derive_mention_dict(spark, sf)
     base = sorted(map(tuple, detect_mentions(spark, tr, md).collect()))
     for n_shards, n_salt in ((1, 1), (4, 4), (3, 2)):
-        sharded = sorted(map(tuple, detect_mentions_sharded(
-            spark, tr, md, n_shards=n_shards, n_salt=n_salt).collect()))
+        sharded = sorted(map(tuple, _detect_mentions_sharded(
+            tr, md, n_shards=n_shards, n_salt=n_salt).collect()))
         assert sharded == base
 
 
@@ -152,7 +152,7 @@ def test_sharded_detection_large_dictionary(spark):
     import datetime
 
     from ontology_loader_spark.schemas import TRANSCRIPT_SCHEMA
-    from ontology_loader_spark.transcripts.mentions import detect_mentions_sharded
+    from ontology_loader_spark.transcripts.mentions import _detect_mentions_sharded
 
     n_terms = 50_000
     md = spark.range(n_terms).selectExpr(
@@ -166,8 +166,8 @@ def test_sharded_detection_large_dictionary(spark):
     ]
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     got = {(r["conv_id"], r["term_id"])
-           for r in detect_mentions_sharded(spark, tr, md, n_shards=8,
-                                            n_salt=2).collect()}
+           for r in _detect_mentions_sharded(tr, md, n_shards=8,
+                                             n_salt=2).collect()}
     want = {(f"c{i}", f"T:{i * 97 % n_terms}") for i in range(300)}
     assert got == want
 
