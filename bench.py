@@ -1,9 +1,13 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints exactly ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "triples_per_sec": ...}
+Prints exactly ONE compact JSON line (at most 1,000 chars):
+  {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+   "triples_per_sec": ..., "slowest": {name: sec, ... 10 gates},
+   "gates_file": "BENCH/bench_sf<sf>_r<NN>.json", ...}
+and writes every gate's time to ``gates_file``. ``NN`` is the round
+after the newest ``BENCH_r<NN>.json``; the previous round's per-gate
+file is the baseline of the per-gate delta on stderr.
 
 Each query is materialized with the noop writer so every column and
 every UDF actually executes (a bare count() would let Catalyst prune
@@ -24,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -54,6 +59,50 @@ def free_persistent_rdds(spark) -> None:
             rdd.unpersist()
     except Exception:
         pass  # benching continues unaffected if the internal API moves
+
+
+ROOT = Path(__file__).resolve().parent
+
+
+def summary_line(doc: dict) -> str:
+    """The stdout line: ``doc`` without its per-gate table, plus the
+    10 slowest gates — short enough for a 1,000-char log tail."""
+    queries = doc["queries"]
+    slowest = sorted(queries, key=queries.get, reverse=True)[:10]
+    return json.dumps({**{k: v for k, v in doc.items() if k != "queries"},
+                       "n_queries": len(queries),
+                       "slowest": {k: queries[k] for k in slowest}})
+
+
+def _rounds(prefix: str, folder: Path) -> list[tuple[int, Path]]:
+    """``(NN, path)`` of the files ``<prefix>_r<NN>.json`` in ``folder``,
+    oldest round first."""
+    pattern = re.compile(re.escape(prefix) + r"_r(\d+)\.json")
+    found = ((pattern.fullmatch(p.name), p) for p in folder.glob(f"{prefix}_r*.json"))
+    return sorted((int(m.group(1)), p) for m, p in found if m)
+
+
+def previous_queries(sf_label: str, this_round: int, names) -> tuple[str, dict]:
+    """Per-gate seconds of the previous round: its per-gate file, else
+    the newest ``BENCH_r<NN>.json`` record (``parsed``, or scraped from
+    its stdout ``tail``, which was cut off in rounds 3-5)."""
+    env = os.environ.get("SPARK_GRAFT_PREV_BENCH")
+    if env:
+        path = Path(env)
+    else:
+        own = [p for n, p in _rounds(f"bench_sf{sf_label}", ROOT / "BENCH") if n < this_round]
+        recorded = [p for _, p in _rounds("BENCH", ROOT)]
+        path = (own or recorded or [None])[-1]
+    if path is None or not path.exists():
+        return "", {}
+    prev_doc = json.loads(path.read_text())
+    if str(prev_doc.get("sf", sf_label)) != sf_label:  # another scale: no baseline
+        return str(path), {}
+    prev_q = (prev_doc.get("parsed") or prev_doc).get("queries", {})
+    if not prev_q and isinstance(prev_doc.get("tail"), str):
+        pairs = re.findall(r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)', prev_doc["tail"])
+        prev_q = {k: float(v) for k, v in pairs if k in names}
+    return str(path), prev_q
 
 
 def main() -> None:
@@ -154,54 +203,42 @@ def main() -> None:
     wall_sec = time.time() - wall_t0
     triples_per_sec = n_triples / timings["full_load"] if timings["full_load"] else 0.0
 
-    # per-query delta vs the previous round's driver-recorded bench
-    # (stderr only — the stdout contract stays one JSON line)
-    prev_path = os.environ.get("SPARK_GRAFT_PREV_BENCH")
-    if not prev_path:
-        candidates = sorted(Path(__file__).resolve().parent.glob("BENCH_r*.json"))
-        prev_path = str(candidates[-1]) if candidates else None
-    if prev_path and Path(prev_path).exists():
-        try:
-            prev_doc = json.loads(Path(prev_path).read_text())
-            prev_q = (prev_doc.get("parsed") or prev_doc).get("queries", {})
-            if not prev_q and isinstance(prev_doc.get("tail"), str):
-                # driver snapshots sometimes carry parsed=null with a
-                # truncated stdout tail — recover what survives by
-                # scraping "name": seconds pairs scoped to known names
-                import re
+    doc = {
+        "metric": "kg_construction_bench_total_wall",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": {k: round(v, 3) for k, v in timings.items()},
+        "sf": sf_label,
+        "cpus": int(cpus),
+        "timing": f"min_of_{reps}_reps",
+        "wall_sec": round(wall_sec, 3),
+        "triples": n_triples,
+        "triples_per_sec": round(triples_per_sec, 1),
+        "transcript_assertions": n_assertions,
+    }
+    this_round = max((n for n, _ in _rounds("BENCH", ROOT)), default=0) + 1
+    gates_file = Path("BENCH") / f"bench_sf{sf_label}_r{this_round:02d}.json"
 
-                pairs = re.findall(r'"([a-z0-9_]+)": ([0-9]+\.[0-9]+)',
-                                   prev_doc["tail"])
-                prev_q = {k: float(v) for k, v in pairs if k in timings}
-            for k in sorted(set(timings) | set(prev_q)):
-                now, was = timings.get(k), prev_q.get(k)
-                if now is not None and was:
-                    log(f"delta {k}: {now:.2f}s vs {was:.2f}s ({now / was:.2f}x)")
-                elif now is not None:
-                    log(f"delta {k}: {now:.2f}s (new)")
-                else:
-                    log(f"delta {k}: dropped (was {was:.2f}s)")
-        except (ValueError, OSError) as e:
-            log(f"delta: could not read {prev_path}: {e}")
+    # per-query delta vs the previous round (stderr only — the stdout
+    # contract stays one JSON line)
+    try:
+        prev_path, prev_q = previous_queries(sf_label, this_round, timings)
+    except (ValueError, OSError) as e:
+        log(f"delta: could not read the previous round: {e}")
+        prev_path, prev_q = "", {}
+    if prev_path:
+        log(f"delta baseline: {prev_path}")
+    for k in sorted(set(timings) | set(prev_q)):
+        now, was = timings.get(k), prev_q.get(k)
+        if now is not None and was:
+            log(f"delta {k}: {now:.2f}s vs {was:.2f}s ({now / was:.2f}x)")
+        elif now is not None:
+            log(f"delta {k}: {now:.2f}s (new)")
+        else:
+            log(f"delta {k}: dropped (was {was:.2f}s)")
 
-    print(
-        json.dumps(
-            {
-                "metric": "kg_construction_bench_total_wall",
-                "value": round(total, 3),
-                "unit": "sec",
-                "queries": {k: round(v, 3) for k, v in timings.items()},
-                "sf": sf_label,
-                "cpus": int(cpus),
-                "timing": f"min_of_{reps}_reps",
-                "wall_sec": round(wall_sec, 3),
-                "triples": n_triples,
-                "triples_per_sec": round(triples_per_sec, 1),
-                "transcript_assertions": n_assertions,
-            }
-        ),
-        flush=True,
-    )
+    (ROOT / gates_file).write_text(json.dumps(doc, indent=1) + "\n")
+    print(summary_line({**doc, "gates_file": str(gates_file)}), flush=True)
     spark.stop()
 
 

@@ -59,8 +59,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--generate-reports", action="store_true", default=True)
     p.add_argument("--no-reports", dest="generate_reports", action="store_false")
     p.add_argument("--master", default=None)
-    p.add_argument("--closure-strategy", choices=["frontier", "doubling"],
-                   default="doubling")
     p.add_argument("--validate-graph", action="store_true",
                    help="pre-load structural QC: abort (exit 3) if the "
                         "hierarchy contains a directed cycle — a cycle "

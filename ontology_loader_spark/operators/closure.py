@@ -21,22 +21,22 @@ Reference semantics (``ontology_processor.py:152-211``):
   dedup (quirk Q4: closure rows unique per subject).
 
 Spark-first design: the reference runs one recursive SQLite traversal
-*per entity* (``:197``). We instead compute ONE global closure, by
-path doubling or as a frontier fixpoint on
-:func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint` (shared
-with the incremental add and delete): each round pins one state with
-``localCheckpoint`` (plan depth O(1), SURVEY.md §4.2.1) and reads its
-row count from that same job. The shuffle key is the (subject, object)
-pair, not the hot ancestor key, so no salting is needed. Rounds are
-O(DAG height) (O(log2 height) doubling) — tens, never data-sized.
-
-At 100 TB-scale the edge set (ontology graph) is small (≤ millions of
-rows) while the *pair* state can reach |terms| × depth; both stay
-distributed — nothing is collected to the driver.
+*per entity* (``:197``). Each operator here dispatches on the count
+of the hierarchy edges it pins (``pin_count``) and logs the choice. A
+dictionary-bounded hierarchy (at most ``LOCAL_CLOSURE_EDGES_MAX``
+edges) is solved in ONE task: a handful of jobs whatever its height.
+Above it the pair state stays distributed, on path doubling or on
+:func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint`: one
+pinned state and one action per round, keyed by the (subject, object)
+pair, so no salting is needed. Nothing is collected.
 """
 
 from __future__ import annotations
 
+import logging
+from collections import defaultdict
+
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -57,6 +57,15 @@ from ontology_loader_spark.schemas import (
 # ceiling and must shuffle instead. Same measured auto-dispatch recipe
 # as operators/dedup.py::BROADCAST_PAIRS_MAX.
 BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
+
+# Hierarchy edges up to which a closure is solved in one task
+# (_closure_local). Pinned closure of a DAG with child k -> k//2, plus
+# k -> k//3 for k % 4 == 3, local[4] on a 4-core VM, local vs doubling:
+# 75k edges (1.85M pairs) 10.0 s, 4 jobs, 148 MB worker peak RSS vs
+# 34.7 s, 22 jobs; 200k edges (5.7M pairs) 15.1 s, 4 jobs, 182 MB vs 156 s, 28 jobs.
+LOCAL_CLOSURE_EDGES_MAX = 200_000
+
+log = logging.getLogger(__name__)
 
 
 def relevant_entities(term_dict: DataFrame, ontology: str) -> DataFrame:
@@ -113,7 +122,6 @@ def ancestor_closure(
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
     max_iterations: int = 64,
-    strategy: str = "doubling",
 ) -> DataFrame:
     """J2+J3 — reflexive transitive closure triples.
 
@@ -133,31 +141,67 @@ def ancestor_closure(
         SELECT s, 'entailed_isa_partof_closure', o FROM reach
         WHERE <F1 on o>
 
-    ``strategy``:
-
-    - ``"frontier"``: semi-naive BFS on
-      :func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint` —
-      O(depth) rounds, each stepping only the pairs born in the
-      previous round. Best when depth is small or per-round data is
-      large.
-    - ``"doubling"`` (default): path-doubling (repeated squaring of the
-      reachability relation) — O(log2 depth) rounds at the cost of
-      denser intermediates. Best when driver-side iteration overhead
-      dominates (deep hierarchies, many small jobs) — this is the
-      option that keeps the serial fraction negligible in the
-      two-cluster-size scaling gate.
-
-    Both raise ``RuntimeError`` past ``max_iterations`` rounds.
+    The count of the pinned distinct hierarchy edges picks the solver:
+    one task (:func:`_closure_local`) at most ``LOCAL_CLOSURE_EDGES_MAX``,
+    else path doubling, which raises ``RuntimeError`` past
+    ``max_iterations`` rounds.
     """
-    # The ontology edge set is small relative to the fact tables —
-    # pin it; it is the probe side of every iteration.
     hedges, n_hedges = pin_count(
         select_hierarchy_edges(edges, predicates).select("subject", "object").distinct()
     )
-    if strategy == "doubling":
-        return _closure_doubling(hedges, n_hedges, relevant, ontology, max_iterations)
+    if _local("ancestor_closure", n_hedges):
+        return _closure_local(hedges, relevant, ontology)
+    return _closure_doubling(hedges, n_hedges, relevant, ontology, max_iterations)
 
-    # Reflexive seed (Q1): every relevant entity reaches itself.
+
+def _local(op_name: str, n: int) -> bool:
+    """The measured dispatch, logged: solve ``n`` edges in one task?"""
+    ceiling = LOCAL_CLOSURE_EDGES_MAX
+    choice = "local" if n <= ceiling else "distributed"
+    log.debug("%s: %d hierarchy edges, ceiling %d -> %s", op_name, n, ceiling, choice,
+              extra={"op_name": op_name, "measured": n, "threshold": ceiling,
+                     "choice": choice})
+    return choice == "local"
+
+
+def _closure_local(hedges: DataFrame, relevant: DataFrame, ontology: str) -> DataFrame:
+    """The closure of ``relevant`` over ``hedges`` in one task: one
+    adjacency, then a DFS with a visited set from each domain id —
+    reflexive (Q1), through foreign nodes, no round bound (a cycle ends
+    the walk). Pairs leave in chunks flushed at 65,536 rows."""
+    domain = relevant.select(F.col("id").alias("subject"), F.lit(None).cast("string"))
+    rows = hedges.select("subject", "object").dropna().union(domain).coalesce(1)
+
+    def solve(batches):
+        adj, sources = defaultdict(list), set()
+        for b in batches:  # a null object marks a domain row
+            for s, o in zip(b["subject"], b["object"]):
+                if o is not None:
+                    adj[s].append(o)
+                elif s is not None:  # a null id reaches nothing, as in SQL
+                    sources.add(s)
+        out_s, out_o = [], []
+        for src in sources:
+            seen, todo = {src}, [src]
+            while todo:
+                for nxt in adj.get(todo.pop(), ()):
+                    if nxt not in seen:
+                        seen.add(nxt)
+                        todo.append(nxt)
+            out_s += [src] * len(seen)
+            out_o += seen
+            if len(out_s) >= 65_536:
+                yield pd.DataFrame({"s": out_s, "o": out_o})
+                out_s, out_o = [], []
+        if out_s:
+            yield pd.DataFrame({"s": out_s, "o": out_o})
+
+    return _emit(rows.mapInPandas(solve, "s string, o string"), ontology)
+
+
+def _closure_frontier(hedges: DataFrame, relevant: DataFrame, ontology: str, max_iterations: int):
+    """Semi-naive BFS over ``hedges`` from a reflexive seed (Q1):
+    O(depth) rounds, each stepping only the pairs born in the last."""
     reach = semi_naive_fixpoint(
         relevant.select(F.col("id").alias("s"), F.col("id").alias("o")),
         lambda f: f.join(F.broadcast(hedges), f["o"] == hedges["subject"]).select(
@@ -183,13 +227,13 @@ def _emit(pairs: DataFrame, ontology: str) -> DataFrame:
 
 def _hedge_set(edges: DataFrame, predicates, broadcast_edges_max: int):
     """Pinned hierarchy ``(subject, object)`` pairs (duplicates are
-    absorbed by the fixpoint's reduction), and the side every round
-    joins them as: broadcast under ``broadcast_edges_max`` rows, else
-    a plain shuffle join (AQE), decided by the pin's observed count."""
+    absorbed by the fixpoint's reduction and the local DFS), their
+    count, and the side every round joins them as: broadcast under
+    ``broadcast_edges_max`` rows, else a plain shuffle join (AQE)."""
     hedges, n = pin_count(
         select_hierarchy_edges(edges, predicates).select("subject", "object")
     )
-    return hedges, F.broadcast(hedges) if n <= broadcast_edges_max else hedges
+    return hedges, n, F.broadcast(hedges) if n <= broadcast_edges_max else hedges
 
 
 def incremental_closure_update(
@@ -202,26 +246,22 @@ def incremental_closure_update(
     max_iterations: int = 64,
     broadcast_edges_max: int = 5_000_000,
 ) -> DataFrame:
-    """Maintain the reflexive transitive closure under edge ADDITIONS
-    without recomputing from scratch — the new-ontology-version case
-    the reconciliation pipeline exists for (a release typically adds a
-    few hundred edges to a million-row closure).
-
-    Delta-frontier semi-naive evaluation: a new pair can only arise as
-    ``reach(s, a) ∘ new(a, b) ∘ reach(b, o)`` — reach into a new edge,
-    extended onward. ``prior_closure`` alone cannot seed the reach-in
-    side: quirk Q2 filters foreign objects at EMISSION, so a pair
-    (s → foreign a) was never stored even though traversal passes
+    """Maintain the reflexive transitive closure under edge ADDITIONS —
+    the new-ontology-version case the reconciliation pipeline exists
+    for. At most ``LOCAL_CLOSURE_EDGES_MAX`` hierarchy edges in ``edges
+    ∪ new_edges`` (their pin's count), the new closure is re-solved in
+    one task and ``prior_closure`` is not read. Above it, delta-frontier
+    semi-naive evaluation: a new pair can only arise as ``reach(s, a) ∘
+    new(a, b) ∘ reach(b, o)``. ``prior_closure`` alone cannot seed the
+    reach-in side: quirk Q2 filters foreign objects at EMISSION, so a
+    pair (s → foreign a) was never stored even though traversal passes
     through it. The seed is therefore a reverse BFS over the RAW
-    (old ∪ new) edge set from the new edges' subjects — the number of
-    PAIR rows iterated is proportional to the delta's ancestor cone,
-    never the old closure — intersected with the closure domain. The
-    forward fixpoint then steps only the genuinely-new pairs against
-    the full edge set, with the prior pairs as its ``known`` rows.
-
-    Each round joins the delta-sized frontier against the full
-    hierarchy edge set, broadcast under ``broadcast_edges_max`` rows
-    (ontology hierarchies are dictionary-bounded: the common case).
+    (old ∪ new) edge set from the new edges' subjects — pair rows
+    proportional to the delta's ancestor cone, never the old closure —
+    intersected with the closure domain. The forward fixpoint then
+    steps only the genuinely-new pairs against the full edge set
+    (broadcast under ``broadcast_edges_max`` rows), with the prior
+    pairs as its ``known`` rows.
 
     ``prior_closure``: (subject, predicate, object, type) as produced
     by :func:`ancestor_closure` over ``edges``. Returns the closure of
@@ -229,9 +269,11 @@ def incremental_closure_update(
     :func:`ancestor_closure` run (pinned by a randomized test). New
     pairs never include a prior pair (those are ``known``), so the
     result is a disjoint union and needs no distinct."""
-    all_hedges, hedges_side = _hedge_set(
+    all_hedges, n_hedges, hedges_side = _hedge_set(
         edges.unionByName(new_edges), predicates, broadcast_edges_max
     )
+    if _local("incremental_closure_update", n_hedges):
+        return _closure_local(all_hedges, relevant, ontology)
     new_h = select_hierarchy_edges(new_edges, predicates)
 
     revreach = _reverse_reach(
@@ -295,12 +337,12 @@ def incremental_closure_delete(
     broadcast_edges_max: int = 5_000_000,
 ) -> DataFrame:
     """Maintain the closure under edge DELETIONS — the other half of
-    ontology-release maintenance (a release retracts assertions as
-    well as adding them; the reference recomputes from scratch, this
-    keeps the untouched cone).
-
-    Delete-cone invalidation + re-derive (the DRed shape specialized
-    to reachability): a pair (s, o) can only LOSE a derivation if some
+    ontology-release maintenance. At most ``LOCAL_CLOSURE_EDGES_MAX``
+    distinct hierarchy edges in ``edges − deleted_edges`` (their pin's
+    count), the new closure is re-solved in one task and
+    ``prior_closure`` is not read. Above it, untouched rows are kept:
+    delete-cone invalidation + re-derive (the DRed shape specialized
+    to reachability). A pair (s, o) can only LOSE a derivation if some
     path from ``s`` used a deleted edge, which requires ``s →* a`` over
     the OLD edge set for a deleted edge's subject ``a``. So:
 
@@ -309,20 +351,26 @@ def incremental_closure_delete(
     2. ``affected`` = those sources ∩ closure domain; every stored row
        of an affected subject is invalidated (over-delete);
     3. re-derive: a fresh closure restricted to the affected subjects
-       over the remaining edge set. Strategy is dispatched on the
-       MEASURED cone size: a small cone seeds a frontier BFS (cost ~
-       the cone, O(depth) driver rounds); a cone covering most of the
-       closure domain (a deletion near the roots — also the gate's
-       random-slice case) switches to path-doubling, whose O(log2
-       depth) rounds beat the frontier's O(depth) when the work is
-       domain-sized anyway;
+       over the remaining edge set, by the MEASURED cone size: a small
+       cone seeds a frontier BFS (cost ~ the cone, O(depth) rounds); a
+       cone of half the closure domain or more (a deletion near the
+       roots) takes path doubling's O(log2 depth) rounds;
     4. untouched subjects' rows carry over verbatim.
 
     The union is disjoint by subject, so no distinct is needed.
     ``prior_closure`` must be the closure of ``edges``; returns the
     closure of ``edges − deleted_edges``, equal to a fresh
     :func:`ancestor_closure` run (randomized-delta test + gate)."""
-    old_h, hedges_side = _hedge_set(edges, predicates, broadcast_edges_max)
+    # remove by full (s, p, o): a same-(s, o) edge under a predicate
+    # not being deleted must keep its hierarchy pair alive
+    key = ["subject", "predicate", "object"]
+    remaining = edges.join(F.broadcast(deleted_edges.select(*key)), key, "left_anti")
+    rem_h, n_rem = pin_count(
+        select_hierarchy_edges(remaining, predicates).select("subject", "object").distinct()
+    )
+    if _local("incremental_closure_delete", n_rem):
+        return _closure_local(rem_h, relevant, ontology)
+    old_h, _, hedges_side = _hedge_set(edges, predicates, broadcast_edges_max)
     revreach = _reverse_reach(
         old_h,
         hedges_side,
@@ -345,20 +393,10 @@ def incremental_closure_delete(
         "subject",
         "left_anti",
     )
-    # remove by full (s, p, o): a same-(s, o) edge under a predicate
-    # not being deleted must keep its hierarchy pair alive
-    remaining = edges.join(
-        F.broadcast(
-            deleted_edges.select("subject", "predicate", "object").distinct()
-        ),
-        ["subject", "predicate", "object"],
-        "left_anti",
-    )
-    strategy = "doubling" if n_affected * 2 >= domain.get["n"] else "frontier"
-    rederived = ancestor_closure(
-        remaining, affected, ontology, predicates, max_iterations,
-        strategy=strategy,
-    )
+    if n_affected * 2 >= domain.get["n"]:
+        rederived = _closure_doubling(rem_h, n_rem, affected, ontology, max_iterations)
+    else:
+        rederived = _closure_frontier(rem_h, affected, ontology, max_iterations)
     return kept.select(*prior_closure.columns).unionByName(rederived)
 
 

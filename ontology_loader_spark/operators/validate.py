@@ -105,7 +105,9 @@ def cycle_members(
     anti-join against reached, ``localCheckpoint`` per round — the
     closure module's discipline) and keeps ``s = o`` pairs. Exactness
     does not depend on the trim: trimming only removes edges that
-    provably lie on no cycle-reaching path.
+    provably lie on no cycle-reaching path. Raises ``RuntimeError``
+    when ``max_iter`` rounds end with pairs still growing (an n-node
+    cycle needs n + 1), never returning a partial set.
     """
     core = _trim_to_cycle_core(
         select_hierarchy_edges(edges, predicates)
@@ -131,6 +133,8 @@ def cycle_members(
             reached, ["s", "o"], "left_anti"
         ).localCheckpoint(eager=True)
         reached = reached.unionByName(frontier).localCheckpoint(eager=True)
+    else:
+        raise RuntimeError(f"cycle_members did not converge in {max_iter} iterations")
     return (
         reached.filter(F.col("s") == F.col("o"))
         .select(F.col("s").alias("id"))

@@ -15,9 +15,9 @@ ITERATED product of the whole edge set — not per-key foldable state —
 so the correct streaming form is exactly Spark's recommended
 "incremental batch view maintenance inside foreachBatch", with the
 state as checkpointed DataFrames (``localCheckpoint`` here; a table in
-production — swap ``_pin`` for a write/read of your store). Each batch
-costs O(delta cone), never O(|closure|), per the batch operators'
-contracts.
+production — swap ``_pin`` for a write/read of your store). A batch on
+a dictionary-bounded hierarchy re-solves the closure in one task;
+above the operators' ceiling it iterates O(delta cone) pair rows.
 
 Batch semantics: within one micro-batch, ``add`` rows apply first,
 then ``delete`` rows (a CDC batch that both adds and deletes the same

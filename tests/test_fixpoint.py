@@ -7,11 +7,13 @@ import uuid
 
 import pytest
 
+from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
     incremental_closure_delete,
     incremental_closure_update,
     relevant_entities,
+    select_hierarchy_edges,
 )
 from ontology_loader_spark.operators.redirects import redirect_map
 from ontology_loader_spark.schemas import EDGE_SCHEMA, TERM_DICT_SCHEMA
@@ -34,19 +36,31 @@ def _chain(n):
     return [(f"P:{k}", ISA, f"P:{k - 1}") for k in range(1, n)]
 
 
+def _frontier(edges, rel, max_iterations=64):
+    """The distributed frontier arm, which only the delete's small-cone
+    re-derive dispatches to."""
+    hedges = select_hierarchy_edges(edges).select("subject", "object").distinct()
+    return closure._closure_frontier(hedges, rel, ONT, max_iterations)
+
+
 @pytest.mark.parametrize("strategy,max_iterations", [("frontier", 3), ("doubling", 1)])
-def test_ancestor_closure_overrun_raises(spark, strategy, max_iterations):
+def test_ancestor_closure_overrun_raises(spark, monkeypatch, strategy, max_iterations):
+    """The distributed arms raise; the local arm has no round bound."""
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
     rel = relevant_entities(_terms(spark, 8), ONT)
     with pytest.raises(RuntimeError, match="ancestor_closure"):
-        ancestor_closure(
-            _edges(spark, _chain(8)), rel, ONT,
-            max_iterations=max_iterations, strategy=strategy,
-        )
+        if strategy == "frontier":
+            _frontier(_edges(spark, _chain(8)), rel, max_iterations)
+        else:
+            ancestor_closure(
+                _edges(spark, _chain(8)), rel, ONT, max_iterations=max_iterations
+            )
 
 
-def test_incremental_update_overrun_raises(spark):
+def test_incremental_update_overrun_raises(spark, monkeypatch):
     """The bottom edge of the chain arrives last: the reverse pass
     converges in one round, the forward pass needs seven."""
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
     edges = _chain(8)
     old, new = _edges(spark, edges[:-1]), _edges(spark, edges[-1:])
     rel = relevant_entities(_terms(spark, 8), ONT).localCheckpoint(eager=True)
@@ -55,8 +69,9 @@ def test_incremental_update_overrun_raises(spark):
         incremental_closure_update(old, new, prior, rel, ONT, max_iterations=2)
 
 
-def test_incremental_delete_reverse_pass_overrun_raises(spark):
+def test_incremental_delete_reverse_pass_overrun_raises(spark, monkeypatch):
     """Deleting the top edge puts the whole chain in the delete cone."""
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
     edges = _chain(8)
     ed = _edges(spark, edges)
     rel = relevant_entities(_terms(spark, 8), ONT).localCheckpoint(eager=True)
@@ -111,7 +126,7 @@ def test_redirect_map_long_chains_and_cycle_tail(spark):
 def test_fixpoint_logs_rounds_and_frontier_sizes(spark, caplog):
     rel = relevant_entities(_terms(spark, 5), ONT)
     with caplog.at_level(logging.DEBUG, logger="ontology_loader_spark.fixpoint"):
-        ancestor_closure(_edges(spark, _chain(5)), rel, ONT, strategy="frontier")
+        _frontier(_edges(spark, _chain(5)), rel)
     (rec,) = [r for r in caplog.records if r.name == "ontology_loader_spark.fixpoint"]
     assert rec.levelno == logging.DEBUG
     assert rec.op_name == "ancestor_closure"
@@ -132,13 +147,20 @@ def _job_count(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_incremental_maintenance_job_budget(spark):
+def test_incremental_maintenance_job_budget(spark, monkeypatch):
     """Spark jobs for one add batch and one delete batch on a fixed
     200-term DAG (child k -> k//2, plus k -> k//3 for k % 4 == 3),
-    including one count of the result. The loops that pinned, then
+    including one count of the result, on both arms.
+
+    Distributed arm (ceiling forced to 0): the loops that pinned, then
     counted or ran ``isEmpty``, then re-pinned an accumulator every
     round spent 98-99 jobs on the add and 95 on the delete (local[4],
-    8 shuffle partitions); the budget is half of the lower count."""
+    8 shuffle partitions); the budget is half of the lower count.
+
+    Local arm (the default at this size), measured and asserted: 2
+    jobs for the add (the edge pin; the one-task solve under the
+    count) and 4 for the delete (the deleted edges' broadcast, the
+    remaining edges' distinct shuffle and pin, the solve)."""
     n = 200
     edges = [(f"P:{k}", ISA, f"P:{k // 2}") for k in range(1, n)]
     edges += [(f"P:{k}", "BFO:0000050", f"P:{k // 3}") for k in range(3, n, 4)]
@@ -147,11 +169,20 @@ def test_incremental_maintenance_job_budget(spark):
     old = _edges(spark, [e for e in edges if e not in added])
     full = _edges(spark, edges)
     rel = relevant_entities(_terms(spark, n), ONT).localCheckpoint(eager=True)
-    prior_old = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
-    prior_full = ancestor_closure(full, rel, ONT).localCheckpoint(eager=True)
-    add_jobs = _job_count(spark, lambda: incremental_closure_update(
-        old, _edges(spark, added), prior_old, rel, ONT).count())
-    del_jobs = _job_count(spark, lambda: incremental_closure_delete(
-        full, _edges(spark, deleted), prior_full, rel, ONT).count())
+
+    def jobs():
+        prior_old = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
+        prior_full = ancestor_closure(full, rel, ONT).localCheckpoint(eager=True)
+        add_jobs = _job_count(spark, lambda: incremental_closure_update(
+            old, _edges(spark, added), prior_old, rel, ONT).count())
+        del_jobs = _job_count(spark, lambda: incremental_closure_delete(
+            full, _edges(spark, deleted), prior_full, rel, ONT).count())
+        return add_jobs, del_jobs
+
+    add_jobs, del_jobs = jobs()
+    assert add_jobs <= 2, add_jobs
+    assert del_jobs <= 4, del_jobs
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+    add_jobs, del_jobs = jobs()
     assert add_jobs <= 98 // 2, add_jobs
     assert del_jobs <= 95 // 2, del_jobs

@@ -1,12 +1,16 @@
 """Incremental closure maintenance: updating the prior closure with a
 batch of added edges must equal a fresh full recompute — on random
 DAGs, on cyclic graphs, and on the foreign-intermediate trap (a new
-edge hanging off a node quirk Q2 filtered out of the stored closure)."""
+edge hanging off a node quirk Q2 filtered out of the stored closure).
+Every equivalence runs on both arms: the one-task local solve (the
+default at these sizes) and the distributed path (ceiling forced to
+0)."""
 
 import random
 
 import pytest
 
+from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
     incremental_closure_update,
@@ -26,15 +30,27 @@ def _closure_set(df):
             for r in df.collect()}
 
 
+def _both_arms(check):
+    """Run ``check()`` on the local arm, then on the distributed arm."""
+    check()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+        check()
+
+
 def _check(spark, terms, old_edges, new_edges):
     td = spark.createDataFrame(terms, TERM_DICT_SCHEMA)
     old = spark.createDataFrame(old_edges, EDGE_SCHEMA)
     new = spark.createDataFrame(new_edges, EDGE_SCHEMA)
     rel = relevant_entities(td, ONT).localCheckpoint(eager=True)
-    prior = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
-    incremental = incremental_closure_update(old, new, prior, rel, ONT)
-    full = ancestor_closure(old.unionByName(new), rel, ONT)
-    assert _closure_set(incremental) == _closure_set(full)
+
+    def check():
+        prior = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
+        incremental = incremental_closure_update(old, new, prior, rel, ONT)
+        full = ancestor_closure(old.unionByName(new), rel, ONT)
+        assert _closure_set(incremental) == _closure_set(full)
+
+    _both_arms(check)
 
 
 @pytest.mark.parametrize("seed,n,n_new", [(11, 40, 5), (12, 60, 8)])
@@ -99,17 +115,21 @@ def _check_delete(spark, terms, edges, deleted):
     ed = spark.createDataFrame(edges, EDGE_SCHEMA)
     dl = spark.createDataFrame(deleted, EDGE_SCHEMA)
     rel = relevant_entities(td, ONT).localCheckpoint(eager=True)
-    prior = ancestor_closure(ed, rel, ONT).localCheckpoint(eager=True)
     from ontology_loader_spark.operators.closure import (
         incremental_closure_delete,
     )
 
-    incremental = incremental_closure_delete(ed, dl, prior, rel, ONT)
     remaining = [e for e in edges if e not in deleted]
-    full = ancestor_closure(
-        spark.createDataFrame(remaining, EDGE_SCHEMA), rel, ONT
-    )
-    assert _closure_set(incremental) == _closure_set(full)
+
+    def check():
+        prior = ancestor_closure(ed, rel, ONT).localCheckpoint(eager=True)
+        incremental = incremental_closure_delete(ed, dl, prior, rel, ONT)
+        full = ancestor_closure(
+            spark.createDataFrame(remaining, EDGE_SCHEMA), rel, ONT
+        )
+        assert _closure_set(incremental) == _closure_set(full)
+
+    _both_arms(check)
 
 
 @pytest.mark.parametrize("seed,n,n_del", [(21, 40, 5), (22, 60, 8)])

@@ -86,3 +86,21 @@ def test_cycle_members_excludes_inter_cycle_path(spark):
     assert "x" in core_nodes  # trim alone keeps the connector
     got = {r["id"] for r in cycle_members(ed).collect()}
     assert got == {"a", "b", "c", "d"}  # exact phase prunes it
+
+
+def test_cycle_members_long_cycle_raises_or_returns_all(spark):
+    """A cycle longer than the round bound raises; one inside it
+    returns every member."""
+    import pytest
+
+    from ontology_loader_spark.operators.validate import cycle_members
+
+    def ring(n):
+        return _edges(spark, [(f"n{i}", "rdfs:subClassOf", f"n{(i + 1) % n}")
+                              for i in range(n)])
+
+    with pytest.raises(RuntimeError, match="cycle_members"):
+        cycle_members(ring(12), max_iter=8)
+    assert {r["id"] for r in cycle_members(ring(10)).collect()} == {
+        f"n{i}" for i in range(10)
+    }
