@@ -59,10 +59,10 @@ from ontology_loader_spark.schemas import (
 BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
 
 # Hierarchy edges up to which a closure is solved in one task
-# (_closure_local). Pinned closure of a DAG with child k -> k//2, plus
-# k -> k//3 for k % 4 == 3, local[4] on a 4-core VM, local vs doubling:
-# 75k edges (1.85M pairs) 10.0 s, 4 jobs, 148 MB worker peak RSS vs
-# 34.7 s, 22 jobs; 200k edges (5.7M pairs) 15.1 s, 4 jobs, 182 MB vs 156 s, 28 jobs.
+# (_closure_local). DAG k -> k//2 (+ k//3 if k % 4 == 3), pinned, local[4]:
+# 75k edges (1.85M pairs) 10.0 s, 148 MB worker peak RSS vs doubling 34.7 s;
+# 200k (5.7M pairs) 15.1 s, 182 MB vs 156 s. Not a crossover: 200k is the
+# largest size tried and the task's cost grows with pairs; above, unverified.
 LOCAL_CLOSURE_EDGES_MAX = 200_000
 
 log = logging.getLogger(__name__)
@@ -248,20 +248,20 @@ def incremental_closure_update(
 ) -> DataFrame:
     """Maintain the reflexive transitive closure under edge ADDITIONS —
     the new-ontology-version case the reconciliation pipeline exists
-    for. At most ``LOCAL_CLOSURE_EDGES_MAX`` hierarchy edges in ``edges
-    ∪ new_edges`` (their pin's count), the new closure is re-solved in
-    one task and ``prior_closure`` is not read. Above it, delta-frontier
-    semi-naive evaluation: a new pair can only arise as ``reach(s, a) ∘
-    new(a, b) ∘ reach(b, o)``. ``prior_closure`` alone cannot seed the
-    reach-in side: quirk Q2 filters foreign objects at EMISSION, so a
-    pair (s → foreign a) was never stored even though traversal passes
-    through it. The seed is therefore a reverse BFS over the RAW
-    (old ∪ new) edge set from the new edges' subjects — pair rows
-    proportional to the delta's ancestor cone, never the old closure —
+    for. At most ``LOCAL_CLOSURE_EDGES_MAX`` hierarchy edge ROWS in
+    ``edges ∪ new_edges`` (duplicates and same (s, o) under two
+    predicates count, unlike the distinct pairs the other two count),
+    the closure is re-solved in one task; ``prior_closure`` is unread.
+    Above it, delta-frontier semi-naive evaluation: a new pair can only
+    arise as ``reach(s, a) ∘ new(a, b) ∘ reach(b, o)``. ``prior_closure``
+    alone cannot seed the reach-in side: quirk Q2 filters foreign
+    objects at EMISSION, so a pair (s → foreign a) was never stored
+    though traversal passes through it. The seed is therefore a reverse
+    BFS over the RAW (old ∪ new) edge set from the new edges' subjects
+    — rows ∝ the delta's ancestor cone, never the old closure —
     intersected with the closure domain. The forward fixpoint then
     steps only the genuinely-new pairs against the full edge set
-    (broadcast under ``broadcast_edges_max`` rows), with the prior
-    pairs as its ``known`` rows.
+    (broadcast under ``broadcast_edges_max`` rows), prior pairs ``known``.
 
     ``prior_closure``: (subject, predicate, object, type) as produced
     by :func:`ancestor_closure` over ``edges``. Returns the closure of

@@ -3,21 +3,21 @@ closure, micro-batch by micro-batch.
 
 The north-star job is a LONG-LIVED pipeline: ontology releases and
 transcript-derived assertions arrive continuously, and the entailment
-closure that downstream retrieval joins against must track them without
-ever recomputing from scratch. This module is the streaming shell
-around the batch incremental operators
+closure that downstream retrieval joins against must track them. This
+module is the streaming shell around the batch incremental operators
 (``operators/closure.py::incremental_closure_update`` /
 ``incremental_closure_delete``): a ``foreachBatch`` sink folds each
-micro-batch of edge operations into (edges, closure) state.
+micro-batch of edge operations into (edges, closure) state. A batch on
+a dictionary-bounded hierarchy (at most ``LOCAL_CLOSURE_EDGES_MAX``
+edges) re-solves the whole closure from scratch in one task; above that
+ceiling the closure is maintained incrementally, O(delta cone) a batch.
 
 Why foreachBatch and not a stateful operator: the closure is a JOINED,
 ITERATED product of the whole edge set — not per-key foldable state —
 so the correct streaming form is exactly Spark's recommended
 "incremental batch view maintenance inside foreachBatch", with the
 state as checkpointed DataFrames (``localCheckpoint`` here; a table in
-production — swap ``_pin`` for a write/read of your store). A batch on
-a dictionary-bounded hierarchy re-solves the closure in one task;
-above the operators' ceiling it iterates O(delta cone) pair rows.
+production — swap ``_pin`` for a write/read of your store).
 
 Batch semantics: within one micro-batch, ``add`` rows apply first,
 then ``delete`` rows (a CDC batch that both adds and deletes the same

@@ -1,11 +1,17 @@
 """Streaming KG maintenance: edge CDC micro-batches folded through the
 incremental closure must land on exactly the from-scratch closure of
 the surviving edge set — adds, deletes, replayed duplicates and
-no-op deletes included."""
+no-op deletes included. Every test runs on both arms: the one-task
+local solve (the default at these sizes) and the distributed path
+(ceiling forced to 0), where each batch's prior closure is the last
+incremental output."""
+
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import ancestor_closure
 from ontology_loader_spark.streaming.closure import (
     StreamingClosureMaintainer,
@@ -23,10 +29,16 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _both_arms(check):
+    """Run ``check()`` on the local arm, then on the distributed arm."""
+    check()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+        check()
+
+
 def test_maintainer_matches_batch_closure_over_cdc_batches(spark):
     rel = _relevant(spark, 40)
-    m = StreamingClosureMaintainer(spark, rel, ONT)
-
     # batch 0: a binary tree over 0..19
     b0 = [(f"P:{i}", "rdfs:subClassOf", f"P:{i // 2}", "add")
           for i in range(1, 20)]
@@ -42,31 +54,40 @@ def test_maintainer_matches_batch_closure_over_cdc_batches(spark):
         ("P:99", "rdfs:subClassOf", "P:98", "delete"),  # no-op
     ]
     schema = "subject string, predicate string, object string, op string"
-    for i, rows in enumerate((b0, b1, b2)):
-        m.process_batch(spark.createDataFrame(rows, schema), i)
 
-    assert m.batches_applied == 3
-    want = ancestor_closure(m.edges, rel, ONT)
-    assert _rows(m.closure) == _rows(want)
-    # the delete genuinely changed entailment: without the re-add via
-    # part_of, P:21's ancestors would not include P:1
-    got = {(r["subject"], r["object"]) for r in m.closure.collect()}
-    assert ("P:21", "P:1") in got  # 21 -> 20 -> (part_of) 3 -> 1
-    assert ("P:21", "P:7") not in got  # the deleted graft path is gone
+    def check():
+        m = StreamingClosureMaintainer(spark, rel, ONT)
+        for i, rows in enumerate((b0, b1, b2)):
+            m.process_batch(spark.createDataFrame(rows, schema), i)
+
+        assert m.batches_applied == 3
+        want = ancestor_closure(m.edges, rel, ONT)
+        assert _rows(m.closure) == _rows(want)
+        # the delete genuinely changed entailment: without the re-add via
+        # part_of, P:21's ancestors would not include P:1
+        got = {(r["subject"], r["object"]) for r in m.closure.collect()}
+        assert ("P:21", "P:1") in got  # 21 -> 20 -> (part_of) 3 -> 1
+        assert ("P:21", "P:7") not in got  # the deleted graft path is gone
+
+    _both_arms(check)
 
 
 def test_maintainer_add_then_delete_same_edge_in_one_batch_nets_deleted(spark):
     rel = _relevant(spark, 4)
-    m = StreamingClosureMaintainer(spark, rel, ONT)
     schema = "subject string, predicate string, object string, op string"
-    m.process_batch(spark.createDataFrame(
-        [("P:1", "rdfs:subClassOf", "P:0", "add"),
-         ("P:2", "rdfs:subClassOf", "P:1", "add"),
-         ("P:2", "rdfs:subClassOf", "P:1", "delete")], schema), 0)
-    got = {(r["subject"], r["object"]) for r in m.closure.collect()}
-    assert ("P:1", "P:0") in got
-    assert ("P:2", "P:1") not in got  # Q5-style: delete wins the batch
-    assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))
+
+    def check():
+        m = StreamingClosureMaintainer(spark, rel, ONT)
+        m.process_batch(spark.createDataFrame(
+            [("P:1", "rdfs:subClassOf", "P:0", "add"),
+             ("P:2", "rdfs:subClassOf", "P:1", "add"),
+             ("P:2", "rdfs:subClassOf", "P:1", "delete")], schema), 0)
+        got = {(r["subject"], r["object"]) for r in m.closure.collect()}
+        assert ("P:1", "P:0") in got
+        assert ("P:2", "P:1") not in got  # Q5-style: delete wins the batch
+        assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))
+
+    _both_arms(check)
 
 
 def test_end_to_end_streaming_query_foreach_batch(spark, tmp_path):
@@ -94,21 +115,25 @@ def test_end_to_end_streaming_query_foreach_batch(spark, tmp_path):
             os.utime(target, (base + i, base + i))
 
     rel = _relevant(spark, 16)
-    m = StreamingClosureMaintainer(spark, rel, ONT)
-    q = (
-        stream_edge_ops(spark, str(src))
-        .writeStream.foreachBatch(m.process_batch)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not end within 240 s"
 
-    assert m.batches_applied >= 1
-    assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))
-    got = {(r["subject"], r["object"]) for r in m.closure.collect()}
-    assert ("P:12", "P:1") in got   # added in the second file
-    assert ("P:3", "P:1") not in got  # deleted in the second file
+    def check():
+        m = StreamingClosureMaintainer(spark, rel, ONT)
+        q = (
+            stream_edge_ops(spark, str(src))
+            .writeStream.foreachBatch(m.process_batch)
+            .option("checkpointLocation", tempfile.mkdtemp(dir=tmp_path))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(240), "stream did not end within 240 s"
+
+        assert m.batches_applied >= 1
+        assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))
+        got = {(r["subject"], r["object"]) for r in m.closure.collect()}
+        assert ("P:12", "P:1") in got   # added in the second file
+        assert ("P:3", "P:1") not in got  # deleted in the second file
+
+    _both_arms(check)
     assert F  # keep the import honest
 
 
@@ -129,8 +154,12 @@ def test_edge_cdc_fixture_replay_nets_to_batch_state(spark, tmp_path):
     ed = derive_edges(spark, sf_dir)
     cdc = write_edge_cdc_fixture(spark, ed, str(tmp_path / "cdc"))
     rel = relevant_entities(derive_term_dict(spark, sf_dir), derive.ONT)
-    m = replay_edge_cdc(spark, rel, derive.ONT, cdc)
 
-    assert m.batches_applied == 4
-    assert _rows(m.edges) == _rows(ed.select("subject", "predicate", "object"))
-    assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, derive.ONT))
+    def check():
+        m = replay_edge_cdc(spark, rel, derive.ONT, cdc)
+
+        assert m.batches_applied == 4
+        assert _rows(m.edges) == _rows(ed.select("subject", "predicate", "object"))
+        assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, derive.ONT))
+
+    _both_arms(check)
