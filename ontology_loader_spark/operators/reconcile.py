@@ -250,7 +250,9 @@ def reconcile(
     """
     if not assume_unique_ids:
         incoming_classes = _one_doc_per_id(incoming_classes)
-    obs = obsolete_ids(incoming_classes).localCheckpoint(eager=True)
+    # pinned once: the obsolete ids and the M2 diff both read this pin
+    incoming_classes = incoming_classes.localCheckpoint(eager=True)
+    obs = obsolete_ids(incoming_classes)
 
     # Step 1.1 — M1 (mongodb_loader.py:225-227)
     state_after_obsolete = apply_obsolete_to_classes(class_state, obs)
@@ -262,14 +264,12 @@ def reconcile(
     classified = classified.localCheckpoint(eager=True)
     new_class_state = apply_class_upserts(state_after_obsolete, classified)
 
-    report_cols = ["id", *ONTOLOGY_CLASS_FIELDS]  # Q7: id duplicated
     updates_report = classified.filter(F.col("change_kind") == "update").select(
         F.col("id"), *[F.col(c).alias(f"f_{c}") for c in ONTOLOGY_CLASS_FIELDS]
     )
     inserts_report = classified.filter(F.col("change_kind") == "insert").select(
         F.col("id"), *[F.col(c).alias(f"f_{c}") for c in ONTOLOGY_CLASS_FIELDS]
     )
-    _ = report_cols
 
     # Step 2 — M3 (mongodb_loader.py:237-241): runs AFTER the obsolete
     # delete, so incoming relations referencing obsolete terms are

@@ -12,6 +12,8 @@ the store provides the same contract over parquet directories:
   snapshot pinning: a reader holding version n never sees version n+1
   mid-job (Q5's "read prior snapshot once" requirement);
 - atomic publish via write-temp-then-rename + pointer flip;
+- each version stores its schema as ``_schema.json``, so a read
+  starts no schema-inference job;
 - a rollback hook (point CURRENT at an older version) standing in for
   Iceberg snapshot rollback.
 """
@@ -23,6 +25,7 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ParquetStateStore:
@@ -47,11 +50,18 @@ class ParquetStateStore:
 
     def read(self, spark: SparkSession, table: str,
              version: int | None = None) -> DataFrame:
-        """Read the pinned (or explicit) snapshot version."""
+        """Read the pinned (or explicit) snapshot version. The schema
+        ``publish`` stored beside the data spares the inference job; a
+        version without it falls back to inference."""
         v = self.current_version(table) if version is None else version
         if v is None:
             raise FileNotFoundError(f"state table {table} has no versions")
-        return spark.read.parquet(str(self._table_dir(table) / f"v_{v}"))
+        vdir = self._table_dir(table) / f"v_{v}"
+        schema = vdir / "_schema.json"
+        reader = spark.read
+        if schema.exists():
+            reader = reader.schema(StructType.fromJson(json.loads(schema.read_text())))
+        return reader.parquet(str(vdir))
 
     def publish(self, df: DataFrame, table: str) -> int:
         """Write a new version and flip the CURRENT pointer atomically.
@@ -63,6 +73,8 @@ class ParquetStateStore:
         if tmp.exists():
             shutil.rmtree(tmp)
         df.write.mode("overwrite").parquet(str(tmp))
+        # Spark skips _-prefixed files when it reads the version back
+        (tmp / "_schema.json").write_text(df.schema.json())
         final = tdir / f"v_{v}"
         if final.exists():
             shutil.rmtree(final)

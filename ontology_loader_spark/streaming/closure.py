@@ -1,16 +1,16 @@
-"""Streaming KG maintenance: an edge CDC stream drives the incremental
-closure, micro-batch by micro-batch.
+"""Streaming KG maintenance: an edge CDC stream drives the closure,
+micro-batch by micro-batch.
 
 The north-star job is a LONG-LIVED pipeline: ontology releases and
 transcript-derived assertions arrive continuously, and the entailment
 closure that downstream retrieval joins against must track them. This
-module is the streaming shell around the batch incremental operators
-(``operators/closure.py::incremental_closure_update`` /
-``incremental_closure_delete``): a ``foreachBatch`` sink folds each
-micro-batch of edge operations into (edges, closure) state. A batch on
-a dictionary-bounded hierarchy (at most ``LOCAL_CLOSURE_EDGES_MAX``
-edges) re-solves the whole closure from scratch in one task; above that
-ceiling the closure is maintained incrementally, O(delta cone) a batch.
+module is the streaming shell around the closure operators
+(``operators/closure.py``): a ``foreachBatch`` sink folds each
+micro-batch of edge operations into (edges, closure) state. The closure
+depends only on the edge set, so a batch first becomes ONE net edge set.
+At most ``LOCAL_CLOSURE_EDGES_MAX`` distinct hierarchy pairs, its
+closure is solved once, in one task; above that ceiling the net delta
+goes through ``incremental_closure_update`` / ``_delete``, O(delta cone).
 
 Why foreachBatch and not a stateful operator: the closure is a JOINED,
 ITERATED product of the whole edge set — not per-key foldable state —
@@ -23,8 +23,8 @@ Batch semantics: within one micro-batch, ``add`` rows apply first,
 then ``delete`` rows (a CDC batch that both adds and deletes the same
 edge therefore nets to deleted — matching reconcile's Q5
 delete-after-upsert discipline). Duplicate adds of existing edges and
-deletes of absent edges are no-ops by construction (anti-join / inner
-join against current state).
+deletes of absent edges are no-ops by construction: the net edge set is
+``(edges ∪ adds) − deletes``.
 """
 
 from __future__ import annotations
@@ -34,9 +34,12 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import pin_count
 from ontology_loader_spark.operators.closure import (
+    _closure_local,
+    _local,
     ancestor_closure,
     incremental_closure_delete,
     incremental_closure_update,
+    select_hierarchy_edges,
 )
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
@@ -81,57 +84,39 @@ class StreamingClosureMaintainer:
         self.batches_applied = 0
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        cols = batch_df.columns
-        ops = (
-            batch_df
-            if "op" in cols
-            else batch_df.withColumn("op", F.lit("add"))
-        )
-        ops = _pin(ops.select(*EDGE_KEY, "op"))
-
-        adds = (
-            ops.filter(F.col("op") == "add")
+        """Pin the net edge set ``(edges ∪ adds) − deletes`` once and count
+        its distinct hierarchy pairs: at most ``LOCAL_CLOSURE_EDGES_MAX``,
+        solve its closure once, in one task; above, apply the net adds
+        (new − old), then the net deletes (old − new), incrementally."""
+        op = F.col("op") if "op" in batch_df.columns else F.lit("add")
+        new_edges = _pin(
+            self.edges.withColumn("op", F.lit("add"))
+            .unionByName(batch_df.select(*EDGE_KEY, op.alias("op")))
+            .groupBy(*EDGE_KEY)
+            .agg(F.bool_or(F.col("op") == "add").alias("a"),
+                 F.bool_or(F.col("op") == "delete").alias("d"))
+            .filter("a AND NOT d")
             .select(*EDGE_KEY)
-            .dropDuplicates(EDGE_KEY)
-            # idempotence under CDC replays: an edge already in state
-            # contributes no delta
-            .join(self.edges, EDGE_KEY, "left_anti")
         )
-        adds, n_adds = pin_count(adds)
-        if n_adds:
-            new_edges = _pin(self.edges.unionByName(adds))
-            self.closure = _pin(
-                incremental_closure_update(
-                    self.edges,
-                    adds,
-                    self.closure,
-                    self.relevant,
-                    self.ontology,
-                    self.predicates,
-                )
-            )
-            self.edges = new_edges
-
-        dels = (
-            ops.filter(F.col("op") == "delete")
-            .select(*EDGE_KEY)
-            .dropDuplicates(EDGE_KEY)
-            .join(self.edges, EDGE_KEY, "left_semi")
+        hedges, n_hedges = pin_count(
+            select_hierarchy_edges(new_edges, self.predicates)
+            .select("subject", "object")
+            .distinct()
         )
-        dels, n_dels = pin_count(dels)
-        if n_dels:
-            self.closure = _pin(
-                incremental_closure_delete(
-                    self.edges,
-                    dels,
-                    self.closure,
-                    self.relevant,
-                    self.ontology,
-                    self.predicates,
-                )
-            )
-            self.edges = _pin(self.edges.join(dels, EDGE_KEY, "left_anti"))
-
+        if _local("StreamingClosureMaintainer", n_hedges):
+            self.closure = _pin(_closure_local(hedges, self.relevant, self.ontology))
+        else:
+            old = self.edges
+            adds, n_adds = pin_count(new_edges.join(old, EDGE_KEY, "left_anti"))
+            dels, n_dels = pin_count(old.join(new_edges, EDGE_KEY, "left_anti"))
+            if n_adds:
+                self.closure = _pin(incremental_closure_update(
+                    old, adds, self.closure, self.relevant, self.ontology, self.predicates))
+            if n_dels:
+                self.closure = _pin(incremental_closure_delete(
+                    old.unionByName(adds), dels, self.closure, self.relevant,
+                    self.ontology, self.predicates))
+        self.edges = new_edges
         self.batches_applied += 1
 
 

@@ -69,3 +69,30 @@ def test_owned_store_equivalent(spark, tmp_path):
     a = sorted(map(tuple, rec_inj.relation_state.collect()))
     b = sorted(map(tuple, rec_own.relation_state.collect()))
     assert a == b
+
+
+def test_release_over_prior_store_job_budget(spark, tmp_path, job_count):
+    """Spark jobs for one ``run_ontology_loader`` over a store holding
+    the prior release (a term renamed and made obsolete, one added),
+    reports included: measured 36 (local[4], 8 shuffle partitions).
+    Deriving the incoming classes a second time in reconcile (a
+    separate pin of the obsolete ids) costs at least one job more, and
+    so does a store read that infers its schema; before both were
+    removed the same load took 41."""
+    td, ed = _dfs(spark)
+    store = ParquetStateStore(str(tmp_path / "store"))
+    OntologyLoaderController(
+        spark, "t", td, ed, store_client=store, namespace="kg",
+    ).run_ontology_loader()
+    td2 = spark.createDataFrame(
+        [("T:1", "one", "d1", [], False, None),
+         ("T:2", "two renamed", "d2", [], True, "T:1"),
+         ("T:3", "old", "d3", [], True, "T:1"),
+         ("T:4", "four", "d4", [], False, None)], TERM_DICT_SCHEMA)
+    ed2 = spark.createDataFrame(EDGES + [("T:4", "rdfs:subClassOf", "T:1")], EDGE_SCHEMA)
+    ctl = OntologyLoaderController(
+        spark, "t", td2, ed2, output_directory=str(tmp_path / "reports"),
+        store_client=store, namespace="kg",
+    )
+    n_jobs = job_count(ctl.run_ontology_loader)
+    assert n_jobs <= 36, n_jobs

@@ -3,7 +3,6 @@ operator, each call logs its rounds, and incremental maintenance stays
 inside a Spark-job budget."""
 
 import logging
-import uuid
 
 import pytest
 
@@ -135,19 +134,7 @@ def test_fixpoint_logs_rounds_and_frontier_sizes(spark, caplog):
     assert rec.rounds == 5
 
 
-def _job_count(spark, fn):
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_incremental_maintenance_job_budget(spark, monkeypatch):
+def test_incremental_maintenance_job_budget(spark, monkeypatch, job_count):
     """Spark jobs for one add batch and one delete batch on a fixed
     200-term DAG (child k -> k//2, plus k -> k//3 for k % 4 == 3),
     including one count of the result, on both arms.
@@ -173,9 +160,9 @@ def test_incremental_maintenance_job_budget(spark, monkeypatch):
     def jobs():
         prior_old = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
         prior_full = ancestor_closure(full, rel, ONT).localCheckpoint(eager=True)
-        add_jobs = _job_count(spark, lambda: incremental_closure_update(
+        add_jobs = job_count(lambda: incremental_closure_update(
             old, _edges(spark, added), prior_old, rel, ONT).count())
-        del_jobs = _job_count(spark, lambda: incremental_closure_delete(
+        del_jobs = job_count(lambda: incremental_closure_delete(
             full, _edges(spark, deleted), prior_full, rel, ONT).count())
         return add_jobs, del_jobs
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.operators.reconcile import reconcile
 from ontology_loader_spark.schemas import ONTOLOGY_CLASS_SCHEMA, RELATION_SCHEMA
+from ontology_loader_spark.sinks.state import ParquetStateStore
 
 
 def mk_class(id, name="n", definition="d", aliases=(), relations=(),
@@ -191,7 +192,7 @@ def test_duplicate_incoming_ids_converge_to_one_doc(spark):
     assert res2.class_inserts_report.count() == 0
 
 
-def test_schema_evolution_new_field_flows_through_cdc(spark):
+def test_schema_evolution_new_field_flows_through_cdc(spark, tmp_path, check_store_read):
     """Dynamic-introspection parity with the reference
     (``mongodb_loader.py:223`` introspects ``fields(OntologyClass)`` at
     runtime): a NEW column added to the class schema participates in
@@ -244,9 +245,14 @@ def test_schema_evolution_new_field_flows_through_cdc(spark):
     assert "semantic_version" in state.columns
     got = {r["id"]: r["semantic_version"] for r in state.collect()}
     assert got == {"A:1": "v1", "A:2": None}
+    store = ParquetStateStore(str(tmp_path))
+    store.publish(state, "classes")
+    check_store_read(store, "classes")
 
 
-def test_schema_evolution_state_only_column_survives_on_untouched_docs(spark):
+def test_schema_evolution_state_only_column_survives_on_untouched_docs(
+    spark, tmp_path, check_store_read
+):
     """The symmetric case: the stored state carries a column the
     incoming batch does NOT (field retired from the loader, or state
     written by a newer producer). Document-store semantics: documents
@@ -277,3 +283,6 @@ def test_schema_evolution_state_only_column_survives_on_untouched_docs(spark):
     # untouched doc keeps the stored value; replaced doc is a wholesale
     # replacement (NULL for the column the batch does not carry)
     assert got == {"A:1": ("keep-me", "n"), "A:2": (None, "renamed")}
+    store = ParquetStateStore(str(tmp_path))
+    store.publish(out, "classes")
+    check_store_read(store, "classes")

@@ -48,7 +48,7 @@ def test_write_reports_q7_q8(spark, tmp_path):
     assert final == ["subject", "predicate", "object"]
 
 
-def test_state_store_snapshot_pinning(spark, tmp_path):
+def test_state_store_snapshot_pinning(spark, tmp_path, check_store_read):
     store = ParquetStateStore(str(tmp_path))
     df1 = spark.createDataFrame([(1,)], "x long")
     df2 = spark.createDataFrame([(2,)], "x long")
@@ -61,9 +61,13 @@ def test_state_store_snapshot_pinning(spark, tmp_path):
     assert [r["x"] for r in store.read(spark, "t").collect()] == [2]
     store.rollback("t", v1)
     assert [r["x"] for r in store.read(spark, "t").collect()] == [1]
+    check_store_read(store, "t")
+    # a version without the stored schema falls back to inference
+    (tmp_path / "t" / f"v_{v1}" / "_schema.json").unlink()
+    assert [r["x"] for r in store.read(spark, "t").collect()] == [1]
 
 
-def test_checkpoint_resume(spark, tmp_path):
+def test_checkpoint_resume(spark, tmp_path, check_store_read):
     td = spark.createDataFrame(TERMS, TERM_DICT_SCHEMA)
     ed = spark.createDataFrame(EDGES, EDGE_SCHEMA)
     root = str(tmp_path / "ck")
@@ -102,6 +106,11 @@ def test_checkpoint_resume(spark, tmp_path):
         spark, td, ed, "t", root, fingerprint="run2",
     )
     assert len(ck3.lineage()) > n_before_run3
+    # every stage checkpoint and both state tables
+    tables = [d.name for d in ck3.store.root.iterdir() if ck3.store.exists(d.name)]
+    assert {"ontology_class_set", "ontology_relation_set", "t3_closure"} <= set(tables)
+    for table in tables:
+        check_store_read(ck3.store, table)
 
 
 def test_reports_written(spark, tmp_path):

@@ -163,3 +163,49 @@ def test_edge_cdc_fixture_replay_nets_to_batch_state(spark, tmp_path):
         assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, derive.ONT))
 
     _both_arms(check)
+
+
+def test_maintainer_job_budget_and_noop_batch(spark, monkeypatch, job_count):
+    """Spark jobs for one micro-batch that both adds and deletes, on the
+    200-term DAG of ``test_incremental_maintenance_job_budget`` (child
+    k -> k//2, plus k -> k//3 for k % 4 == 3), on both arms; then a
+    no-op batch (replayed adds, deletes of absent edges) must leave
+    ``edges`` and ``closure`` row-equal to before.
+
+    Local arm (the default at this size), measured and asserted: 5 jobs
+    (the net edge set's shuffle and pin, the hierarchy pairs' shuffle
+    and pin, the one-task solve). Distributed arm (ceiling forced to 0):
+    at most the incremental operators' own budgets, 49 for the add and
+    47 for the delete, plus one job for each of the maintainer's own
+    four pins (net edge set, hierarchy pairs, net adds, net deletes);
+    measured 92 (local[4], 8 shuffle partitions)."""
+    n = 200
+    isa, part_of = "rdfs:subClassOf", "BFO:0000050"
+    edges = [(f"P:{k}", isa, f"P:{k // 2}") for k in range(1, n)]
+    edges += [(f"P:{k}", part_of, f"P:{k // 3}") for k in range(3, n, 4)]
+    added = edges[150:160] + edges[-5:]
+    deleted = edges[3:8] + edges[-12:-7]
+    schema = "subject string, predicate string, object string, op string"
+    rel = _relevant(spark, n)
+
+    def batch(adds, dels):
+        rows = [(*e, "add") for e in adds] + [(*e, "delete") for e in dels]
+        return spark.createDataFrame(rows, schema)
+
+    def jobs():
+        m = StreamingClosureMaintainer(spark, rel, ONT)
+        m.process_batch(batch([e for e in edges if e not in added], []), 0)
+        n_jobs = job_count(lambda: m.process_batch(batch(added, deleted), 1))
+        assert _rows(m.edges) == sorted(e for e in edges if e not in deleted)
+        assert _rows(m.closure) == _rows(ancestor_closure(m.edges, rel, ONT))
+
+        before = _rows(m.edges), _rows(m.closure)
+        m.process_batch(batch(edges[20:25] + added[:3], deleted + [("P:7", isa, "P:0")]), 2)
+        assert (_rows(m.edges), _rows(m.closure)) == before
+        return n_jobs
+
+    local_jobs = jobs()
+    assert local_jobs <= 5, local_jobs
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+    dist_jobs = jobs()
+    assert dist_jobs <= 49 + 47 + 4, dist_jobs
