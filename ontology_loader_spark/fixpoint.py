@@ -1,7 +1,11 @@
 """One semi-naive fixpoint loop with one Spark action per round.
 
-The closure family (frontier closure, incremental add, the reverse
-reach shared by add and delete) runs on :func:`semi_naive_fixpoint`.
+Every set-growing hierarchy walk runs on :func:`semi_naive_fixpoint`:
+the closure family (the frontier closure, the incremental add, the
+reverse reach shared by add and delete), the ``(s, o)`` reach that
+``transitive_reduction`` and ``cycle_members`` share with the frontier
+closure (``operators/closure.py::_reach``), and ``term_depth``, which
+reads ``born`` as the depth.
 At gate scale a fixpoint is bound by its job count, not by data
 movement. The whole state is re-pinned each round on purpose: a
 growing union of pinned parts saves no job but runs more tasks.

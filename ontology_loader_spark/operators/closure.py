@@ -92,6 +92,16 @@ def select_hierarchy_edges(
     )
 
 
+def hierarchy_pairs(
+    edges: DataFrame, predicates: tuple[str, ...] = DEFAULT_PREDICATES
+) -> tuple[DataFrame, int]:
+    """The distinct hierarchy ``(subject, object)`` pairs, pinned, and
+    their count read from the pin's own job."""
+    return pin_count(
+        select_hierarchy_edges(edges, predicates).select("subject", "object").distinct()
+    )
+
+
 def direct_relations(
     edges: DataFrame,
     relevant: DataFrame,
@@ -146,9 +156,7 @@ def ancestor_closure(
     else path doubling, which raises ``RuntimeError`` past
     ``max_iterations`` rounds.
     """
-    hedges, n_hedges = pin_count(
-        select_hierarchy_edges(edges, predicates).select("subject", "object").distinct()
-    )
+    hedges, n_hedges = hierarchy_pairs(edges, predicates)
     if _local("ancestor_closure", n_hedges):
         return _closure_local(hedges, relevant, ontology)
     return _closure_doubling(hedges, n_hedges, relevant, ontology, max_iterations)
@@ -202,16 +210,24 @@ def _closure_local(hedges: DataFrame, relevant: DataFrame, ontology: str) -> Dat
 def _closure_frontier(hedges: DataFrame, relevant: DataFrame, ontology: str, max_iterations: int):
     """Semi-naive BFS over ``hedges`` from a reflexive seed (Q1):
     O(depth) rounds, each stepping only the pairs born in the last."""
-    reach = semi_naive_fixpoint(
-        relevant.select(F.col("id").alias("s"), F.col("id").alias("o")),
+    seed = relevant.select(F.col("id").alias("s"), F.col("id").alias("o"))
+    return _emit(_reach(seed, hedges, max_iterations, "ancestor_closure"), ontology)
+
+
+def _reach(seed: DataFrame, hedges: DataFrame, max_iterations: int, op_name: str) -> DataFrame:
+    """Pairs ``(s, o, born)``: the ``(s, o)`` seed pairs, extended by
+    whole ``hedges`` paths from each ``o``, on the shared fixpoint;
+    ``born`` is the fewest hops a pair needs past its seed. ``hedges``
+    (pinned ``(subject, object)``) broadcasts every round."""
+    return semi_naive_fixpoint(
+        seed,
         lambda f: f.join(F.broadcast(hedges), f["o"] == hedges["subject"]).select(
             f["s"], hedges["object"].alias("o")
         ),
         ["s", "o"],
         max_iterations=max_iterations,
-        op_name="ancestor_closure",
+        op_name=op_name,
     )
-    return _emit(reach, ontology)
 
 
 def _emit(pairs: DataFrame, ontology: str) -> DataFrame:
@@ -365,9 +381,7 @@ def incremental_closure_delete(
     # not being deleted must keep its hierarchy pair alive
     key = ["subject", "predicate", "object"]
     remaining = edges.join(F.broadcast(deleted_edges.select(*key)), key, "left_anti")
-    rem_h, n_rem = pin_count(
-        select_hierarchy_edges(remaining, predicates).select("subject", "object").distinct()
-    )
+    rem_h, n_rem = hierarchy_pairs(remaining, predicates)
     if _local("incremental_closure_delete", n_rem):
         return _closure_local(rem_h, relevant, ontology)
     old_h, _, hedges_side = _hedge_set(edges, predicates, broadcast_edges_max)

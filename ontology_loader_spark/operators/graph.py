@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.fixpoint import BORN, pin_count, semi_naive_fixpoint
+from ontology_loader_spark.operators.closure import hierarchy_pairs
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 SCALE = 10 ** 12
@@ -52,19 +54,12 @@ def pagerank(
     edge graph. Node domain = every edge endpoint. Output
     (node, rank) with rank in SCALE-units; ranks at iteration
     ``iters`` equal the unrolled SQL oracle value-for-value."""
-    e = (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    e, _ = hierarchy_pairs(edges, predicates)
+    nodes, n = pin_count(
         e.select(F.col("subject").alias("node"))
         .unionByName(e.select(F.col("object").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n = nodes.count()
     base = (SCALE * (DAMP_DEN - DAMP_NUM)) // (DAMP_DEN * n)
     deg = e.groupBy("subject").agg(F.count("*").alias("deg"))
 
@@ -295,7 +290,6 @@ FROM deg d LEFT JOIN per_node p ON p.node = d.node"""
 def term_depth(
     edges: DataFrame,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iter: int = 64,
 ) -> DataFrame:
     """Shortest hierarchy distance from each node to a root: ``(id,
     depth)`` with depth(root) = 0 and depth(x) = 1 + min over parents.
@@ -303,67 +297,33 @@ def term_depth(
     The semantic complement of the ancestor closure (which answers
     "which ancestors" — this answers "how far"): rollup level
     selection, depth-capped traversals, and depth-bucketed sampling
-    all key on it. BFS from the root frontier: each round joins the
-    child->parent edge set against the newly-settled frontier and
-    anti-joins already-settled nodes, so a node is settled at its
-    FIRST (minimal) distance — O(DAG height) rounds of one join +
-    one distinct each, ``localCheckpoint`` per round truncating
-    lineage (the ``operators/closure.py`` discipline). The edge set
-    broadcasts (ontology-bounded), the settled/frontier sets stay
-    distributed.
+    all key on it. BFS from the roots on the shared semi-naive
+    fixpoint: each round steps from the nodes settled in the last one
+    to their children, and a node is settled in the FIRST (minimal)
+    round that reaches it, which is the fixpoint's ``born``. The edge
+    set broadcasts (ontology-bounded). The round bound is the distinct
+    edge count plus one: a shortest path uses each edge at most once.
 
     Assumes the hierarchy is acyclic — run ``validate.cycle_members``
     first; a cycle's nodes have no root path, never enter the frontier,
-    and are simply absent from the output (both engines agree). The
-    ``max_iter`` bound exists only as a runaway stop: if the frontier
-    is STILL non-empty after ``max_iter`` rounds (a DAG deeper than
-    ``max_iter``), the function raises instead of silently dropping
-    the deep nodes that the unbounded recursive oracle would keep.
+    and are simply absent from the output (both engines agree).
     """
-    hedges = (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    subjects = hedges.select(F.col("subject").alias("id")).distinct()
-    objects = hedges.select(F.col("object").alias("id")).distinct()
+    hedges, n = hierarchy_pairs(edges, predicates)
     # roots: nodes that never appear as a child (no outgoing hierarchy
     # edge) — in the child->parent orientation, objects minus subjects
-    frontier = objects.join(subjects, "id", "left_anti").select(
-        "id", F.lit(0).cast("int").alias("depth")
-    ).localCheckpoint(eager=True)
-    settled = frontier
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = (
-            hedges.join(
-                frontier, hedges["object"] == frontier["id"], "inner"
-            )
-            .select(
-                hedges["subject"].alias("id"),
-                (frontier["depth"] + 1).cast("int").alias("depth"),
-            )
-            .groupBy("id")
-            .agg(F.min("depth").alias("depth"))
-        )
-        frontier = step.join(
-            settled.select("id"), "id", "left_anti"
-        ).localCheckpoint(eager=True)
-        settled = settled.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        # max_iter exhausted with the frontier still advancing: nodes
-        # deeper than max_iter would silently vanish from the output
-        # while the unbounded recursive oracle (term_depth_sql) keeps
-        # them — refuse rather than diverge on a deep hierarchy.
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"term_depth: hierarchy deeper than max_iter={max_iter} "
-                "(frontier still non-empty); raise max_iter — the "
-                "DuckDB oracle walk is unbounded and would disagree"
-            )
-    return settled
+    roots = hedges.select(F.col("object").alias("id")).join(
+        hedges.select(F.col("subject").alias("id")), "id", "left_anti"
+    )
+    settled = semi_naive_fixpoint(
+        roots,
+        lambda f: f.join(F.broadcast(hedges), f["id"] == hedges["object"]).select(
+            hedges["subject"].alias("id")
+        ),
+        ["id"],
+        max_iterations=n + 1,
+        op_name="term_depth",
+    )
+    return settled.withColumnRenamed(BORN, "depth")
 
 
 def term_depth_sql(predicates_sql: str) -> str:
@@ -443,14 +403,12 @@ def term_lca(
     anc = closure.select(
         "subject", F.col("object").alias("anc")
     ).localCheckpoint(eager=True)
-    p = pairs.select("a", "b").localCheckpoint(eager=True)
+    p, n_p = pin_count(pairs.select("a", "b"))
     if broadcast_pairs is None:
-        broadcast_pairs = p.count() <= max_broadcast_rows
-    dd = depths.select(
-        F.col("id").alias("anc"), F.col("depth").alias("adepth")
-    ).localCheckpoint(eager=True)
+        broadcast_pairs = n_p <= max_broadcast_rows
+    dd, n_dd = pin_count(depths.select(F.col("id").alias("anc"), F.col("depth").alias("adepth")))
     if broadcast_depths is None:
-        broadcast_depths = dd.count() <= max_broadcast_rows
+        broadcast_depths = n_dd <= max_broadcast_rows
 
     la = (
         anc.alias("c")
@@ -570,9 +528,9 @@ def term_ancestor_jaccard(
     anc = closure.select(
         "subject", F.col("object").alias("anc")
     ).localCheckpoint(eager=True)
-    p = pairs.select("a", "b").localCheckpoint(eager=True)
+    p, n_p = pin_count(pairs.select("a", "b"))
     if broadcast_pairs is None:
-        broadcast_pairs = p.count() <= max_broadcast_rows
+        broadcast_pairs = n_p <= max_broadcast_rows
 
     la = (
         anc.alias("c")
@@ -650,10 +608,7 @@ def kcore(
     must fail loudly, never silently diverge).
     """
     und = pairs.select("u", "v").localCheckpoint(eager=True)
-    alive = und.select(F.col("u").alias("node")).distinct().localCheckpoint(
-        eager=True
-    )
-    n_alive = alive.count()
+    alive, n_alive = pin_count(und.select(F.col("u").alias("node")).distinct())
     for _ in range(max_rounds):
         deg = (
             und.join(alive.hint("broadcast"), und["u"] == alive["node"], "left_semi")
@@ -665,12 +620,9 @@ def kcore(
             .groupBy("u")
             .agg(F.count("*").alias("degree"))
         )
-        survivors = (
-            deg.filter(F.col("degree") >= k)
-            .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=True)
+        survivors, n_next = pin_count(
+            deg.filter(F.col("degree") >= k).select(F.col("u").alias("node"))
         )
-        n_next = survivors.count()
         if n_next == n_alive:
             return (
                 deg.filter(F.col("degree") >= k)

@@ -23,7 +23,7 @@ family of derived tables next to the triples themselves —
 
 Scale shapes: reduction joins the (ontology-bounded) hierarchy pair
 set against its own reachability — the same cost class as the ancestor
-closure itself, iterated semi-naively with per-round localCheckpoint;
+closure itself, on the closure's semi-naive fixpoint;
 breadcrumbs follow a FUNCTIONAL min-parent map (one row per node per
 round, O(depth) rounds); predicate stats are one map-side-combinable
 groupBy; negative sampling is two broadcast-sized joins against the
@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.fixpoint import pin_count
+from ontology_loader_spark.operators.closure import _reach, hierarchy_pairs
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 #: Both the engine loop and the SQL oracles bound path length at the
@@ -49,69 +51,32 @@ from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 MAX_PATH_HOPS = 64
 
 
-def _hierarchy_pairs(
-    edges: DataFrame, predicates: tuple[str, ...]
-) -> DataFrame:
-    return (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject", "object")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-
 def transitive_reduction(
     edges: DataFrame,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iter: int = 64,
 ) -> DataFrame:
     """Hierarchy edges NOT implied by a longer path: ``(subject,
     object)`` kept iff no path of length >= 2 connects subject to
     object.
 
-    Semi-naive strict reachability (pair-set dedup terminates even on
-    cycles; a 2-cycle's edges are both redundant — each is implied by
-    the length-3 path through the other, identically in both engines),
+    Strict reachability on the closure's shared semi-naive fixpoint,
+    seeded with the edges (pair-set dedup terminates even on cycles; a
+    2-cycle's edges are both redundant — each is implied by the
+    length-3 path through the other, identically in both engines),
     then one join to flag edges with a (subject -> m -> ... -> object)
-    witness. Rounds are bounded by the longest shortest-path; the
-    guard raises rather than returning a wrong reduction if the graph
-    outlives ``max_iter`` (the ``term_depth`` discipline).
+    witness. The walk's round bound is the distinct edge count plus
+    one: a shortest path uses each edge at most once.
     """
-    hedges = _hierarchy_pairs(edges, predicates)
-    walk = hedges
-    frontier = hedges
-    for _ in range(max_iter):
-        frontier = (
-            frontier.alias("f")
-            .join(
-                hedges.alias("e"),
-                F.col("f.object") == F.col("e.subject"),
-            )
-            .select(
-                F.col("f.subject").alias("subject"),
-                F.col("e.object").alias("object"),
-            )
-            .distinct()
-            .join(walk, ["subject", "object"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            break
-        walk = walk.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        if not frontier.isEmpty():
-            raise RuntimeError(
-                f"transitive_reduction: reachability still growing after "
-                f"max_iter={max_iter} rounds; raise max_iter"
-            )
+    hedges, n = hierarchy_pairs(edges, predicates)
+    seed = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
+    walk = _reach(seed, hedges, n + 1, "transitive_reduction")
     # redundant (s, o): some edge s->m with m reaching o (path >= 2)
     redundant = (
         hedges.alias("e")
         .join(hedges.alias("m"), F.col("e.subject") == F.col("m.subject"))
         .join(
             walk.alias("w"),
-            (F.col("w.subject") == F.col("m.object"))
-            & (F.col("w.object") == F.col("e.object")),
+            (F.col("w.s") == F.col("m.object")) & (F.col("w.o") == F.col("e.object")),
             "left_semi",
         )
         .select(
@@ -168,7 +133,7 @@ def term_path_to_root(
     O(depth) rounds over one row per unfinished node; the parent map
     is ontology-bounded and broadcasts.
     """
-    hedges = _hierarchy_pairs(edges, predicates)
+    hedges, _ = hierarchy_pairs(edges, predicates)
     min_parent = (
         hedges.groupBy("subject")
         .agg(F.min("object").alias("parent"))
@@ -194,20 +159,18 @@ def term_path_to_root(
         )
         done = finished if done is None else done.unionByName(finished)
         done = done.localCheckpoint(eager=True)
-        active = (
+        active, n_active = pin_count(
             active.join(
                 F.broadcast(min_parent),
                 active["cur"] == min_parent["subject"],
-            )
-            .select(
+            ).select(
                 "id",
                 F.col("parent").alias("cur"),
                 F.concat_ws(">", "path", "parent").alias("path"),
                 (F.col("hops") + 1).cast("int").alias("hops"),
             )
-            .localCheckpoint(eager=True)
         )
-        if active.isEmpty():
+        if not n_active:
             break
     return done.select("id", F.col("cur").alias("root"), "hops", "path")
 
@@ -306,12 +269,9 @@ def negative_sampling(
     repo's cross-engine hash idiom (``operators/dedup.py``).
     """
     w = Window.orderBy("id")
-    universe = (
-        relevant.select("id")
-        .withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .localCheckpoint(eager=True)
+    universe, n = pin_count(
+        relevant.select("id").withColumn("rnk", F.row_number().over(w).cast("bigint"))
     )
-    n = universe.count()
     pick = (
         F.conv(
             F.substring(

@@ -21,10 +21,11 @@ Scale design:
   incoming edge — a node on a directed cycle always survives (every
   cycle node keeps in- and out-degree within the core), while a
   near-DAG collapses to its tiny cycle-relevant core in O(height)
-  cheap semi-joins over the *edge* set. Phase 2 runs the exact
-  non-reflexive transitive closure (semi-naive, same discipline as
-  ``operators/closure.py``) on the trimmed core only, and reports the
-  nodes that reach themselves. The expensive exact phase therefore
+  cheap semi-joins over the *edge* set, one pinned and counted action
+  a round. Phase 2 walks the non-reflexive reachability of the trimmed
+  core only, on the closure's shared semi-naive fixpoint
+  (``operators/closure.py::_reach``), and reports the nodes that reach
+  themselves. The expensive exact phase therefore
   touches |core| ~ |cycles + inter-cycle paths| pairs, not
   |terms| x depth.
 """
@@ -34,7 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontology_loader_spark.operators.closure import select_hierarchy_edges
+from ontology_loader_spark.fixpoint import pin_count
+from ontology_loader_spark.operators.closure import (
+    _reach,
+    hierarchy_pairs,
+    select_hierarchy_edges,
+)
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 
@@ -57,34 +63,25 @@ def dangling_edges(
     ).select("subject", "predicate", "object")
 
 
-def _trim_to_cycle_core(hedges: DataFrame, max_iter: int) -> DataFrame:
+def _trim_to_cycle_core(hedges: DataFrame, n: int) -> DataFrame:
     """Iteratively drop edges that cannot lie on (or between) cycles:
     an edge is kept only while its object has an outgoing edge and its
-    subject has an incoming edge. Fixpoint reached when the edge count
-    stops shrinking."""
-    # Round count: each round peels every current source/sink, so a
-    # dangling PATH of length L peels from both ends in ~L/2 rounds —
-    # bounded by the hierarchy height (tens) in any real ontology. A
-    # pathological deeper residue just stops trimming at max_iter and
-    # hands a larger (still correct) core to the exact phase: the trim
-    # is purely an optimization, never a correctness dependency.
-    core = hedges.localCheckpoint(eager=True)
-    n = core.count()
-    for _ in range(max_iter):
-        if n == 0:
-            break
+    subject has an incoming edge. ``hedges`` is pinned and ``n`` is its
+    row count; each round re-pins the core and reads its count from
+    that pin, until the count stops falling (each round peels every
+    current source and sink, so a dangling path of length L goes in
+    about L/2 rounds)."""
+    core = hedges
+    while n:
         subjects = core.select("subject").distinct()
         objects = core.select(F.col("object").alias("subject")).distinct()
-        core = (
+        core, n_next = pin_count(
             core.join(
                 F.broadcast(subjects.withColumnRenamed("subject", "object")),
                 "object",
                 "left_semi",
-            )
-            .join(F.broadcast(objects), "subject", "left_semi")
-            .localCheckpoint(eager=True)
+            ).join(F.broadcast(objects), "subject", "left_semi")
         )
-        n_next = core.count()
         if n_next == n:
             break
         n = n_next
@@ -94,49 +91,21 @@ def _trim_to_cycle_core(hedges: DataFrame, max_iter: int) -> DataFrame:
 def cycle_members(
     edges: DataFrame,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iter: int = 64,
 ) -> DataFrame:
     """Exact set of node ids on a directed cycle of the hierarchy
     graph: ``(id)`` rows, one per node with a non-empty path to
     itself.
 
-    Phase 1 trims to the cycle-relevant core; phase 2 computes the
-    non-reflexive closure of the core semi-naively (frontier join +
-    anti-join against reached, ``localCheckpoint`` per round — the
-    closure module's discipline) and keeps ``s = o`` pairs. Exactness
-    does not depend on the trim: trimming only removes edges that
-    provably lie on no cycle-reaching path. Raises ``RuntimeError``
-    when ``max_iter`` rounds end with pairs still growing (an n-node
-    cycle needs n + 1), never returning a partial set.
+    Phase 1 trims to the cycle-relevant core; phase 2 walks the core's
+    non-reflexive reachability on the shared fixpoint and keeps the
+    ``s = o`` pairs. Exactness does not depend on the trim: trimming
+    only removes edges that provably lie on no cycle-reaching path.
+    The walk's round bound is the distinct hierarchy-edge count plus
+    one: a shortest path uses each edge at most once, so only a bug
+    can reach it.
     """
-    core = _trim_to_cycle_core(
-        select_hierarchy_edges(edges, predicates)
-        .select("subject", "object")
-        .distinct(),
-        max_iter,
-    )
-    reached = core.select(
-        F.col("subject").alias("s"), F.col("object").alias("o")
-    ).localCheckpoint(eager=True)
-    frontier = reached
-    for _ in range(max_iter):
-        if frontier.isEmpty():
-            break
-        step = (
-            frontier.join(
-                F.broadcast(core), frontier["o"] == core["subject"], "inner"
-            )
-            .select(frontier["s"], core["object"].alias("o"))
-            .distinct()
-        )
-        frontier = step.join(
-            reached, ["s", "o"], "left_anti"
-        ).localCheckpoint(eager=True)
-        reached = reached.unionByName(frontier).localCheckpoint(eager=True)
-    else:
-        raise RuntimeError(f"cycle_members did not converge in {max_iter} iterations")
-    return (
-        reached.filter(F.col("s") == F.col("o"))
-        .select(F.col("s").alias("id"))
-        .distinct()
-    )
+    hedges, n = hierarchy_pairs(edges, predicates)
+    core = _trim_to_cycle_core(hedges, n)
+    seed = core.select(F.col("subject").alias("s"), F.col("object").alias("o"))
+    reach = _reach(seed, core, n + 1, "cycle_members")
+    return reach.filter(F.col("s") == F.col("o")).select(F.col("s").alias("id"))

@@ -37,9 +37,9 @@ from ontology_loader_spark.operators.closure import (
     _closure_local,
     _local,
     ancestor_closure,
+    hierarchy_pairs,
     incremental_closure_delete,
     incremental_closure_update,
-    select_hierarchy_edges,
 )
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
@@ -98,11 +98,7 @@ class StreamingClosureMaintainer:
             .filter("a AND NOT d")
             .select(*EDGE_KEY)
         )
-        hedges, n_hedges = pin_count(
-            select_hierarchy_edges(new_edges, self.predicates)
-            .select("subject", "object")
-            .distinct()
-        )
+        hedges, n_hedges = hierarchy_pairs(new_edges, self.predicates)
         if _local("StreamingClosureMaintainer", n_hedges):
             self.closure = _pin(_closure_local(hedges, self.relevant, self.ontology))
         else:

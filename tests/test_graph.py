@@ -118,3 +118,12 @@ def test_term_depth_min_over_parents_and_cycle_exclusion(spark):
     )
     got = {r["id"]: r["depth"] for r in term_depth(ed).collect()}
     assert got == {"r": 0, "a": 1, "b": 1, "c": 2}
+
+
+def test_term_depth_long_chain_returns_every_depth(spark):
+    from ontology_loader_spark.operators.graph import term_depth
+
+    # n70 -> ... -> n0: 70 hops, deeper than any fixed round cap
+    ed = _edges(spark, [(f"n{i + 1}", f"n{i}") for i in range(70)])
+    got = {r["id"]: r["depth"] for r in term_depth(ed).collect()}
+    assert got == {f"n{i}": i for i in range(71)}

@@ -13,6 +13,7 @@ from ontology_loader_spark.operators.materialize import (
     term_path_to_root,
     transitive_reduction,
 )
+from ontology_loader_spark.schemas import EDGE_SCHEMA
 
 
 def _edges(spark, rows, predicate="rdfs:subClassOf"):
@@ -46,10 +47,20 @@ def test_transitive_reduction_two_cycle_both_redundant(spark):
     assert transitive_reduction(ed).count() == 0
 
 
-def test_transitive_reduction_guard_raises(spark):
-    ed = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    with pytest.raises(RuntimeError, match="max_iter"):
-        transitive_reduction(ed, max_iter=1)
+def test_transitive_reduction_long_chain_returns_all(spark):
+    # 70 hops: deeper than any fixed round cap, no edge is implied
+    rows = [(f"n{i}", f"n{i + 1}") for i in range(70)]
+    got = {(r.subject, r.object) for r in transitive_reduction(_edges(spark, rows)).collect()}
+    assert got == set(rows)
+
+
+def test_transitive_reduction_on_edge_schema(spark):
+    # the package's own non-nullable edge schema, as an in-memory frame
+    rows = [("a", "rdfs:subClassOf", "b"), ("b", "rdfs:subClassOf", "c"),
+            ("c", "rdfs:subClassOf", "d"), ("a", "BFO:0000050", "c")]
+    ed = spark.createDataFrame(rows, EDGE_SCHEMA)
+    got = {(r.subject, r.object) for r in transitive_reduction(ed).collect()}
+    assert got == {("a", "b"), ("b", "c"), ("c", "d")}
 
 
 # ------------------------------------------------ path to root
