@@ -8,7 +8,7 @@ Reference semantics:
   definition/name→"", booleans→False; quirk Q10).
 - P2 root detection (``ontology_processor.py:61,108``):
   ``roots()`` materialized once, per-entity membership. Spark-first:
-  a **left-anti join** against the distinct subjects of hierarchy
+  a **left-anti join** against the subjects of hierarchy
   edges — a term is a root iff it has no outgoing edge with a
   hierarchy predicate.
 - P3 union of non-obsolete + obsolete scans
@@ -17,7 +17,7 @@ Reference semantics:
 
 Scale notes: the term dictionary is the *small* side everywhere (20k–5M
 rows vs 10^12 transcript turns), so root detection broadcasts the
-distinct-subject set; the class projection is a single
+hierarchy-edge subjects; the class projection is a single
 whole-stage-codegen'd select with zero extra joins — the reference's
 three point-lookups-per-entity (``ontology_processor.py:105,106,110``)
 cost nothing here because the dictionary row already carries them.
@@ -37,14 +37,11 @@ def root_ids(edges: DataFrame, term_dict: DataFrame,
     """P2 — ids of terms with no outgoing hierarchy edge.
 
     Reference: ``set(self.adapter.roots())`` (``ontology_processor.py:61``).
-    Implemented as a left-anti join: term ids minus distinct edge
-    subjects (restricted to hierarchy predicates).
+    Implemented as a left-anti join: term ids minus the broadcast edge
+    subjects (restricted to hierarchy predicates). A left-anti join
+    never multiplies rows, so the subjects need no distinct shuffle.
     """
-    subjects = (
-        edges.filter(F.col("predicate").isin(*predicates))
-        .select("subject")
-        .distinct()
-    )
+    subjects = edges.filter(F.col("predicate").isin(*predicates)).select("subject")
     return (
         term_dict.select("id")
         .join(F.broadcast(subjects), term_dict["id"] == subjects["subject"], "left_anti")

@@ -26,6 +26,20 @@ Iceberg catalog these three steps are three sequential ``MERGE INTO``
 statements against one pinned snapshot; here the sink layer
 (sinks/merge.py) applies the same algebra to parquet-backed state.
 
+Exchange plan — each state table is keyed and exchanged once:
+
+- classes: one ``groupBy("id")`` of the stored classes gives the doc
+  count (Q11) and the min-by-JSON representative, broadcast into one
+  diff join whose pin (``classified``) carries the change kind and the
+  M1 flag (incoming obsolete, stored once). The new state is the
+  stored rows left-joined to one broadcast of per-id flags (changed
+  ids dropped, M1 applied) plus the changed docs: no shuffle.
+- relations: one broadcast of the obsolete ids serves both M1
+  anti-joins; the valid incoming relations are pinned once, F2's
+  counts read from that pin's job through an ``Observation``; M3 is
+  one ``groupBy`` on (s,p,o) over the post-delete state and the valid
+  incoming rows, keeping the incoming row.
+
 Report rows reproduce quirk Q7 (class report row = [id] + all fields,
 so the id appears twice) at the sink (sinks/reports.py).
 """
@@ -33,9 +47,11 @@ so the id appears twice) at the sink (sinks/reports.py).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ontology_loader_spark.schemas import ONTOLOGY_CLASS_FIELDS
 
@@ -58,86 +74,85 @@ def obsolete_ids(incoming_classes: DataFrame) -> DataFrame:
     return incoming_classes.filter(F.col("is_obsolete")).select("id")
 
 
-def apply_obsolete_to_classes(class_state: DataFrame, obsolete: DataFrame) -> DataFrame:
-    """M1 class side: stored docs matching a unique obsolete id get
-    ``is_obsolete=true, relations=[]`` (``mongodb_loader.py:30-41``).
-
-    Quirk Q11: ids stored more than once are skipped (warning metric) —
-    enforced with a per-id count. The obsolete-id set is tiny relative
-    to state → broadcast.
-    """
-    dup_ids = (
-        class_state.groupBy("id").count().filter(F.col("count") > 1).select("id")
-    )
-    unique_obsolete = obsolete.join(dup_ids, "id", "left_anti")
-    flagged = F.broadcast(unique_obsolete.withColumn("obs_flag", F.lit(True)))
-    return (
-        class_state.join(flagged, "id", "left")
-        .withColumn(
-            "is_obsolete",
-            F.when(F.col("obs_flag"), F.lit(True)).otherwise(F.col("is_obsolete")),
-        )
-        .withColumn(
-            "relations",
-            F.when(
-                F.col("obs_flag"),
-                F.array().cast(
-                    "array<struct<subject:string,predicate:string,"
-                    "object:string,type:string>>"
-                ),
-            ).otherwise(F.col("relations")),
-        )
-        .drop("obs_flag")
-    )
+def _after_m1(field: str, value: Column, flag: Column, schema: StructType) -> Column:
+    """M1 class side on one stored field (``mongodb_loader.py:30-41``):
+    ``flag`` set → ``is_obsolete=true, relations=[]``."""
+    if field == "relations":
+        return F.when(flag, F.array().cast(schema[field].dataType)).otherwise(value)
+    return F.when(flag, F.lit(True)).otherwise(value) if field == "is_obsolete" else value
 
 
 def delete_obsolete_relations(relation_state: DataFrame, obsolete: DataFrame) -> DataFrame:
     """M1 relation side: drop stored relations whose subject OR object
-    is obsolete (``mongodb_loader.py:43`` — the ``$or $in`` delete),
-    expressed as two broadcast left-anti joins."""
-    obs = F.broadcast(obsolete)
+    is obsolete (``mongodb_loader.py:43`` — the ``$or $in`` delete):
+    two left-anti joins reading ONE broadcast exchange of the ids."""
+    obs = F.broadcast(obsolete.select(F.col("id").alias("obsolete_id")))
     return (
-        relation_state.join(obs.withColumnRenamed("id", "subject"), "subject", "left_anti")
-        .join(obs.withColumnRenamed("id", "object"), "object", "left_anti")
-        .select(*relation_state.columns)
+        relation_state.join(obs, F.col("subject") == F.col("obsolete_id"), "left_anti")
+        .join(obs, F.col("object") == F.col("obsolete_id"), "left_anti")
     )
 
 
-def _any_field_differs(
-    incoming_cols: list[str], state_cols: list[str]
-) -> F.Column:
+def _any_field_differs(incoming_cols: list[str], stored: Callable[[str], Column]) -> Column:
     """Q9 change predicate: OR over negated null-safe equality of every
     field of the INCOMING frame — runtime introspection, the Spark twin
     of the reference's ``fields(OntologyClass)``
     (``mongodb_loader.py:84-86,223``), so a schema evolution (new
     column in the class schema) participates in the diff with no code
-    edit here. A field the stored state does not carry yet compares
-    against NULL — any incoming non-null value routes the row to
-    ``update``, exactly what a store whose documents predate the field
-    would report."""
+    edit here. ``stored(field)`` is the stored value: NULL for a field
+    the state does not carry yet, so any incoming non-null value routes
+    to ``update``, as a store whose documents predate the field would."""
     pred = F.lit(False)
     for field in incoming_cols:
-        if field == "id":
-            continue
-        st_val = (
-            F.col(f"st.{field}") if field in state_cols
-            else F.lit(None)
-        )
-        pred = pred | ~F.col(f"inc.{field}").eqNullSafe(st_val)
+        if field != "id":
+            pred = pred | ~F.col(f"inc.{field}").eqNullSafe(stored(field))
     return pred
 
 
-def _one_doc_per_id(state: DataFrame) -> DataFrame:
-    """The reference diffs against ``rows[0]`` of the store lookup
-    (``mongodb_loader.py:80``); 'first' is ill-defined distributed, so
-    we pick a deterministic representative per id (min by JSON render)
-    — duplicate ids are a store anomaly (Q11), not a normal state."""
+def _docs_by_id(state: DataFrame) -> DataFrame:
+    """One ``groupBy("id")``: ``n_docs`` (Q11 — duplicate ids are a
+    store anomaly) and a representative doc. The reference diffs
+    against ``rows[0]`` (``mongodb_loader.py:80``); 'first' is
+    ill-defined distributed, so we pick the min by JSON render."""
     cols = state.columns
     key = F.to_json(F.struct(*cols))
     return (
         state.groupBy("id")
-        .agg(F.min_by(F.struct(*[c for c in cols if c != "id"]), key).alias("doc"))
-        .select("id", "doc.*")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min_by(F.struct(*[c for c in cols if c != "id"]), key).alias("doc"),
+        )
+        .select("id", "n_docs", "doc.*")
+    )
+
+
+def _classify(incoming: DataFrame, class_state: DataFrame, m1: bool) -> DataFrame:
+    """The diff join of :func:`classify_class_changes` and
+    :func:`reconcile`. With ``m1`` the stored side is read post-M1
+    (flag: incoming obsolete, stored exactly once), so the pre-M1
+    state is grouped once for both steps."""
+    inc = incoming.alias("inc")
+    # class sets are dictionary-bounded (≤ millions of rows at any
+    # corpus scale) — broadcast the state side so the CDC join never
+    # sort-merges; post-aggregation stats would otherwise hide this
+    # from the planner
+    st = F.broadcast(_docs_by_id(class_state)).alias("st")
+    joined = inc.join(st, F.col("inc.id") == F.col("st.id"), "left")
+    flag = F.coalesce(F.col("inc.is_obsolete") & (F.col("st.n_docs") == 1), F.lit(False))
+    flag = flag if m1 else F.lit(False)
+
+    def stored(field: str) -> Column:
+        if field not in class_state.columns:
+            return F.lit(None)
+        return _after_m1(field, F.col(f"st.{field}"), flag, class_state.schema)
+
+    return joined.select(
+        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns],
+        F.when(F.col("st.id").isNull(), F.lit("insert"))
+        .when(_any_field_differs(incoming.columns, stored), F.lit("update"))
+        .otherwise(F.lit("unchanged"))
+        .alias("change_kind"),
+        flag.alias("m1"),
     )
 
 
@@ -145,84 +160,84 @@ def classify_class_changes(incoming: DataFrame, class_state: DataFrame) -> DataF
     """M2 routing: left-join incoming classes against (post-M1) state
     and tag each row ``insert`` / ``update`` / ``unchanged``.
 
-    Returns the incoming columns plus ``change_kind``. The state side is
-    keyed on id; on a real store this join is the source side of a
-    single ``MERGE INTO`` (SURVEY.md §2.1 M2).
+    Returns the incoming columns plus ``change_kind`` and ``m1``
+    (false: the state passed in is post-M1). On a real store this join
+    is the source side of a single ``MERGE INTO`` (SURVEY.md §2.1 M2).
     """
-    inc = incoming.alias("inc")
-    # class sets are dictionary-bounded (≤ millions of rows at any
-    # corpus scale) — broadcast the state side so the CDC join never
-    # sort-merges; post-aggregation stats would otherwise hide this
-    # from the planner
-    st = F.broadcast(_one_doc_per_id(class_state)).alias("st")
-    joined = inc.join(st, F.col("inc.id") == F.col("st.id"), "left")
-    return joined.select(
-        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns],
-        F.when(F.col("st.id").isNull(), F.lit("insert"))
-        .when(
-            _any_field_differs(incoming.columns, class_state.columns),
-            F.lit("update"),
-        )
-        .otherwise(F.lit("unchanged"))
-        .alias("change_kind"),
-    )
+    return _classify(incoming, class_state, m1=False)
 
 
 def apply_class_upserts(class_state: DataFrame, classified: DataFrame) -> DataFrame:
     """M2 apply: state rows not in incoming stay; incoming inserts and
-    updates replace/extend. (Unchanged rows keep the stored doc —
-    identical by definition.) Schema evolution is symmetric on the
-    MERGED column set: a column only the incoming frame carries is
-    backfilled NULL on the kept rows (adding a field), and a column
-    only the stored state carries SURVIVES on documents this batch
-    never touched — kept rows keep their stored value, while
-    replaced/inserted docs carry NULL for it (the reference's upsert
-    replaces the document wholesale, ``mongodb_loader.py:223``)."""
-    incoming_cols = [c for c in classified.columns if c != "change_kind"]
-    changed = classified.filter(F.col("change_kind") != "unchanged").select(*incoming_cols)
+    updates replace/extend; unchanged rows keep the stored doc. The
+    stored rows are left-joined to ONE broadcast of ``classified``'s
+    per-id flags: changed ids dropped, ``m1`` rows get M1 — no M1 pass
+    of its own, no shuffle.
+
+    Schema evolution is symmetric on the MERGED column set: a column
+    only the incoming frame carries is backfilled NULL on the kept rows,
+    and a column only the stored state carries SURVIVES on documents
+    this batch never touched, while replaced/inserted docs carry NULL
+    for it (the reference's upsert replaces the document wholesale,
+    ``mongodb_loader.py:223``)."""
+    incoming_cols = [c for c in classified.columns if c not in ("change_kind", "m1")]
+    is_changed = F.col("change_kind") != "unchanged"
+    changed = classified.filter(is_changed).select(*incoming_cols)
+    flags = F.broadcast(
+        classified.filter(is_changed | F.col("m1")).select(
+            F.col("id").alias("flag_id"),
+            is_changed.alias("flag_changed"),
+            F.col("m1").alias("flag_m1"),
+        )
+    )
+    kept = (
+        class_state.join(flags, F.col("id") == F.col("flag_id"), "left")
+        .filter(~F.coalesce(F.col("flag_changed"), F.lit(False)))
+        .select(*[
+            _after_m1(c, F.col(c), F.col("flag_m1"), class_state.schema).alias(c)
+            for c in class_state.columns
+        ])
+    )
     # incoming-only columns: NULL on kept state rows
     for c in incoming_cols:
         if c not in class_state.columns:
-            class_state = class_state.withColumn(
-                c, F.lit(None).cast(classified.schema[c].dataType)
-            )
+            kept = kept.withColumn(c, F.lit(None).cast(classified.schema[c].dataType))
     # state-only columns: kept rows retain them; changed docs are
     # whole-document replacements and carry NULL
     state_only = [c for c in class_state.columns if c not in incoming_cols]
     for c in state_only:
-        changed = changed.withColumn(
-            c, F.lit(None).cast(class_state.schema[c].dataType)
-        )
+        changed = changed.withColumn(c, F.lit(None).cast(class_state.schema[c].dataType))
     merged_cols = incoming_cols + state_only
-    kept = class_state.join(changed.select("id"), "id", "left_anti").select(*merged_cols)
-    return kept.unionByName(changed.select(*merged_cols))
+    return kept.select(*merged_cols).unionByName(changed.select(*merged_cols))
 
 
-def valid_relations(incoming_relations: DataFrame) -> DataFrame:
-    """F2 — drop relations with null/empty subject, predicate, or
-    object (``mongodb_loader.py:58-60``)."""
+def _valid_relation() -> Column:
+    """F2 — subject, predicate and object all non-null and non-empty
+    (``mongodb_loader.py:58-60``); never NULL itself."""
     cond = F.lit(True)
     for c in ("subject", "predicate", "object"):
         cond = cond & F.col(c).isNotNull() & (F.col(c) != "")
-    return incoming_relations.filter(cond)
+    return cond
 
 
 def apply_relation_upserts(relation_state: DataFrame, incoming: DataFrame) -> DataFrame:
     """M3 apply: upsert keyed (s,p,o) — incoming wins, state rows with
     no incoming match survive; end state distinct on the key
-    (``mongodb_loader.py:64``)."""
-    inc = incoming.dropDuplicates(["subject", "predicate", "object"])
-    # both sides are relation-set-scale: shuffle-hash (sorts neither
-    # side; the build side is one shuffle partition of the incoming
-    # key set) beats a sort-merge here, and AQE still downgrades to
-    # broadcast when a side turns out tiny (e.g. first-load empty
-    # prior)
-    kept = relation_state.join(
-        inc.select("subject", "predicate", "object").hint("shuffle_hash"),
-        ["subject", "predicate", "object"],
-        "left_anti",
+    (``mongodb_loader.py:64``). One ``groupBy`` on the key over state
+    rows tagged 0 and incoming rows tagged 1 keeps the max (tag, row):
+    the incoming row, the max one among duplicates (deterministic)."""
+    key = ["subject", "predicate", "object"]
+    rest = [c for c in incoming.columns if c not in key]
+
+    def tagged(df: DataFrame, tag: int) -> DataFrame:
+        return df.select(*key, F.struct(F.lit(tag).alias("tag"), *rest).alias("row"))
+
+    return (
+        tagged(relation_state, 0).unionByName(tagged(incoming, 1))
+        .groupBy(*key)
+        .agg(F.max("row").alias("row"))
+        .select(*[F.col(c) if c in key else F.col(f"row.{c}") for c in incoming.columns])
     )
-    return kept.select(*inc.columns).unionByName(inc)
 
 
 def reconcile(
@@ -232,67 +247,52 @@ def reconcile(
     relation_state: DataFrame,
     assume_unique_ids: bool = False,
 ) -> ReconcileResult:
-    """Full Q5-ordered reconciliation: M1 → M2 → M3.
+    """Full Q5-ordered reconciliation: M1 → M2 → M3, one keyed pass
+    per table (see the module docstring for the exchange plan).
 
     All inputs are DataFrames over one pinned snapshot of prior state;
     outputs are the new state plus the three CDC reports
-    (``mongodb_loader.py:246-250``).
+    (``mongodb_loader.py:246-250``). Two pins: ``classified`` (the
+    incoming classes with change kind and M1 flag) and the valid
+    incoming relations, whose pin yields F2's counts through an
+    ``Observation`` — no count job of its own.
 
-    Duplicate ids in ``incoming_classes`` are collapsed to one
-    deterministic representative per id first: the reference's
-    sequential per-document upsert (``filter_fields=['id']``) converges
-    to a single stored doc per id, and which duplicate "wins" is an
-    iteration-order accident there — distributed execution has no such
-    order, so we pin the min-by-JSON representative instead. The
-    dedup is one wide shuffle of full class docs — callers whose
-    producer guarantees unique ids (the extraction path builds classes
-    with a groupBy on id) pass ``assume_unique_ids=True`` to skip it.
+    Duplicate incoming ids collapse to one min-by-JSON representative
+    first: the reference's sequential per-id upsert converges to one
+    doc, and which duplicate wins there is an iteration-order accident.
+    That dedup is a wide shuffle of full docs — callers whose producer
+    guarantees unique ids (extraction groups by id) pass
+    ``assume_unique_ids=True`` to skip it.
     """
     if not assume_unique_ids:
-        incoming_classes = _one_doc_per_id(incoming_classes)
-    # pinned once: the obsolete ids and the M2 diff both read this pin
-    incoming_classes = incoming_classes.localCheckpoint(eager=True)
-    obs = obsolete_ids(incoming_classes)
+        incoming_classes = _docs_by_id(incoming_classes).drop("n_docs")
+    # Steps 1.1 + 1.2 — M1 and M2 (mongodb_loader.py:225-235) in one
+    # diff join against the post-M1 stored side; the pin carries every
+    # incoming column, so the obsolete ids are read from it too
+    classified = _classify(incoming_classes, class_state, m1=True).localCheckpoint(eager=True)
 
-    # Step 1.1 — M1 (mongodb_loader.py:225-227)
-    state_after_obsolete = apply_obsolete_to_classes(class_state, obs)
-    relations_after_delete = delete_obsolete_relations(relation_state, obs)
-
-    # Step 1.2 — M2 (mongodb_loader.py:229-235); diffs are computed
-    # against the post-M1 state, matching the live-collection reads.
-    classified = classify_class_changes(incoming_classes, state_after_obsolete)
-    classified = classified.localCheckpoint(eager=True)
-    new_class_state = apply_class_upserts(state_after_obsolete, classified)
-
-    updates_report = classified.filter(F.col("change_kind") == "update").select(
-        F.col("id"), *[F.col(c).alias(f"f_{c}") for c in ONTOLOGY_CLASS_FIELDS]
-    )
-    inserts_report = classified.filter(F.col("change_kind") == "insert").select(
-        F.col("id"), *[F.col(c).alias(f"f_{c}") for c in ONTOLOGY_CLASS_FIELDS]
-    )
+    def report(kind: str) -> DataFrame:
+        return classified.filter(F.col("change_kind") == kind).select(
+            F.col("id"), *[F.col(c).alias(f"f_{c}") for c in ONTOLOGY_CLASS_FIELDS]
+        )
 
     # Step 2 — M3 (mongodb_loader.py:237-241): runs AFTER the obsolete
     # delete, so incoming relations referencing obsolete terms are
-    # re-inserted (Q5 delete-then-reinsert end-state).
-    valid = valid_relations(incoming_relations)
-    # F2 side-output in ONE pass (separate counts would re-derive the
-    # whole closure bag twice)
-    valid_cond = F.lit(True)
-    for c in ("subject", "predicate", "object"):
-        valid_cond = valid_cond & F.col(c).isNotNull() & (F.col(c) != "")
-    stats = incoming_relations.agg(
-        F.count("*").alias("n"),
-        F.sum(valid_cond.cast("int")).alias("n_valid"),
-    ).first()
-    invalid_count = int((stats["n"] or 0) - (stats["n_valid"] or 0))
-    new_relation_state = apply_relation_upserts(relations_after_delete, valid)
-    relation_report = valid.select("subject", "predicate", "object")
+    # re-inserted (Q5 delete-then-reinsert end-state)
+    f2 = Observation()
+    valid = (
+        incoming_relations.observe(f2, F.count(F.lit(1)).alias("n"),
+                                   F.count(F.when(_valid_relation(), 1)).alias("n_valid"))
+        .filter(_valid_relation())
+        .localCheckpoint(eager=True)
+    )
+    after_delete = delete_obsolete_relations(relation_state, obsolete_ids(classified))
 
     return ReconcileResult(
-        class_state=new_class_state,
-        relation_state=new_relation_state,
-        class_updates_report=updates_report,
-        class_inserts_report=inserts_report,
-        relation_inserts_report=relation_report,
-        invalid_relation_count=invalid_count,
+        class_state=apply_class_upserts(class_state, classified),
+        relation_state=apply_relation_upserts(after_delete, valid),
+        class_updates_report=report("update"),
+        class_inserts_report=report("insert"),
+        relation_inserts_report=valid.select("subject", "predicate", "object"),
+        invalid_relation_count=f2.get["n"] - f2.get["n_valid"],
     )

@@ -43,10 +43,12 @@ def attach_relations(classes: DataFrame, all_relations: DataFrame) -> DataFrame:
     The reference appends *bag* occurrences but closure rows are
     pre-deduped per subject (Q4) and direct edges rarely repeat; we
     match the stored end-state by collecting the distinct (s,p,o,type)
-    rows per subject, sorted for cross-engine determinism.
+    rows per subject, sorted for cross-engine determinism. One
+    exchange on ``subject`` serves both the (s,p,o) dedup and the
+    per-subject aggregation.
     """
     agg = (
-        distinct_relations(all_relations)
+        distinct_relations(all_relations.repartition("subject"))
         .groupBy("subject")
         .agg(
             F.sort_array(

@@ -5,6 +5,12 @@ sorted-row hashes. Catches batch-boundary-dependent UDFs, partition-
 dependent sampling, and accumulation-order-dependent doubles — the
 failure modes that make a job's OUTPUT depend on cluster size.
 
+Each level runs in its own child process with its own Spark session
+(a second session in one Python process breaks the first one's
+accumulator server), and returns its hashes to the parent. The
+streaming fixtures are staged once, in a child of their own, and both
+levels replay the same files.
+
 Writes BENCH/determinism.md. Usage:
     python scripts/check_parallelism_determinism.py [lo] [hi] [sf_dir]
 (defaults: 2, 8, /root/testdata/sf0.01)
@@ -13,9 +19,12 @@ Writes BENCH/determinism.md. Usage:
 from __future__ import annotations
 
 import hashlib
+import shutil
 import sys
 import tempfile
+from concurrent.futures import ProcessPoolExecutor
 from datetime import datetime, timezone
+from multiprocessing import get_context
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -61,51 +70,73 @@ PROBE_QUERIES = [
 ]
 
 
-_STAGED: dict = {}
+def stage_fixtures(sf_dir: str) -> dict[str, str]:
+    """Stage the streaming sources both levels replay, once:
+
+    - ``events``: FileStreamSource needs a directory, so the single-file
+      events table becomes a multi-file, ts-RANGE-ordered copy (part-00000
+      = earliest window, one file per trigger). The streaming as-of
+      contract is batch equality under ts-ordered delivery
+      (streaming/stateful.py::_asof_advance), so the replay must be an
+      ordered event log; what still varies between levels is exactly
+      what the probe is for — Arrow batch boundaries, shuffle width, and
+      state partition count.
+    - ``transcripts``: derived transcripts as 6 conv-range parts. Unlike
+      the as-of twin, conversation stats carry NO delivery-order
+      contract — every emission is the batch answer over whatever
+      arrived — so any split works; staging it once makes both levels
+      read the identical one.
+
+    Returns the two source directories."""
+    import glob
+    import os
+    import time
+
+    from ontology_loader_spark.inputs import derive
+    from ontology_loader_spark.session import get_spark
+
+    spark = get_spark("determinism-stage", master="local[2]",
+                      extra_confs={"spark.ui.enabled": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    events = tempfile.mkdtemp(prefix="det_events_src_") + "/src"
+    (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .repartitionByRange(8, "ts", "event_id")
+        .sortWithinPartitions("ts", "event_id")
+        .write.mode("overwrite")
+        .parquet(events)
+    )
+    # FileStreamSource orders pending files by modification time: pin
+    # ascending mtimes on the range-ordered parts so the replay sequence
+    # is deterministic (ties would leave it to listing accidents)
+    base = time.time() - 1000
+    for i, f in enumerate(sorted(glob.glob(f"{events}/part-*.parquet"))):
+        os.utime(f, (base + i, base + i))
+    transcripts = tempfile.mkdtemp(prefix="det_conv_src_") + "/src"
+    (
+        derive.derive_transcripts(spark, sf_dir)
+        .repartitionByRange(6, "conv_id", "turn_idx", "text")
+        .sortWithinPartitions("conv_id", "turn_idx", "text")
+        .write.mode("overwrite")
+        .parquet(transcripts)
+    )
+    spark.stop()
+    return {"events": events, "transcripts": transcripts}
 
 
-def _stage_events(spark, sf_dir: str, ckpt: str):
-    """FileStreamSource needs a directory: stage the single-file events
-    table as a multi-file, ts-RANGE-ordered copy, ONCE per process —
-    both parallelism levels replay the identical micro-batch sequence
-    (part-00000 = earliest window, one file per trigger). The streaming
-    as-of contract is batch equality under ts-ordered delivery
-    (streaming/stateful.py::_asof_advance), so the replay must be an
-    ordered event log; what still varies between levels is exactly what
-    the probe is for — Arrow batch boundaries, shuffle width, and state
-    partition count."""
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if sf_dir not in _STAGED:
-        src = tempfile.mkdtemp(prefix="det_events_src_") + "/src"
-        (
-            batch.repartitionByRange(8, "ts", "event_id")
-            .sortWithinPartitions("ts", "event_id")
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        # FileStreamSource orders pending files by modification time:
-        # pin ascending mtimes on the range-ordered parts so the replay
-        # sequence is deterministic (ties would leave it to listing
-        # accidents)
-        import glob
-        import os
-        import time as _time
-
-        base = _time.time() - 1000
-        for i, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
-            os.utime(f, (base + i, base + i))
-        _STAGED[sf_dir] = src
+def _replay(spark, src: str):
+    """One staged source as a file stream, one file per trigger."""
     return (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_STAGED[sf_dir])
+        .parquet(src)
     )
 
 
-def _stream_asof(spark, sf_dir: str, ckpt: str):
+def _stream_asof(spark, sf_dir: str, staged: dict, ckpt: str):
     from ontology_loader_spark.streaming.stateful import asof_join_stream
 
-    stream = _stage_events(spark, sf_dir, ckpt)
+    stream = _replay(spark, staged["events"])
     name = f"asof_probe_{abs(hash(ckpt)) % 10**8}"
     q = (
         asof_join_stream(stream)
@@ -121,13 +152,13 @@ def _stream_asof(spark, sf_dir: str, ckpt: str):
     return spark.sql(f"select * from {name}")
 
 
-def _stream_winsor(spark, sf_dir: str, ckpt: str):
+def _stream_winsor(spark, sf_dir: str, staged: dict, ckpt: str):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from ontology_loader_spark.streaming.stateful import winsorized_stats_stream
 
-    stream = _stage_events(spark, sf_dir, ckpt)
+    stream = _replay(spark, staged["events"])
     name = f"winsor_probe_{abs(hash(ckpt)) % 10**8}"
     q = (
         winsorized_stats_stream(stream)
@@ -150,35 +181,7 @@ def _stream_winsor(spark, sf_dir: str, ckpt: str):
     )
 
 
-def _stage_transcripts(spark, sf_dir: str):
-    """Stage derived transcripts as a deterministic multi-file source
-    (6 conv-range parts) shared by both parallelism levels. Unlike the
-    as-of twin, conversation stats carry NO delivery-order contract —
-    every emission is the batch answer over whatever arrived — so any
-    identical file split works; range-by-(conv_id, turn_idx, text)
-    makes the split itself parallelism-independent."""
-    key = ("transcripts", sf_dir)
-    if key not in _STAGED:
-        from ontology_loader_spark.inputs import derive
-
-        src = tempfile.mkdtemp(prefix="det_conv_src_") + "/src"
-        (
-            derive.derive_transcripts(spark, sf_dir)
-            .repartitionByRange(6, "conv_id", "turn_idx", "text")
-            .sortWithinPartitions("conv_id", "turn_idx", "text")
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        _STAGED[key] = (src, spark.read.parquet(src).schema)
-    src, schema = _STAGED[key]
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-
-def _stream_conv_stats(spark, sf_dir: str, ckpt: str):
+def _stream_conv_stats(spark, sf_dir: str, staged: dict, ckpt: str):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -186,7 +189,7 @@ def _stream_conv_stats(spark, sf_dir: str, ckpt: str):
         conversation_stats_stream,
     )
 
-    stream = _stage_transcripts(spark, sf_dir)
+    stream = _replay(spark, staged["transcripts"])
     name = f"convstats_probe_{abs(hash(ckpt)) % 10**8}"
     q = (
         conversation_stats_stream(stream)
@@ -211,7 +214,7 @@ def _stream_conv_stats(spark, sf_dir: str, ckpt: str):
 # streaming twins: batch-boundary-sensitive state transitions; the
 # emitted END STATE must be identical at any parallelism (the same
 # two-cluster-size criterion as the batch probes)
-def _stream_edge_cdc_replay(spark, sf_dir: str, ckpt: str):
+def _stream_edge_cdc_replay(spark, sf_dir: str, staged: dict, ckpt: str):
     """The one remaining order-sensitive streaming composite: the
     4-batch edge-CDC replay's FINAL closure must be bit-identical at
     any parallelism (adds, duplicate replays, delete cones and re-adds
@@ -251,7 +254,7 @@ STREAM_PROBES = {
 }
 
 
-def run_level(cpus: int, sf_dir: str, names: list[str]) -> dict[str, str]:
+def run_level(cpus: int, sf_dir: str, staged: dict, names: list[str]) -> dict[str, str]:
     from ontology_loader_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -280,16 +283,25 @@ def run_level(cpus: int, sf_dir: str, names: list[str]) -> dict[str, str]:
             h.update(b"\n")
         return f"{len(rows)}:{h.hexdigest()}"
 
+    # the stream checkpoints of this level, removed when it ends
+    ckpt_root = tempfile.mkdtemp(prefix=f"det_level_{cpus}_")
     for name in names:
         if name in STREAM_PROBES:
-            ckpt = tempfile.mkdtemp(prefix=f"det_{name}_{cpus}_")
-            df = STREAM_PROBES[name](spark, sf_dir, ckpt)
+            ckpt = tempfile.mkdtemp(prefix=f"{name}_", dir=ckpt_root)
+            df = STREAM_PROBES[name](spark, sf_dir, staged, ckpt)
         else:
             df = qs[name](spark, sf_dir)
         out[name] = _hash(df)
         print(f"  local[{cpus}] {name}: {out[name][:24]}...", file=sys.stderr)
     spark.stop()
+    shutil.rmtree(ckpt_root, ignore_errors=True)
     return out
+
+
+def in_child(fn, *args):
+    """``fn(*args)`` in a fresh spawned process; returns its result."""
+    with ProcessPoolExecutor(1, mp_context=get_context("spawn")) as pool:
+        return pool.submit(fn, *args).result()
 
 
 def main() -> None:
@@ -298,8 +310,13 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
 
     probes = PROBE_QUERIES + list(STREAM_PROBES)
-    a = run_level(lo, sf_dir, probes)
-    b = run_level(hi, sf_dir, probes)
+    staged = in_child(stage_fixtures, sf_dir)
+    try:
+        a = in_child(run_level, lo, sf_dir, staged, probes)
+        b = in_child(run_level, hi, sf_dir, staged, probes)
+    finally:
+        for src in staged.values():
+            shutil.rmtree(Path(src).parent, ignore_errors=True)
     mismatches = [q for q in probes if a[q] != b[q]]
 
     lines = [
