@@ -33,7 +33,6 @@ pair, so no salting is needed. Nothing is collected.
 
 from __future__ import annotations
 
-import logging
 from collections import defaultdict
 
 import pandas as pd
@@ -42,21 +41,17 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.curie import matches_ontology
-from ontology_loader_spark.partitioning import state_partitions
+from ontology_loader_spark.partitioning import (
+    fits,
+    join_side,
+    record_decision,
+    state_partitions,
+)
 from ontology_loader_spark.schemas import (
     CLOSURE_PREDICATE,
     DEFAULT_PREDICATES,
     ONTOLOGY_RELATION_TYPE,
 )
-
-# Broadcast ceiling for an ontology-closure pair set (|terms| × depth
-# pairs): the doubling join here and mention_ancestor_triples in
-# pipeline.py. Small/mid ontologies (GO, ENVO: ≤~100k terms) sit far
-# under it; NCBITaxon-scale closures (~2.5M terms × depth 20-30 →
-# 50-75M pairs, multi-GB serialized) blow past Spark's broadcast
-# ceiling and must shuffle instead. Same measured auto-dispatch recipe
-# as operators/dedup.py::BROADCAST_PAIRS_MAX.
-BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
 
 # Hierarchy edges up to which a closure is solved in one task
 # (_closure_local). DAG k -> k//2 (+ k//3 if k % 4 == 3), pinned, local[4]:
@@ -64,8 +59,6 @@ BROADCAST_CLOSURE_PAIRS_MAX = 2_000_000
 # 200k (5.7M pairs) 15.1 s, 182 MB vs 156 s. Not a crossover: 200k is the
 # largest size tried and the task's cost grows with pairs; above, unverified.
 LOCAL_CLOSURE_EDGES_MAX = 200_000
-
-log = logging.getLogger(__name__)
 
 
 def relevant_entities(term_dict: DataFrame, ontology: str) -> DataFrame:
@@ -163,13 +156,10 @@ def ancestor_closure(
 
 
 def _local(op_name: str, n: int) -> bool:
-    """The measured dispatch, logged: solve ``n`` edges in one task?"""
-    ceiling = LOCAL_CLOSURE_EDGES_MAX
-    choice = "local" if n <= ceiling else "distributed"
-    log.debug("%s: %d hierarchy edges, ceiling %d -> %s", op_name, n, ceiling, choice,
-              extra={"op_name": op_name, "measured": n, "threshold": ceiling,
-                     "choice": choice})
-    return choice == "local"
+    """The measured dispatch, recorded: solve ``n`` edges in one task?"""
+    local = n <= LOCAL_CLOSURE_EDGES_MAX
+    record_decision(op_name, n, LOCAL_CLOSURE_EDGES_MAX, "local" if local else "distributed")
+    return local
 
 
 def _closure_local(hedges: DataFrame, relevant: DataFrame, ontology: str) -> DataFrame:
@@ -241,15 +231,11 @@ def _emit(pairs: DataFrame, ontology: str) -> DataFrame:
     )
 
 
-def _hedge_set(edges: DataFrame, predicates, broadcast_edges_max: int):
+def _hedge_set(edges: DataFrame, predicates) -> tuple[DataFrame, int]:
     """Pinned hierarchy ``(subject, object)`` pairs (duplicates are
-    absorbed by the fixpoint's reduction and the local DFS), their
-    count, and the side every round joins them as: broadcast under
-    ``broadcast_edges_max`` rows, else a plain shuffle join (AQE)."""
-    hedges, n = pin_count(
-        select_hierarchy_edges(edges, predicates).select("subject", "object")
-    )
-    return hedges, n, F.broadcast(hedges) if n <= broadcast_edges_max else hedges
+    absorbed by the fixpoint's reduction and the local DFS) and their
+    count."""
+    return pin_count(select_hierarchy_edges(edges, predicates).select("subject", "object"))
 
 
 def incremental_closure_update(
@@ -260,7 +246,6 @@ def incremental_closure_update(
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
     max_iterations: int = 64,
-    broadcast_edges_max: int = 5_000_000,
 ) -> DataFrame:
     """Maintain the reflexive transitive closure under edge ADDITIONS —
     the new-ontology-version case the reconciliation pipeline exists
@@ -277,7 +262,8 @@ def incremental_closure_update(
     — rows ∝ the delta's ancestor cone, never the old closure —
     intersected with the closure domain. The forward fixpoint then
     steps only the genuinely-new pairs against the full edge set
-    (broadcast under ``broadcast_edges_max`` rows), prior pairs ``known``.
+    (joined by the one join-side rule, ``partitioning.py``), prior
+    pairs ``known``.
 
     ``prior_closure``: (subject, predicate, object, type) as produced
     by :func:`ancestor_closure` over ``edges``. Returns the closure of
@@ -285,11 +271,10 @@ def incremental_closure_update(
     :func:`ancestor_closure` run (pinned by a randomized test). New
     pairs never include a prior pair (those are ``known``), so the
     result is a disjoint union and needs no distinct."""
-    all_hedges, n_hedges, hedges_side = _hedge_set(
-        edges.unionByName(new_edges), predicates, broadcast_edges_max
-    )
+    all_hedges, n_hedges = _hedge_set(edges.unionByName(new_edges), predicates)
     if _local("incremental_closure_update", n_hedges):
         return _closure_local(all_hedges, relevant, ontology)
+    hedges_side = join_side(all_hedges, fits("incremental_closure_update hedges", n_hedges))
     new_h = select_hierarchy_edges(new_edges, predicates)
 
     revreach = _reverse_reach(
@@ -330,7 +315,7 @@ def _reverse_reach(
     ancestor cone, never the full closure — the property both
     incremental-maintenance directions rely on. ``keys=("u",)`` keeps
     only the reaching nodes (the delete needs no seed per row).
-    ``hedges_side``: see :func:`_hedge_set`."""
+    ``hedges_side``: ``all_hedges`` as a join side."""
     return semi_naive_fixpoint(
         seeds.select(F.col("subject").alias("u"), F.col("subject").alias("a")),
         lambda f: f.join(hedges_side, f["u"] == all_hedges["object"]).select(
@@ -350,7 +335,6 @@ def incremental_closure_delete(
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
     max_iterations: int = 64,
-    broadcast_edges_max: int = 5_000_000,
 ) -> DataFrame:
     """Maintain the closure under edge DELETIONS — the other half of
     ontology-release maintenance. At most ``LOCAL_CLOSURE_EDGES_MAX``
@@ -384,7 +368,8 @@ def incremental_closure_delete(
     rem_h, n_rem = hierarchy_pairs(remaining, predicates)
     if _local("incremental_closure_delete", n_rem):
         return _closure_local(rem_h, relevant, ontology)
-    old_h, _, hedges_side = _hedge_set(edges, predicates, broadcast_edges_max)
+    old_h, n_old = _hedge_set(edges, predicates)
+    hedges_side = join_side(old_h, fits("incremental_closure_delete hedges", n_old))
     revreach = _reverse_reach(
         old_h,
         hedges_side,
@@ -427,9 +412,7 @@ def _closure_doubling(
     for _ in range(max_iterations):
         # a broadcast side saves the round's two shuffle-join jobs; at
         # 1.85M pairs it cost no time (doubling closure, local[4])
-        right = reach.alias("r")
-        if n <= BROADCAST_CLOSURE_PAIRS_MAX:
-            right = F.broadcast(right)
+        right = join_side(reach, fits("ancestor_closure doubling", n)).alias("r")
         squared = (
             reach.alias("l")
             .join(right, F.col("l.o") == F.col("r.s"))

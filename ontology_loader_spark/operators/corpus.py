@@ -33,7 +33,6 @@ def duplicate_clusters(
     documents: DataFrame,
     threshold: float = DUP_THRESHOLD,
     max_bucket: int = MAX_BUCKET,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Resolve verified near-duplicate pairs into clusters: connected
     components over the (LSH candidate ∧ jaccard ≥ threshold) graph,
@@ -45,22 +44,16 @@ def duplicate_clusters(
     driver-dict path (zero fixpoint iterations; only pairs collect —
     the corpus-scale node set stays distributed), and a dup graph that
     grows with the corpus falls over to the iterative min-label
-    variant (size-aware partitioning, never collects).
-
-    ``broadcast_pairs`` is forwarded to :func:`ngram_jaccard`: the
-    default ``None`` decides from a MEASURED candidate-pair count
-    (safe at any scale — the per-bucket cap bounds pairs per bucket
-    but bucket count grows with the corpus, so the capped set is
-    still corpus-sized); pass ``True``/``False`` to skip the count
-    action when the caller knows the graph's shape."""
+    variant (size-aware partitioning, never collects). The verify
+    stage, :func:`ngram_jaccard`, joins the candidate pairs by the one
+    measured join-side rule (``partitioning.py``): the per-bucket cap
+    bounds pairs per bucket, but bucket count grows with the corpus."""
     from ontology_loader_spark.transcripts.unionfind import (
         connected_components_auto,
     )
 
     pairs = ngram_jaccard(
-        documents,
-        minhash_candidate_pairs(documents, max_bucket),
-        broadcast_pairs=broadcast_pairs,
+        documents, minhash_candidate_pairs(documents, max_bucket)
     ).filter(F.col("jaccard") >= threshold)
     sym = pairs.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
         pairs.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -419,7 +412,6 @@ REP_MIN_SHINGLES = MIN_TOKENS - 2
 
 def prepare_training_corpus(
     documents: DataFrame,
-    broadcast_pairs: bool | None = None,
     include_containment: bool = False,
 ) -> DataFrame:
     """The end-to-end corpus gate: one verdict per document, first
@@ -450,11 +442,10 @@ def prepare_training_corpus(
     joined against the corpus scan, which matters because the
     dup/low-quality doc_id sets scale WITH the corpus (a large
     fraction of a web crawl is duplicates) — a broadcast of those
-    sides would be a driver/executor OOM at 100 TB.
-
-    ``broadcast_pairs=None`` (default) lets :func:`ngram_jaccard` /
-    :func:`containment_dedup` decide from a measured candidate-pair
-    count whether the verify stages may broadcast their pair sets."""
+    sides would be a driver/executor OOM at 100 TB. The verify stages
+    (:func:`ngram_jaccard`, :func:`containment_dedup`) broadcast their
+    candidate pairs only under the one measured join-side rule
+    (``partitioning.py``)."""
     from ontology_loader_spark.operators.dedup import (
         containment_dedup,
         exact_duplicates,
@@ -474,7 +465,7 @@ def prepare_training_corpus(
         ),
         (
             "near_dup",
-            duplicate_clusters(documents, broadcast_pairs=broadcast_pairs)
+            duplicate_clusters(documents)
             .filter(F.col("canonical_id") != F.col("doc_id"))
             .select("doc_id"),
         ),
@@ -483,7 +474,7 @@ def prepare_training_corpus(
         stages.append(
             (
                 "contained",
-                containment_dedup(documents, broadcast_pairs=broadcast_pairs)
+                containment_dedup(documents)
                 .select(F.col("contained").alias("doc_id"))
                 .distinct(),
             )

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ontology_loader_spark.partitioning import join_side, pin_fits
+
 MINHASH_K = 8
 # 4 bands x 2 rows over SHINGLES: collision threshold ≈ (1/4)^(1/2)
 # = 0.5 shingle-jaccard. Selectivity comes from the shingle unit (a
@@ -238,14 +240,7 @@ WHERE l.doc_id < r.doc_id"""
     )
 
 
-# auto mode: force-broadcast the candidate set only below this many
-# pairs (~tens of MB of (a, b) keys); above it, shuffle hash join.
-BROADCAST_PAIRS_MAX = 2_000_000
-
-
-def ngram_jaccard(
-    documents: DataFrame, pairs: DataFrame, broadcast_pairs: bool | None = None
-) -> DataFrame:
+def ngram_jaccard(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: |∩| / |∪| (double
     division of exact integers — bit-identical across engines). The
     verification unit matches the MinHash estimate's unit (shingles),
@@ -256,16 +251,11 @@ def ngram_jaccard(
     the intersection joins beats a sort-merge of the shingle table on
     the pair key when it fits. But the cap bounds pairs PER BUCKET
     while bucket count grows with the corpus, so the capped set is
-    corpus-sized at 100 TB: the default ``broadcast_pairs=None``
-    therefore DECIDES from a measured count (one extra action over a
-    checkpointed pair set, auto-dispatch like
-    ``connected_components_auto``) — broadcast below
-    ``BROADCAST_PAIRS_MAX`` pairs, shuffle hash join on doc id above.
-    Pass ``True``/``False`` to skip the count when the shape is
-    known."""
-    if broadcast_pairs is None:
-        pairs = pairs.localCheckpoint(eager=True)
-        broadcast_pairs = pairs.count() <= BROADCAST_PAIRS_MAX
+    corpus-sized at 100 TB: the pair set is therefore pinned and
+    measured, and both pair-keyed joins follow the one join-side rule
+    (``partitioning.py``) — broadcast up to ``BROADCAST_ROWS_MAX``
+    pairs, shuffle hash join on doc id above."""
+    pairs, bc = pin_fits(pairs, "ngram_jaccard")
     tokset = doc_shingles(documents).distinct()
     sizes = tokset.groupBy("doc_id").agg(F.count("*").alias("n"))
     ta = tokset.select(F.col("doc_id").alias("a"), "shingle")
@@ -273,18 +263,15 @@ def ngram_jaccard(
     # shuffle path: hash-join hints keep the pair joins off sort-merge
     # (the shingle side is exploded-corpus-sized — sorting it would
     # dominate the operator)
-    cand = F.broadcast(pairs) if broadcast_pairs else pairs.hint("shuffle_hash")
     inter = (
-        cand.join(ta, "a").join(tb, ["b", "shingle"])
+        join_side(pairs, bc).join(ta, "a").join(tb, ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_inter"))
     )
     return (
         # inter is keyed by candidate pair — same bounded size as the
         # capped pair set, so it broadcasts into the left join too
-        pairs.join(F.broadcast(inter) if broadcast_pairs
-                   else inter.hint("shuffle_hash"),
-                   ["a", "b"], "left")
+        pairs.join(join_side(inter, bc), ["a", "b"], "left")
         .na.fill({"n_inter": 0})
         .join(sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
         .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
@@ -546,7 +533,6 @@ def containment_dedup(
     documents: DataFrame,
     pairs: DataFrame | None = None,
     threshold: float = CONTAINMENT_THRESHOLD,
-    broadcast_pairs: bool | None = None,
 ) -> DataFrame:
     """Asymmetric near-duplicate detection: containment of the SMALLER
     shingle set in the larger, C = |S_a ∩ S_b| / min(|S_a|, |S_b|) —
@@ -558,22 +544,17 @@ def containment_dedup(
 
     Candidates default to :func:`rare_shingle_candidates` (bounded by
     the rare-df cap); the intersection joins follow the
-    ``ngram_jaccard`` shape — the bounded pair set broadcasts into the
-    exploded shingle relation (``broadcast_pairs`` has the same
-    False/None escape hatches). Ratio of exact ints → bit-identical
-    across engines."""
+    ``ngram_jaccard`` shape and its measured join-side rule. Ratio of
+    exact ints → bit-identical across engines."""
     if pairs is None:
         pairs = rare_shingle_candidates(documents)
-    if broadcast_pairs is None:
-        pairs = pairs.localCheckpoint(eager=True)
-        broadcast_pairs = pairs.count() <= BROADCAST_PAIRS_MAX
+    pairs, bc = pin_fits(pairs, "containment_dedup")
     ds = doc_shingles(documents).distinct()
     sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
     ta = ds.select(F.col("doc_id").alias("a"), "shingle")
     tb = ds.select(F.col("doc_id").alias("b"), "shingle")
-    cand = F.broadcast(pairs) if broadcast_pairs else pairs
     inter = (
-        cand.join(ta, "a").join(tb, ["b", "shingle"])
+        join_side(pairs, bc).join(ta, "a").join(tb, ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_inter"))
     )
@@ -581,8 +562,7 @@ def containment_dedup(
         # left join + zero-fill so disjoint candidate pairs score 0.0
         # instead of vanishing (same shape as ngram_jaccard); pairs
         # whose doc is too short to shingle drop at the sizes join
-        pairs.join(F.broadcast(inter) if broadcast_pairs else inter,
-                   ["a", "b"], "left")
+        pairs.join(join_side(inter, bc), ["a", "b"], "left")
         .na.fill({"n_inter": 0})
         .join(
             sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a"

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import BORN, pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.closure import hierarchy_pairs
+from ontology_loader_spark.partitioning import join_side, pin_fits
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 SCALE = 10 ** 12
@@ -352,23 +353,12 @@ depths AS (
 # ---------------------------------------------------------------- LCA
 
 LCA_WUP_SCALE = 1_000_000
-BROADCAST_DICT_ROWS_MAX = 2_000_000
-
-
-def _join_side(df: DataFrame, use_broadcast: bool) -> DataFrame:
-    """Measured-dispatch side: broadcast dictionary-scale sides, hint
-    shuffle_hash otherwise so the big-side join never degrades to a
-    sort-merge (the ``pipeline.py`` closure-join discipline)."""
-    return F.broadcast(df) if use_broadcast else df.hint("shuffle_hash")
 
 
 def term_lca(
     closure: DataFrame,
     depths: DataFrame,
     pairs: DataFrame,
-    broadcast_pairs: bool | None = None,
-    broadcast_depths: bool | None = None,
-    max_broadcast_rows: int = BROADCAST_DICT_ROWS_MAX,
 ) -> DataFrame:
     """Lowest common ancestor + Wu-Palmer-style similarity for a set of
     term pairs: ``(a, b, lca, lca_depth, depth_a, depth_b, wup_ppm)``.
@@ -385,9 +375,9 @@ def term_lca(
 
     Scale shape: the closure is |terms| x depth pairs (corpus of
     ancestor sets); the pair set and the depth table are
-    dictionary-scale. Both are measured (they arrive localCheckpointed
-    or get pinned here) and broadcast only under
-    ``max_broadcast_rows``; above it every join runs shuffle-hash on a
+    dictionary-scale. Each is pinned, measured and joined by the one
+    join-side rule (``partitioning.py``): broadcast up to
+    ``BROADCAST_ROWS_MAX`` rows, above it shuffle-hash on a
     bounded-fanout key (per-term ancestor count <= DAG height). The
     common-ancestor intersection joins on (a, b, anc) with fanout 1,
     and the argmax is two map-side-combinable aggregations (max depth,
@@ -403,23 +393,22 @@ def term_lca(
     anc = closure.select(
         "subject", F.col("object").alias("anc")
     ).localCheckpoint(eager=True)
-    p, n_p = pin_count(pairs.select("a", "b"))
-    if broadcast_pairs is None:
-        broadcast_pairs = n_p <= max_broadcast_rows
-    dd, n_dd = pin_count(depths.select(F.col("id").alias("anc"), F.col("depth").alias("adepth")))
-    if broadcast_depths is None:
-        broadcast_depths = n_dd <= max_broadcast_rows
+    p, bc_p = pin_fits(pairs.select("a", "b"), "term_lca pairs")
+    dd, bc_dd = pin_fits(
+        depths.select(F.col("id").alias("anc"), F.col("depth").alias("adepth")),
+        "term_lca depths",
+    )
 
     la = (
         anc.alias("c")
-        .join(_join_side(p, broadcast_pairs).alias("p"),
+        .join(join_side(p, bc_p).alias("p"),
               F.col("c.subject") == F.col("p.a"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"),
                 F.col("c.anc").alias("anc"))
     )
     lb = (
         anc.alias("c")
-        .join(_join_side(p, broadcast_pairs).alias("p"),
+        .join(join_side(p, bc_p).alias("p"),
               F.col("c.subject") == F.col("p.b"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"),
                 F.col("c.anc").alias("anc"))
@@ -435,7 +424,7 @@ def term_lca(
         .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),
                 F.col("x.anc").alias("anc"))
     )
-    commond = common.join(_join_side(dd, broadcast_depths), "anc").select(
+    commond = common.join(join_side(dd, bc_dd), "anc").select(
         "a", "b", "anc", "adepth"
     )
     dmax = commond.groupBy("a", "b").agg(F.max("adepth").alias("lca_depth"))
@@ -454,8 +443,8 @@ def term_lca(
     da = dd.select(F.col("anc").alias("a"), F.col("adepth").alias("depth_a"))
     db = dd.select(F.col("anc").alias("b"), F.col("adepth").alias("depth_b"))
     out = (
-        at_max.join(_join_side(da, broadcast_depths), "a")
-        .join(_join_side(db, broadcast_depths), "b")
+        at_max.join(join_side(da, bc_dd), "a")
+        .join(join_side(db, bc_dd), "b")
     )
     wup = F.when(
         F.col("depth_a") + F.col("depth_b") == 0,
@@ -507,8 +496,6 @@ lca_pick AS (
 def term_ancestor_jaccard(
     closure: DataFrame,
     pairs: DataFrame,
-    broadcast_pairs: bool | None = None,
-    max_broadcast_rows: int = BROADCAST_DICT_ROWS_MAX,
 ) -> DataFrame:
     """Ancestor-set Jaccard similarity for term pairs:
     ``(a, b, n_inter, n_a, n_b, jaccard_ppm)`` with
@@ -528,20 +515,18 @@ def term_ancestor_jaccard(
     anc = closure.select(
         "subject", F.col("object").alias("anc")
     ).localCheckpoint(eager=True)
-    p, n_p = pin_count(pairs.select("a", "b"))
-    if broadcast_pairs is None:
-        broadcast_pairs = n_p <= max_broadcast_rows
+    p, bc_p = pin_fits(pairs.select("a", "b"), "term_ancestor_jaccard")
 
     la = (
         anc.alias("c")
-        .join(_join_side(p, broadcast_pairs).alias("p"),
+        .join(join_side(p, bc_p).alias("p"),
               F.col("c.subject") == F.col("p.a"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"),
                 F.col("c.anc").alias("anc"))
     )
     lb = (
         anc.alias("c")
-        .join(_join_side(p, broadcast_pairs).alias("p"),
+        .join(join_side(p, bc_p).alias("p"),
               F.col("c.subject") == F.col("p.b"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"),
                 F.col("c.anc").alias("anc"))

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import pin_count
 from ontology_loader_spark.operators.closure import _reach, hierarchy_pairs
+from ontology_loader_spark.partitioning import fits, join_side
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 #: Both the engine loop and the SQL oracles bound path length at the
@@ -65,17 +66,21 @@ def transitive_reduction(
     length-3 path through the other, identically in both engines),
     then one join to flag edges with a (subject -> m -> ... -> object)
     witness. The walk's round bound is the distinct edge count plus
-    one: a shortest path uses each edge at most once.
+    one: a shortest path uses each edge at most once. That count also
+    sizes the edge-keyed joins (``partitioning.py``'s join-side rule):
+    ``redundant`` is a subset of the edges. The walk is reach-sized, not
+    edge-sized, so its semi-join is shuffle-hashed whatever ``n``.
     """
     hedges, n = hierarchy_pairs(edges, predicates)
+    bc = fits("transitive_reduction", n)
     seed = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
     walk = _reach(seed, hedges, n + 1, "transitive_reduction")
     # redundant (s, o): some edge s->m with m reaching o (path >= 2)
     redundant = (
         hedges.alias("e")
-        .join(hedges.alias("m"), F.col("e.subject") == F.col("m.subject"))
+        .join(join_side(hedges, bc).alias("m"), F.col("e.subject") == F.col("m.subject"))
         .join(
-            walk.alias("w"),
+            walk.hint("shuffle_hash").alias("w"),
             (F.col("w.s") == F.col("m.object")) & (F.col("w.o") == F.col("e.object")),
             "left_semi",
         )
@@ -85,7 +90,7 @@ def transitive_reduction(
         )
         .distinct()
     )
-    return hedges.join(redundant, ["subject", "object"], "left_anti")
+    return hedges.join(join_side(redundant, bc), ["subject", "object"], "left_anti")
 
 
 def transitive_reduction_sql(predicates_sql: str) -> str:

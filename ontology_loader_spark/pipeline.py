@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.operators.classes import build_ontology_classes
 from ontology_loader_spark.operators.closure import (
-    BROADCAST_CLOSURE_PAIRS_MAX,
     ancestor_closure,
     direct_relations,
     relevant_entities,
@@ -36,6 +35,7 @@ from ontology_loader_spark.operators.relations import (
     distinct_relations,
     union_relations,
 )
+from ontology_loader_spark.partitioning import join_side, pin_fits
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 
@@ -236,7 +236,6 @@ def mention_ancestor_triples(
     edges: DataFrame,
     term_dict: DataFrame,
     ontology: str,
-    broadcast_closure: bool | None = None,
 ) -> DataFrame:
     """The KG-materialization step that grounds the ontology closure in
     the transcripts (north star: 'transitive-closure expansion of is_a
@@ -249,13 +248,12 @@ def mention_ancestor_triples(
     Scale shape: the links side is corpus-sized (one row per linked
     turn); the closure side is |terms| × depth pairs — dictionary-scale
     for most ontologies but multi-GB for NCBITaxon-class hierarchies.
-    The default ``broadcast_closure=None`` therefore MEASURES the
-    closure (it is already materialized by the iterative computation)
-    and broadcasts only under ``BROADCAST_CLOSURE_PAIRS_MAX``; above it
-    the join runs as a shuffle-hash equi-join on term_id (hinted —
-    without the hint Spark's planner would pick a sort-merge join and
-    sort the corpus side). Either way the fan-out (× ancestor count)
-    happens partition-parallel on the probe side."""
+    The closure side therefore goes through the one join-side rule
+    (``partitioning.py``): pinned, measured, broadcast up to
+    ``BROADCAST_ROWS_MAX`` rows, else a shuffle-hash equi-join on
+    term_id (hinted — without the hint Spark's planner would pick a
+    sort-merge join and sort the corpus side). Either way the fan-out
+    (× ancestor count) happens partition-parallel on the probe side."""
     from ontology_loader_spark.operators.closure import (
         ancestor_closure,
         relevant_entities,
@@ -268,38 +266,28 @@ def mention_ancestor_triples(
     links = top1_links(detect_mentions(spark, transcripts, mention_dict))
     rel = relevant_entities(term_dict, ontology)
     closure = ancestor_closure(edges, rel, ontology)
-    return mention_triples_from_closure(links, closure, broadcast_closure)
+    return mention_triples_from_closure(links, closure)
 
 
 def mention_triples_from_closure(
     links: DataFrame,
     closure: DataFrame,
-    broadcast_closure: bool | None = None,
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Probe-side half of :func:`mention_ancestor_triples`, factored so
     an externally-maintained closure (e.g. the streaming CDC maintainer,
     ``streaming/closure.py``) can feed the same corpus join. ``closure``
-    is (subject, object[, ...]) ancestor pairs; same measured
-    broadcast-vs-shuffle_hash dispatch as the batch path.
+    is (subject, object[, ...]) ancestor pairs, joined by the one
+    join-side rule.
     ``extra_cols`` carries additional link columns (e.g. ``ts`` for
     provenance) through the expansion."""
-    closure_pairs = closure.select(
-        F.col("subject").alias("term_id"),
-        F.col("object").alias("ancestor"),
+    closure_pairs, bc = pin_fits(
+        closure.select(
+            F.col("subject").alias("term_id"), F.col("object").alias("ancestor")
+        ),
+        "mention_triples_from_closure",
     )
-    if broadcast_closure is None:
-        # the closure is the product of an iterative job whose steps are
-        # localCheckpointed — pin the final projection too so the count
-        # and the join read one materialization
-        closure_pairs = closure_pairs.localCheckpoint(eager=True)
-        broadcast_closure = closure_pairs.count() <= BROADCAST_CLOSURE_PAIRS_MAX
-    side = (
-        F.broadcast(closure_pairs)
-        if broadcast_closure
-        else closure_pairs.hint("shuffle_hash")
-    )
-    return links.join(side, "term_id").select(
+    return links.join(join_side(closure_pairs, bc), "term_id").select(
         "conv_id", "turn_idx", "term_id", "ancestor", *extra_cols
     )
 
@@ -402,7 +390,6 @@ def conversation_entity_profile(
     transcripts: DataFrame,
     mention_dict: DataFrame,
     edges: DataFrame,
-    broadcast_depths: bool | None = None,
 ) -> DataFrame:
     """Per-conversation KG-coverage profile: how much of the ontology a
     conversation touches, and how deep. Output, one row per
@@ -416,26 +403,20 @@ def conversation_entity_profile(
 
     Scale shape: the mention side is corpus-scale (Arrow-batched
     Aho-Corasick detection, ``transcripts/mentions.py``); the depth
-    table is |terms| rows — MEASURED, broadcast only under
-    ``BROADCAST_CLOSURE_PAIRS_MAX``, else a shuffle_hash-hinted left
-    equi-join on term_id (the ``mention_ancestor_triples``
-    discipline). The final groupBy(conv_id) is hash-uniform with
-    map-side-combinable aggregates; bounded conversations mean no
-    per-key skew."""
+    table is |terms| rows, joined left on term_id by the one
+    join-side rule (``partitioning.py``). The final groupBy(conv_id)
+    is hash-uniform with map-side-combinable aggregates; bounded
+    conversations mean no per-key skew."""
     from ontology_loader_spark.operators.graph import term_depth
     from ontology_loader_spark.transcripts.mentions import detect_mentions
 
     mentions = detect_mentions(spark, transcripts, mention_dict)
-    dd = (
-        term_depth(edges)
-        .select(F.col("id").alias("term_id"), "depth")
-        .localCheckpoint(eager=True)
+    dd, bc = pin_fits(
+        term_depth(edges).select(F.col("id").alias("term_id"), "depth"),
+        "conversation_entity_profile",
     )
-    if broadcast_depths is None:
-        broadcast_depths = dd.count() <= BROADCAST_CLOSURE_PAIRS_MAX
-    side = F.broadcast(dd) if broadcast_depths else dd.hint("shuffle_hash")
     return (
-        mentions.join(side, "term_id", "left")
+        mentions.join(join_side(dd, bc), "term_id", "left")
         .groupBy("conv_id")
         .agg(
             F.count("*").cast("int").alias("n_mentions"),
@@ -454,7 +435,6 @@ def term_similarity_ic(
     term_dict: DataFrame,
     ontology: str,
     pairs: DataFrame,
-    broadcast_rollup: bool | None = None,
 ) -> DataFrame:
     """Resnik-style corpus-grounded semantic similarity, in exact count
     space: for each query pair, the LCA (``operators/graph.py``) with
@@ -474,8 +454,8 @@ def term_similarity_ic(
 
     Scale shape: both inputs are gate-verified composites
     (``ancestor_mention_rollup``, ``term_lca``); the final join is
-    LCA-keyed against the dictionary-sized rollup — measured, broadcast
-    under ``BROADCAST_CLOSURE_PAIRS_MAX``, else shuffle_hash. A pair
+    LCA-keyed against the dictionary-sized rollup, by the one join-side
+    rule (``partitioning.py``). A pair
     whose shared concept never occurs in the corpus keeps 0 counts
     (LEFT join + COALESCE), which IS the signal 'maximally informative
     if it ever appears'."""
@@ -499,13 +479,11 @@ def term_similarity_ic(
     lca = term_lca(closure, term_depth(edges), pairs).select(
         "a", "b", "lca", "lca_depth"
     )
-    ru = rollup.select(
-        F.col("ancestor").alias("lca"), "n_turns", "n_mentions"
-    ).localCheckpoint(eager=True)
-    if broadcast_rollup is None:
-        broadcast_rollup = ru.count() <= BROADCAST_CLOSURE_PAIRS_MAX
-    side = F.broadcast(ru) if broadcast_rollup else ru.hint("shuffle_hash")
-    return lca.join(side, "lca", "left").select(
+    ru, bc = pin_fits(
+        rollup.select(F.col("ancestor").alias("lca"), "n_turns", "n_mentions"),
+        "term_similarity_ic",
+    )
+    return lca.join(join_side(ru, bc), "lca", "left").select(
         "a", "b", "lca",
         F.col("lca_depth").cast("int").alias("lca_depth"),
         F.coalesce(F.col("n_turns"), F.lit(0)).cast("bigint").alias("lca_n_turns"),

@@ -11,7 +11,7 @@ Design for scale:
 
 - One detector, :func:`detect_mentions`, with a measured dispatch: the
   collect that ships the dictionary stops one row past
-  ``BROADCAST_DICT_ROWS_MAX`` (``operators/graph.py``). Up to that
+  ``BROADCAST_ROWS_MAX`` (``partitioning.py``). Up to that
   ceiling the rows are broadcast once per executor and scanned in
   ``mapInPandas``, Arrow-batched, with the matcher built once per batch
   iterator, NOT once per row. Past it the dictionary stays distributed:
@@ -33,7 +33,6 @@ Design for scale:
 
 from __future__ import annotations
 
-import logging
 from typing import Iterator
 
 import pandas as pd
@@ -41,10 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ontology_loader_spark.operators.graph import BROADCAST_DICT_ROWS_MAX
+from ontology_loader_spark import partitioning
 from ontology_loader_spark.schemas import MENTION_SCHEMA
-
-log = logging.getLogger(__name__)
 
 
 def _build_matcher(dict_rows: list[tuple[str, str]]):
@@ -152,22 +149,17 @@ def detect_mentions(
     turn_idx, term_id, surface, *extra_cols)``.
 
     The dictionary is measured by the collect that ships it: at most
-    ``BROADCAST_DICT_ROWS_MAX`` rows are broadcast and scanned in
+    ``BROADCAST_ROWS_MAX`` rows are broadcast and scanned in
     ``mapInPandas``; a dictionary past that bound (the collect stops
     one row beyond it) goes to :func:`_detect_mentions_sharded`, which
     never holds it on the driver."""
     dict_rows = [
         tuple(r)
         for r in mention_dict.select("id", "name")
-        .limit(BROADCAST_DICT_ROWS_MAX + 1)
+        .limit(partitioning.BROADCAST_ROWS_MAX + 1)
         .collect()
     ]
-    n, ceiling = len(dict_rows), BROADCAST_DICT_ROWS_MAX
-    choice = "sharded" if n > ceiling else "collected"
-    log.debug("detect_mentions: %d dictionary rows, ceiling %d -> %s", n, ceiling,
-              choice, extra={"op_name": "detect_mentions", "measured": n,
-                             "threshold": ceiling, "choice": choice})
-    if choice == "sharded":
+    if not partitioning.fits("detect_mentions", len(dict_rows), ("collected", "sharded")):
         return _detect_mentions_sharded(transcripts, mention_dict, extra_cols)
     bc = spark.sparkContext.broadcast(dict_rows)
     src, schema = _texts(transcripts, extra_cols)

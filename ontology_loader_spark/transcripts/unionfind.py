@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontology_loader_spark.partitioning import state_partitions
+from ontology_loader_spark.fixpoint import pin_count
+from ontology_loader_spark.partitioning import fits, state_partitions
 
 
 def comention_pairs(mentions: DataFrame) -> DataFrame:
@@ -79,25 +80,18 @@ def connected_components_dict_bounded(nodes: DataFrame, pairs: DataFrame) -> Dat
     )
 
 
-# auto-dispatch bound: distinct pairs up to this count are collected
-# to a driver dict (path-compressed union-find, zero fixpoint
-# iterations); above it, the iterative min-label propagation runs.
-DICT_PAIRS_MAX = 2_000_000
-
-
-def connected_components_auto(
-    nodes: DataFrame, pairs: DataFrame, dict_pairs_max: int = DICT_PAIRS_MAX
-) -> DataFrame:
+def connected_components_auto(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Dispatch by MEASURED distinct-pair count instead of caller
-    knowledge: one count over the checkpointed pair set picks the
+    knowledge: the pair set is pinned and counted in one job, and the
+    one collect ceiling (``partitioning.BROADCAST_ROWS_MAX``) picks the
     driver-dict variant (bounded graphs — removes O(diameter) driver
     loops) or the distributed iterative variant (corpus-scale graphs —
     never collects). Callers that already know their graph's shape can
-    call either variant directly and skip the count action."""
-    pairs = pairs.localCheckpoint(eager=True)
-    if pairs.count() <= dict_pairs_max:
+    call either variant directly and skip the measurement."""
+    pairs, n = pin_count(pairs)
+    if fits("connected_components_auto", n, ("driver", "iterative")):
         return connected_components_dict_bounded(nodes, pairs)
-    return connected_components(nodes, pairs)
+    return _label_propagation(nodes, pairs, n)
 
 
 def connected_components(
@@ -108,13 +102,19 @@ def connected_components(
     ``nodes``: one column ``node``; ``pairs``: columns ``u, v``
     (symmetric). Returns (node, component).
     """
+    edges, n = pin_count(pairs)
+    return _label_propagation(nodes, edges, n, max_iterations)
+
+
+def _label_propagation(
+    nodes: DataFrame, edges: DataFrame, n_edges: int, max_iterations: int = 64
+) -> DataFrame:
+    """:func:`connected_components` over ``n_edges`` pinned ``edges``."""
     # iteration-state width follows the observed graph size: a
     # dictionary-bounded co-mention graph runs a few tasks per round; a
     # corpus-scale dedup graph fans out to the session shuffle width
     # (the use case this variant exists for)
-    spark = nodes.sparkSession
-    edges = pairs.localCheckpoint(eager=True)
-    p = state_partitions(spark, edges.count())
+    p = state_partitions(nodes.sparkSession, n_edges)
     edges = edges.coalesce(p)
     labels = nodes.select(
         F.col("node"), F.col("node").alias("component")

@@ -2,7 +2,8 @@
 queries with the properties that matter at 100 TB asserted and
 summarized into PLANS.md — broadcast (not sort-merge) joins against
 the dictionary, filter/column pushdown into the parquet scans, and no
-Python eval nodes outside the two deliberate pandas-UDF slots."""
+Python eval nodes outside the deliberate pandas-UDF slots. Exits 1
+when any invariant is broken (each break is printed as a WARNING)."""
 
 from __future__ import annotations
 
@@ -34,10 +35,17 @@ UDF_QUERIES = {"entity_linking_top1", "multimodal_decode",
                # consume the mention pipeline (detection + link scoring
                # Arrow slots) upstream of their aggregates
                "ancestor_rollup", "streaming_mention_ancestors",
-               "conv_entity_profile", "term_similarity_ic"}
+               "conv_entity_profile", "term_similarity_ic",
+               "linked_mentions_canonical", "triple_provenance", "term_activity",
+               # the one-task closure solve (operators/closure.py::
+               # _closure_local, a mapInPandas) under a closure input
+               "ancestor_closure", "incremental_closure",
+               "incremental_closure_delete", "relation_set", "relations_agg",
+               "relation_upsert_end_state", "ntriples_export",
+               "ancestor_histogram"}
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entrymod
     from ontology_loader_spark.session import get_spark
 
@@ -46,7 +54,7 @@ def main() -> None:
     sf = "/root/testdata/sf0.01"
     qs = entrymod.queries()
 
-    sections = []
+    sections, warnings = [], []
     summary = ["| query | broadcast joins | sort-merge joins | exchanges | "
                "python nodes | pushed filters |", "|---|---|---|---|---|---|"]
     for name in qs:  # every gate query gets a summary row
@@ -68,9 +76,9 @@ def main() -> None:
         pushed = "yes" if re.search(r"PushedFilters: \[[^\]]", formatted) else "-"
         summary.append(f"| {name} | {bhj} | {smj} | {exch} | {py} | {pushed} |")
         if smj > 0:
-            print(f"WARNING: {name} uses SortMergeJoin")
+            warnings.append(f"WARNING: {name} uses SortMergeJoin")
         if py > 0 and name not in UDF_QUERIES and not name.startswith("mention"):
-            print(f"WARNING: {name} has unexpected python node")
+            warnings.append(f"WARNING: {name} has unexpected python node")
         if name in KEY_QUERIES:
             # keep the formatted plan excerpt (truncated) for inspection
             head = "\n".join(formatted.splitlines()[:40])
@@ -82,8 +90,10 @@ def main() -> None:
            "scripts/dump_plans.py. Invariants: dictionary-side joins are",
            "broadcast hash joins (no sort-merge against the small side),",
            "scans carry pushed filters/pruned schemas where a predicate",
-           "exists, and Python appears only in the two deliberate",
-           "Arrow-batched UDF slots (mention detection, link scoring).",
+           "exists, and Python appears only in the deliberate",
+           "Arrow-batched slots (mention detection, link scoring, the",
+           "one-task closure solve, multimodal decode). The script exits 1",
+           "when a row breaks one of these.",
            "",
            "Recompute-vs-pin policy (why some plans scan the corpus",
            "several times): intermediates that are SMALLER than their",
@@ -101,9 +111,10 @@ def main() -> None:
            "and the round's new-row count observed on that same job.",
            "", *summary, "", *sections]
     (REPO / "PLANS.md").write_text("\n".join(out))
-    print("\n".join(summary))
+    print("\n".join(summary + warnings))
     spark.stop()
+    return 1 if warnings else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -8,6 +8,7 @@ import random
 
 import pytest
 
+from ontology_loader_spark import partitioning
 from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
@@ -89,10 +90,10 @@ def test_local_arm_edge_cases(spark, caplog):
         assert len(rows) == len(set(rows))
         return set(rows)
 
-    with caplog.at_level(logging.DEBUG, logger=closure.__name__):
+    with caplog.at_level(logging.DEBUG, logger=partitioning.__name__):
         got = pairs(ancestor_closure(ed, rel, ONT))
         empty = pairs(ancestor_closure(ed.limit(0), rel, ONT))
-    records = [r for r in caplog.records if r.name == closure.__name__]
+    records = [r for r in caplog.records if r.name == partitioning.__name__]
     assert [(r.measured, r.choice) for r in records] == [(6, "local"), (0, "local")]
     assert got == want
     assert empty == reflexive

@@ -211,10 +211,10 @@ def test_grouped_packing_matches_global_without_global_sort(spark):
         map(tuple, via_col.collect()))
 
 
-def test_ngram_jaccard_auto_broadcast_mode(spark):
-    """broadcast_pairs=None measures the candidate set: small sets
-    broadcast (plan contains a broadcast join on the pair key), and the
-    result is identical across True/False/None modes."""
+def test_ngram_jaccard_auto_broadcast_mode(spark, monkeypatch):
+    """The candidate set is measured: a small set broadcasts, and the
+    result is identical with the ceiling forced to 0 (shuffle hash)."""
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark.operators.dedup import (
         minhash_candidate_pairs,
         ngram_jaccard,
@@ -225,12 +225,15 @@ def test_ngram_jaccard_auto_broadcast_mode(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = minhash_candidate_pairs(docs).localCheckpoint(eager=True)
 
-    outs = [
-        sorted(map(tuple, ngram_jaccard(docs, pairs, broadcast_pairs=m).collect()))
-        for m in (True, False, None)
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 0
+    def run():
+        out = ngram_jaccard(docs, pairs)
+        return sorted(map(tuple, out.collect())), out
+
+    bcast, out = run()
+    assert "BroadcastHashJoin [a" in out._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+    assert run()[0] == bcast
+    assert len(bcast) > 0
 
 
 def test_repetition_stats_fixture(spark):
@@ -609,9 +612,10 @@ def test_corpus_prep_plan_is_priority_union_not_joins(spark):
 
 def test_ngram_jaccard_shuffle_path_matches_broadcast(spark, monkeypatch):
     """Corpus-sized candidate sets must take the shuffle-hash path with
-    identical output: pin broadcast=True vs broadcast=False equality,
-    and that the auto default (None) dispatches to the shuffle path
-    when the measured pair count exceeds the broadcast ceiling."""
+    identical output: with the ceiling forced to 0 pairs, ngram_jaccard
+    and containment_dedup return the broadcast arm's rows from
+    shuffled hash joins, with no sort-merge join."""
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark.operators import dedup as dd
 
     base = " ".join(f"tok{i}" for i in range(40))
@@ -619,24 +623,32 @@ def test_ngram_jaccard_shuffle_path_matches_broadcast(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cand = dd.minhash_candidate_pairs(docs)
 
-    bcast = sorted(map(tuple, dd.ngram_jaccard(docs, cand, True).collect()))
-    shuf = sorted(map(tuple, dd.ngram_jaccard(docs, cand, False).collect()))
-    assert bcast == shuf and len(bcast) > 0
+    big = " ".join(f"w{i} x{i} y{i}" for i in range(40))
+    embedded = spark.createDataFrame(
+        [(1, big), (2, " ".join(big.split()[30:45]))], "doc_id long, text string"
+    )
+    ops = (lambda: dd.ngram_jaccard(docs, cand), lambda: dd.containment_dedup(embedded))
+    bcast = [sorted(map(tuple, op().collect())) for op in ops]
+    assert all(bcast)
 
-    # force the auto path into the shuffle branch: ceiling of 0 pairs
-    # emulates a pair set beyond the broadcast threshold
-    monkeypatch.setattr(dd, "BROADCAST_PAIRS_MAX", 0)
-    auto = dd.ngram_jaccard(docs, cand, None)
-    assert sorted(map(tuple, auto.collect())) == bcast
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    # the pair-set joins ran as shuffled hash joins, not broadcasts
-    assert "ShuffledHashJoin [a" in plan
+    # a ceiling of 0 pairs emulates a pair set beyond the broadcast
+    # threshold
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+    for op, want in zip(ops, bcast):
+        shuf = op()
+        assert sorted(map(tuple, shuf.collect())) == want
+        # the final adaptive plan: the pair-set joins ran as shuffled
+        # hash joins, not broadcasts, and nothing ran as a sort-merge
+        plan = shuf._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "ShuffledHashJoin [a" in final
+        assert "SortMergeJoin" not in final
 
 
 def test_duplicate_clusters_shuffle_path_matches(spark, monkeypatch):
-    """duplicate_clusters with the auto default must produce the same
-    clusters whether the verify stage broadcasts or shuffles."""
-    from ontology_loader_spark.operators import dedup as dd
+    """duplicate_clusters must produce the same clusters whether the
+    verify stage broadcasts or shuffles."""
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark.operators.corpus import duplicate_clusters
 
     base = " ".join(f"w{i}" for i in range(40))
@@ -644,11 +656,9 @@ def test_duplicate_clusters_shuffle_path_matches(spark, monkeypatch):
             (2, " ".join(f"z{i}" for i in range(40)))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    want = sorted(map(tuple, duplicate_clusters(
-        docs, threshold=0.5, broadcast_pairs=True).collect()))
-    monkeypatch.setattr(dd, "BROADCAST_PAIRS_MAX", 0)
-    got = sorted(map(tuple, duplicate_clusters(
-        docs, threshold=0.5, broadcast_pairs=None).collect()))
+    want = sorted(map(tuple, duplicate_clusters(docs, threshold=0.5).collect()))
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+    got = sorted(map(tuple, duplicate_clusters(docs, threshold=0.5).collect()))
     assert got == want
 
 

@@ -90,15 +90,16 @@ def test_term_lca_tie_breaks_min_id(spark):
     assert row["lca_depth"] == 1
 
 
-def test_term_lca_broadcast_vs_shuffle_paths_agree(spark):
+def test_term_lca_broadcast_vs_shuffle_paths_agree(spark, monkeypatch):
+    from ontology_loader_spark import partitioning
+
     pairs = spark.createDataFrame(
         [("C", "D"), ("C", "E"), ("F", "C")], "a string, b string"
     )
     kw = dict(closure=_closure_df(spark), depths=_depths_df(spark), pairs=pairs)
-    bc = {tuple(r) for r in term_lca(**kw, broadcast_pairs=True,
-                                     broadcast_depths=True).collect()}
-    sh = {tuple(r) for r in term_lca(**kw, broadcast_pairs=False,
-                                     broadcast_depths=False).collect()}
+    bc = {tuple(r) for r in term_lca(**kw).collect()}
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+    sh = {tuple(r) for r in term_lca(**kw).collect()}
     assert bc == sh and len(bc) == 3
 
 
@@ -300,6 +301,7 @@ def test_sharded_arm_carries_ts_like_collected_arm(spark):
 def test_detect_mentions_dispatches_past_ceiling(spark, monkeypatch):
     """A dictionary larger than the broadcast ceiling goes to the
     sharded arm and returns the collected arm's rows."""
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark.transcripts import mentions
 
     transcripts, _ = _dup_key_corpus(spark)
@@ -311,7 +313,7 @@ def test_detect_mentions_dispatches_past_ceiling(spark, monkeypatch):
         spark, transcripts, md, ("ts",)).collect()))
     calls = []
     sharded_arm = mentions._detect_mentions_sharded
-    monkeypatch.setattr(mentions, "BROADCAST_DICT_ROWS_MAX", 2)
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 2)
     monkeypatch.setattr(mentions, "_detect_mentions_sharded",
                         lambda *a, **k: calls.append(a) or sharded_arm(*a, **k))
     got = sorted(map(tuple, mentions.detect_mentions(

@@ -1,11 +1,13 @@
 """The shared semi-naive fixpoint: bounded loops raise naming their
-operator, each call logs its rounds, and incremental maintenance stays
-inside a Spark-job budget."""
+operator, each call logs its rounds, each measured dispatch writes one
+decision record, and incremental maintenance stays inside a Spark-job
+budget."""
 
 import logging
 
 import pytest
 
+from ontology_loader_spark import partitioning
 from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
@@ -132,6 +134,55 @@ def test_fixpoint_logs_rounds_and_frontier_sizes(spark, caplog):
     # 5 reflexive seeds, then one pair fewer per hop of the chain
     assert rec.new_rows == [5, 4, 3, 2, 1, 0]
     assert rec.rounds == 5
+
+
+def test_each_dispatch_family_logs_one_decision(spark, caplog):
+    """One call per family of measured dispatch writes exactly one
+    DEBUG decision record: operator, measured count, threshold, choice."""
+    import datetime
+
+    from ontology_loader_spark.operators.dedup import ngram_jaccard
+    from ontology_loader_spark.operators.graph import term_ancestor_jaccard
+    from ontology_loader_spark.operators.materialize import transitive_reduction
+    from ontology_loader_spark.pipeline import mention_triples_from_closure
+    from ontology_loader_spark.schemas import TRANSCRIPT_SCHEMA
+    from ontology_loader_spark.transcripts.mentions import detect_mentions
+    from ontology_loader_spark.transcripts.unionfind import connected_components_auto
+
+    top = partitioning.BROADCAST_ROWS_MAX
+    rel = relevant_entities(_terms(spark, 4), ONT)
+    clo = spark.createDataFrame([("P:1", "P:0"), ("P:1", "P:1"), ("P:0", "P:0")],
+                                "subject string, object string")
+    links = spark.createDataFrame([("c", 0, "P:1")],
+                                  "conv_id string, turn_idx int, term_id string")
+    ab = spark.createDataFrame([(0, 1)], "a long, b long")
+    docs = spark.createDataFrame([(0, "a b c d"), (1, "a b c e")], "doc_id long, text string")
+    uv = spark.createDataFrame([(0, 1), (1, 0)], "u long, v long")
+    tr = spark.createDataFrame(
+        [("c", 0, "user", "t1 here", None, datetime.datetime(2026, 6, 1))], TRANSCRIPT_SCHEMA
+    )
+    md = spark.createDataFrame([("P:1", "t1"), ("P:2", "t2")], "id string, name string")
+    calls = [
+        (lambda: mention_triples_from_closure(links, clo),
+         ("mention_triples_from_closure", 3, top, "broadcast")),
+        (lambda: term_ancestor_jaccard(clo, ab.selectExpr("'P:0' a", "'P:1' b")),
+         ("term_ancestor_jaccard", 1, top, "broadcast")),
+        (lambda: ngram_jaccard(docs, ab), ("ngram_jaccard", 1, top, "broadcast")),
+        (lambda: connected_components_auto(docs.selectExpr("doc_id AS node"), uv),
+         ("connected_components_auto", 2, top, "driver")),
+        (lambda: detect_mentions(spark, tr, md), ("detect_mentions", 2, top, "collected")),
+        (lambda: transitive_reduction(_edges(spark, _chain(4))),
+         ("transitive_reduction", 3, top, "broadcast")),
+        (lambda: ancestor_closure(_edges(spark, _chain(4)), rel, ONT),
+         ("ancestor_closure", 3, closure.LOCAL_CLOSURE_EDGES_MAX, "local")),
+    ]
+    for call, want in calls:
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger=partitioning.__name__):
+            call()
+        (rec,) = [r for r in caplog.records if r.name == partitioning.__name__]
+        assert rec.levelno == logging.DEBUG
+        assert (rec.op_name, rec.measured, rec.threshold, rec.choice) == want
 
 
 def test_incremental_maintenance_job_budget(spark, monkeypatch, job_count):

@@ -172,10 +172,11 @@ def test_sharded_detection_large_dictionary(spark):
     assert got == want
 
 
-def test_union_find_auto_dispatch_parity(spark):
+def test_union_find_auto_dispatch_parity(spark, monkeypatch):
     """Auto-dispatch picks the variant from the measured pair count;
     all three variants agree (min-label parity), including the
     long-typed node domain and nodes untouched by any pair."""
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark.transcripts.unionfind import (
         connected_components,
         connected_components_auto,
@@ -192,10 +193,13 @@ def test_union_find_auto_dispatch_parity(spark):
         connected_components(nodes, pairs),
         connected_components_dict_bounded(nodes, pairs),
         connected_components_auto(nodes, pairs),             # dict path
-        connected_components_auto(nodes, pairs, dict_pairs_max=0),  # iterative
     ):
         got = {r["node"]: r["component"] for r in comps_df.collect()}
         assert got == expect
+    with monkeypatch.context() as mp:
+        mp.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+        iterative = connected_components_auto(nodes, pairs)
+        assert {r["node"]: r["component"] for r in iterative.collect()} == expect
 
     # empty pair set: every node is its own component on both paths
     empty = spark.createDataFrame([], "u long, v long")
@@ -292,11 +296,12 @@ def test_redirect_map_terminates_on_cycles(spark):
 def test_mention_ancestor_shuffle_path_matches_broadcast(spark, monkeypatch):
     """NCBITaxon-scale closures exceed Spark's broadcast ceiling, so the
     closure join must auto-dispatch onto a shuffle-hash equi-join with
-    identical output. Pin broadcast=True vs broadcast=False equality,
-    then force the auto default (None) into the shuffle branch with a
-    zero ceiling and assert it neither broadcasts nor sort-merges."""
+    identical output. Force the shuffle branch with a zero ceiling and
+    assert it returns the broadcast arm's rows and neither broadcasts
+    nor sort-merges."""
     import datetime
 
+    from ontology_loader_spark import partitioning
     from ontology_loader_spark import pipeline as pl
     from ontology_loader_spark.schemas import (
         EDGE_SCHEMA,
@@ -327,16 +332,13 @@ def test_mention_ancestor_shuffle_path_matches_broadcast(spark, monkeypatch):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    bcast = rows(pl.mention_ancestor_triples(
-        spark, tr, md, ed, td, "p", broadcast_closure=True))
-    shuf_df = pl.mention_ancestor_triples(
-        spark, tr, md, ed, td, "p", broadcast_closure=False)
-    assert rows(shuf_df) == bcast and len(bcast) > 0
+    bcast = rows(pl.mention_ancestor_triples(spark, tr, md, ed, td, "p"))
+    assert len(bcast) > 0
 
-    monkeypatch.setattr(pl, "BROADCAST_CLOSURE_PAIRS_MAX", 0)
-    auto = pl.mention_ancestor_triples(spark, tr, md, ed, td, "p")
-    assert rows(auto) == bcast
-    plan = auto._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
+    shuf = pl.mention_ancestor_triples(spark, tr, md, ed, td, "p")
+    assert rows(shuf) == bcast
+    plan = shuf._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin [term_id" in plan
     assert "SortMergeJoin" not in plan
 
