@@ -109,8 +109,9 @@ def q_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_incremental_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance gate: split the edge set ~16:1 by an
     md5 predicate, compute the prior closure on the large part, then
-    delta-update with the small part — the result must hash-match the
-    FULL-closure oracle (same oracle as ancestor_closure)."""
+    update with the small part (the closure of the union) — the result
+    must hash-match the FULL-closure oracle (same oracle as
+    ancestor_closure)."""
     from ontology_loader_spark.operators.closure import incremental_closure_update
 
     td = derive.derive_term_dict(spark, sf_dir)
@@ -128,10 +129,10 @@ def q_incremental_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_incremental_closure_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion-maintenance gate: mark a 1/16 md5 slice of the edges
-    deleted, compute the prior closure on the FULL set, then delete-
-    cone invalidate + re-derive — the result must hash-match a fresh
-    closure over the remaining edges (oracle recomputes from scratch;
-    DELETE_RESIDUE shared with the SQL)."""
+    deleted, compute the prior closure on the FULL set, then delete
+    (the closure of the remaining edges) — the result must hash-match a
+    fresh closure over the remaining edges (oracle recomputes from
+    scratch; DELETE_RESIDUE shared with the SQL)."""
     from ontology_loader_spark.operators.closure import (
         incremental_closure_delete,
     )

@@ -1,11 +1,11 @@
 """One semi-naive fixpoint loop with one Spark action per round.
 
 Every set-growing hierarchy walk runs on :func:`semi_naive_fixpoint`:
-the closure family (the frontier closure, the incremental add, the
-reverse reach shared by add and delete), the ``(s, o)`` reach that
-``transitive_reduction`` and ``cycle_members`` share with the frontier
-closure (``operators/closure.py::_reach``), and ``term_depth``, which
-reads ``born`` as the depth.
+the ``(s, o)`` reach (``operators/closure.py::_reach``) that the
+closure's distributed arm, ``transitive_reduction`` and
+``cycle_members`` share, and ``term_depth``, which reads ``born`` as
+the depth. Each bounds its rounds at its distinct hierarchy-edge
+count plus one, so the bound is never a knob.
 At gate scale a fixpoint is bound by its job count, not by data
 movement. The whole state is re-pinned each round on purpose: a
 growing union of pinned parts saves no job but runs more tasks.
@@ -42,35 +42,27 @@ def semi_naive_fixpoint(
     *,
     max_iterations: int,
     op_name: str,
-    known: DataFrame | None = None,
 ) -> DataFrame:
-    """Least fixpoint of ``seed ∪ step(new rows)`` over ``keys``, minus
-    the rows of ``known``, as one pinned ``(keys, born)`` frame: seed
-    rows are born at 0, rows first reached in round r at r. Round r
+    """Least fixpoint of ``seed ∪ step(new rows)`` over ``keys``, as one
+    pinned ``(keys, born)`` frame: seed rows are born at 0, rows first
+    reached in round r at r. Round r
     unions ``step(state.filter(born == r - 1))`` into the state,
     reduces it with one ``groupBy(keys).agg(min(born))`` and pins it;
     the round's new-row count is observed on that pin's job.
 
     ``step`` maps the frontier (last round's new rows: ``keys`` and
     ``born``) to candidate rows with the ``keys`` columns; duplicates
-    and rows already in the state are absorbed by the reduction.
-    ``known`` rows (a pinned frame, read every round) join the
-    reduction at born -1 and are dropped before the pin: they are never
-    stepped from, and the pin stays delta-sized however large ``known``
-    is (an add batch's prior closure). Raises ``RuntimeError`` naming ``op_name`` when round
-    ``max_iterations`` still produced new rows. Logs one DEBUG record
-    per call with the round count and each round's new-row count
-    (round 0 = seed)."""
+    and rows already in the state are absorbed by the reduction. Raises
+    ``RuntimeError`` naming ``op_name`` when round ``max_iterations``
+    still produced new rows. Logs one DEBUG record per call with the
+    round count and each round's new-row count (round 0 = seed)."""
     keys = list(keys)
     born = F.col(BORN)
     rows = seed.select(*keys, F.lit(0).alias(BORN))
-    prior = None if known is None else known.select(*keys, F.lit(-1).alias(BORN))
     counts: list[int] = []
     while True:
         r = len(counts)
-        if prior is not None:
-            rows = prior.unionByName(rows)
-        state = rows.groupBy(*keys).agg(F.min(BORN).alias(BORN)).filter(born >= 0)
+        state = rows.groupBy(*keys).agg(F.min(BORN).alias(BORN))
         state, n = pin_count(state, born == r)
         counts.append(n)
         if not n:

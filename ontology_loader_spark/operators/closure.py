@@ -22,13 +22,15 @@ Reference semantics (``ontology_processor.py:152-211``):
 
 Spark-first design: the reference runs one recursive SQLite traversal
 *per entity* (``:197``). Each operator here dispatches on the count
-of the hierarchy edges it pins (``pin_count``) and logs the choice. A
+of the hierarchy edges it pins and logs the choice. A
 dictionary-bounded hierarchy (at most ``LOCAL_CLOSURE_EDGES_MAX``
 edges) is solved in ONE task: a handful of jobs whatever its height.
-Above it the pair state stays distributed, on path doubling or on
-:func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint`: one
-pinned state and one action per round, keyed by the (subject, object)
-pair, so no salting is needed. Nothing is collected.
+Above it the pair state stays distributed on :func:`_reach`, the
+shared :func:`~ontology_loader_spark.fixpoint.semi_naive_fixpoint`:
+one pinned state and one action per round, keyed by the (subject,
+object) pair, so no salting is needed. Nothing is collected. The
+incremental operators are the closure of their net edge set, on the
+same two arms.
 """
 
 from __future__ import annotations
@@ -36,17 +38,12 @@ from __future__ import annotations
 from collections import defaultdict
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.curie import matches_ontology
-from ontology_loader_spark.partitioning import (
-    fits,
-    join_side,
-    record_decision,
-    state_partitions,
-)
+from ontology_loader_spark.partitioning import fits, join_side, record_decision
 from ontology_loader_spark.schemas import (
     CLOSURE_PREDICATE,
     DEFAULT_PREDICATES,
@@ -55,8 +52,8 @@ from ontology_loader_spark.schemas import (
 
 # Hierarchy edges up to which a closure is solved in one task
 # (_closure_local). DAG k -> k//2 (+ k//3 if k % 4 == 3), pinned, local[4]:
-# 75k edges (1.85M pairs) 10.0 s, 148 MB worker peak RSS vs doubling 34.7 s;
-# 200k (5.7M pairs) 15.1 s, 182 MB vs 156 s. Not a crossover: 200k is the
+# 75k edges (1.85M pairs) 10.0 s, 148 MB worker peak RSS vs path doubling
+# 34.7 s; 200k (5.7M pairs) 15.1 s, 182 MB vs 156 s. Not a crossover: 200k is the
 # largest size tried and the task's cost grows with pairs; above, unverified.
 LOCAL_CLOSURE_EDGES_MAX = 200_000
 
@@ -124,7 +121,6 @@ def ancestor_closure(
     relevant: DataFrame,
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iterations: int = 64,
 ) -> DataFrame:
     """J2+J3 — reflexive transitive closure triples.
 
@@ -146,13 +142,21 @@ def ancestor_closure(
 
     The count of the pinned distinct hierarchy edges picks the solver:
     one task (:func:`_closure_local`) at most ``LOCAL_CLOSURE_EDGES_MAX``,
-    else path doubling, which raises ``RuntimeError`` past
-    ``max_iterations`` rounds.
+    else :func:`_reach` from the reflexive seed.
     """
-    hedges, n_hedges = hierarchy_pairs(edges, predicates)
-    if _local("ancestor_closure", n_hedges):
+    hedges, n = hierarchy_pairs(edges, predicates)
+    return _closure("ancestor_closure", hedges, n, relevant, ontology)
+
+
+def _closure(
+    op_name: str, hedges: DataFrame, n: int, relevant: DataFrame, ontology: str
+) -> DataFrame:
+    """The closure of ``relevant`` over the pinned ``hedges`` (``n``
+    rows), on the arm ``n`` picks."""
+    if _local(op_name, n):
         return _closure_local(hedges, relevant, ontology)
-    return _closure_doubling(hedges, n_hedges, relevant, ontology, max_iterations)
+    seed = relevant.select(F.col("id").alias("s"), F.col("id").alias("o"))
+    return _emit(_reach(seed, hedges, n, op_name, fits(op_name, n)), ontology)
 
 
 def _local(op_name: str, n: int) -> bool:
@@ -197,25 +201,24 @@ def _closure_local(hedges: DataFrame, relevant: DataFrame, ontology: str) -> Dat
     return _emit(rows.mapInPandas(solve, "s string, o string"), ontology)
 
 
-def _closure_frontier(hedges: DataFrame, relevant: DataFrame, ontology: str, max_iterations: int):
-    """Semi-naive BFS over ``hedges`` from a reflexive seed (Q1):
-    O(depth) rounds, each stepping only the pairs born in the last."""
-    seed = relevant.select(F.col("id").alias("s"), F.col("id").alias("o"))
-    return _emit(_reach(seed, hedges, max_iterations, "ancestor_closure"), ontology)
-
-
-def _reach(seed: DataFrame, hedges: DataFrame, max_iterations: int, op_name: str) -> DataFrame:
+def _reach(
+    seed: DataFrame, hedges: DataFrame, n: int, op_name: str, broadcast: bool
+) -> DataFrame:
     """Pairs ``(s, o, born)``: the ``(s, o)`` seed pairs, extended by
     whole ``hedges`` paths from each ``o``, on the shared fixpoint;
     ``born`` is the fewest hops a pair needs past its seed. ``hedges``
-    (pinned ``(subject, object)``) broadcasts every round."""
+    is pinned ``(subject, object)`` with ``n`` rows, the join's build
+    side as ``broadcast`` picks (``partitioning.py``'s rule). The round
+    bound is ``n + 1``: a shortest path uses each distinct edge at most
+    once, so only a bug can reach it."""
+    side = join_side(hedges, broadcast)
     return semi_naive_fixpoint(
         seed,
-        lambda f: f.join(F.broadcast(hedges), f["o"] == hedges["subject"]).select(
+        lambda f: f.join(side, f["o"] == hedges["subject"]).select(
             f["s"], hedges["object"].alias("o")
         ),
         ["s", "o"],
-        max_iterations=max_iterations,
+        max_iterations=n + 1,
         op_name=op_name,
     )
 
@@ -231,13 +234,6 @@ def _emit(pairs: DataFrame, ontology: str) -> DataFrame:
     )
 
 
-def _hedge_set(edges: DataFrame, predicates) -> tuple[DataFrame, int]:
-    """Pinned hierarchy ``(subject, object)`` pairs (duplicates are
-    absorbed by the fixpoint's reduction and the local DFS) and their
-    count."""
-    return pin_count(select_hierarchy_edges(edges, predicates).select("subject", "object"))
-
-
 def incremental_closure_update(
     edges: DataFrame,
     new_edges: DataFrame,
@@ -245,86 +241,20 @@ def incremental_closure_update(
     relevant: DataFrame,
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iterations: int = 64,
 ) -> DataFrame:
-    """Maintain the reflexive transitive closure under edge ADDITIONS —
-    the new-ontology-version case the reconciliation pipeline exists
-    for. At most ``LOCAL_CLOSURE_EDGES_MAX`` hierarchy edge ROWS in
-    ``edges ∪ new_edges`` (duplicates and same (s, o) under two
-    predicates count, unlike the distinct pairs the other two count),
-    the closure is re-solved in one task; ``prior_closure`` is unread.
-    Above it, delta-frontier semi-naive evaluation: a new pair can only
-    arise as ``reach(s, a) ∘ new(a, b) ∘ reach(b, o)``. ``prior_closure``
-    alone cannot seed the reach-in side: quirk Q2 filters foreign
-    objects at EMISSION, so a pair (s → foreign a) was never stored
-    though traversal passes through it. The seed is therefore a reverse
-    BFS over the RAW (old ∪ new) edge set from the new edges' subjects
-    — rows ∝ the delta's ancestor cone, never the old closure —
-    intersected with the closure domain. The forward fixpoint then
-    steps only the genuinely-new pairs against the full edge set
-    (joined by the one join-side rule, ``partitioning.py``), prior
-    pairs ``known``.
-
-    ``prior_closure``: (subject, predicate, object, type) as produced
-    by :func:`ancestor_closure` over ``edges``. Returns the closure of
-    ``edges ∪ new_edges`` in the same shape, equal to a fresh
-    :func:`ancestor_closure` run (pinned by a randomized test). New
-    pairs never include a prior pair (those are ``known``), so the
-    result is a disjoint union and needs no distinct."""
-    all_hedges, n_hedges = _hedge_set(edges.unionByName(new_edges), predicates)
-    if _local("incremental_closure_update", n_hedges):
-        return _closure_local(all_hedges, relevant, ontology)
-    hedges_side = join_side(all_hedges, fits("incremental_closure_update hedges", n_hedges))
-    new_h = select_hierarchy_edges(new_edges, predicates)
-
-    revreach = _reverse_reach(
-        all_hedges, hedges_side, new_h, max_iterations, "incremental_closure_update"
+    """The closure under edge ADDITIONS — the new-ontology-version case
+    the reconciliation pipeline exists for: the closure of the net edge
+    set ``edges ∪ new_edges``, equal to a fresh :func:`ancestor_closure`
+    run over it. ``prior_closure`` (the closure of ``edges``) is not
+    read. The dispatch counts the hierarchy edge ROWS, duplicates
+    included: both arms absorb duplicates, and a distinct would cost
+    the one-task arm a shuffle job (3 jobs, not 2, with the result's
+    count)."""
+    hedges, n = pin_count(
+        select_hierarchy_edges(edges.unionByName(new_edges), predicates)
+        .select("subject", "object")
     )
-    # seed: (u ∈ closure domain) →* a, new edge a → b  ⇒  pair (u, b)
-    seed = (
-        revreach.join(
-            F.broadcast(relevant.withColumnRenamed("id", "u")), "u", "left_semi"
-        )
-        .join(new_h.withColumnRenamed("subject", "a"), "a")
-        .select(F.col("u").alias("s"), F.col("object").alias("o"))
-    )
-    reach = semi_naive_fixpoint(
-        seed,
-        lambda f: f.join(hedges_side, f["o"] == all_hedges["subject"]).select(
-            f["s"], all_hedges["object"].alias("o")
-        ),
-        ["s", "o"],
-        known=prior_closure.selectExpr("subject AS s", "object AS o"),
-        max_iterations=max_iterations,
-        op_name="incremental_closure_update",
-    )
-    return prior_closure.unionByName(_emit(reach, ontology))
-
-
-def _reverse_reach(
-    all_hedges: DataFrame,
-    hedges_side,
-    seeds: DataFrame,
-    max_iterations: int,
-    op_name: str,
-    keys: tuple[str, ...] = ("u", "a"),
-) -> DataFrame:
-    """Reverse BFS over the hierarchy edge set: revreach(u, a) ⇔
-    u →* a over ``all_hedges``, seeded reflexively at each ``subject``
-    of ``seeds``. The row count iterated is proportional to the seeds'
-    ancestor cone, never the full closure — the property both
-    incremental-maintenance directions rely on. ``keys=("u",)`` keeps
-    only the reaching nodes (the delete needs no seed per row).
-    ``hedges_side``: ``all_hedges`` as a join side."""
-    return semi_naive_fixpoint(
-        seeds.select(F.col("subject").alias("u"), F.col("subject").alias("a")),
-        lambda f: f.join(hedges_side, f["u"] == all_hedges["object"]).select(
-            all_hedges["subject"].alias("u"), *keys[1:]
-        ),
-        keys,
-        max_iterations=max_iterations,
-        op_name=f"{op_name} reverse pass",
-    ).select(*keys)
+    return _closure("incremental_closure_update", hedges, n, relevant, ontology)
 
 
 def incremental_closure_delete(
@@ -334,105 +264,14 @@ def incremental_closure_delete(
     relevant: DataFrame,
     ontology: str,
     predicates: tuple[str, ...] = DEFAULT_PREDICATES,
-    max_iterations: int = 64,
 ) -> DataFrame:
-    """Maintain the closure under edge DELETIONS — the other half of
-    ontology-release maintenance. At most ``LOCAL_CLOSURE_EDGES_MAX``
-    distinct hierarchy edges in ``edges − deleted_edges`` (their pin's
-    count), the new closure is re-solved in one task and
-    ``prior_closure`` is not read. Above it, untouched rows are kept:
-    delete-cone invalidation + re-derive (the DRed shape specialized
-    to reachability). A pair (s, o) can only LOSE a derivation if some
-    path from ``s`` used a deleted edge, which requires ``s →* a`` over
-    the OLD edge set for a deleted edge's subject ``a``. So:
-
-    1. reverse BFS over the OLD hierarchy edges from the deleted
-       edges' subjects — cost proportional to the delete cone;
-    2. ``affected`` = those sources ∩ closure domain; every stored row
-       of an affected subject is invalidated (over-delete);
-    3. re-derive: a fresh closure restricted to the affected subjects
-       over the remaining edge set, by the MEASURED cone size: a small
-       cone seeds a frontier BFS (cost ~ the cone, O(depth) rounds); a
-       cone of half the closure domain or more (a deletion near the
-       roots) takes path doubling's O(log2 depth) rounds;
-    4. untouched subjects' rows carry over verbatim.
-
-    The union is disjoint by subject, so no distinct is needed.
-    ``prior_closure`` must be the closure of ``edges``; returns the
-    closure of ``edges − deleted_edges``, equal to a fresh
-    :func:`ancestor_closure` run (randomized-delta test + gate)."""
-    # remove by full (s, p, o): a same-(s, o) edge under a predicate
-    # not being deleted must keep its hierarchy pair alive
+    """The closure under edge DELETIONS — the other half of
+    ontology-release maintenance: the closure of the net edge set
+    ``edges`` minus ``deleted_edges``, equal to a fresh
+    :func:`ancestor_closure` run over it. Removal is by full (s, p, o):
+    a same-(s, o) edge under a predicate not being deleted keeps its
+    hierarchy pair alive. ``prior_closure`` is not read."""
     key = ["subject", "predicate", "object"]
     remaining = edges.join(F.broadcast(deleted_edges.select(*key)), key, "left_anti")
-    rem_h, n_rem = hierarchy_pairs(remaining, predicates)
-    if _local("incremental_closure_delete", n_rem):
-        return _closure_local(rem_h, relevant, ontology)
-    old_h, n_old = _hedge_set(edges, predicates)
-    hedges_side = join_side(old_h, fits("incremental_closure_delete hedges", n_old))
-    revreach = _reverse_reach(
-        old_h,
-        hedges_side,
-        select_hierarchy_edges(deleted_edges, predicates),
-        max_iterations,
-        "incremental_closure_delete",
-        keys=("u",),
-    )
-    # one job measures both sides of the strategy dispatch below: the
-    # cone on the pin, the closure domain on the semi-join's streamed side
-    domain = Observation()
-    affected, n_affected = pin_count(
-        relevant.observe(domain, F.count(F.lit(1)).alias("n")).join(
-            F.broadcast(revreach.select(F.col("u").alias("id"))), "id", "left_semi"
-        )
-    )
-
-    kept = prior_closure.join(
-        F.broadcast(affected.withColumnRenamed("id", "subject")),
-        "subject",
-        "left_anti",
-    )
-    if n_affected * 2 >= domain.get["n"]:
-        rederived = _closure_doubling(rem_h, n_rem, affected, ontology, max_iterations)
-    else:
-        rederived = _closure_frontier(rem_h, affected, ontology, max_iterations)
-    return kept.select(*prior_closure.columns).unionByName(rederived)
-
-
-def _closure_doubling(
-    hedges: DataFrame, n: int, relevant: DataFrame, ontology: str, max_iterations: int
-) -> DataFrame:
-    """Path-doubling reachability over the ``n`` pinned distinct
-    ``hedges``: square the pair relation until the fixpoint —
-    reach(k+1) = reach(k) ∪ (reach(k) ⋈ reach(k)); the pair count,
-    observed on each round's pin, is the convergence test (one action
-    per round)."""
-    spark = hedges.sparkSession
-    reach = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
-    for _ in range(max_iterations):
-        # a broadcast side saves the round's two shuffle-join jobs; at
-        # 1.85M pairs it cost no time (doubling closure, local[4])
-        right = join_side(reach, fits("ancestor_closure doubling", n)).alias("r")
-        squared = (
-            reach.alias("l")
-            .join(right, F.col("l.o") == F.col("r.s"))
-            .select(F.col("l.s").alias("s"), F.col("r.o").alias("o"))
-        )
-        # iteration-state width follows the observed pair count:
-        # dictionary-scale graphs stay on a few tasks per round,
-        # corpus-scale graphs fan out up to the session shuffle width
-        reach, n2 = pin_count(
-            reach.unionByName(squared)
-            .distinct()
-            .coalesce(state_partitions(spark, n * 2))
-        )
-        if n2 == n:
-            break
-        n = n2
-    else:
-        raise RuntimeError(f"ancestor_closure did not converge in {max_iterations}")
-    rel = relevant.select(F.col("id").alias("s"))
-    reached = rel.join(reach, "s", "inner").select("s", "o")
-    reflexive = rel.select("s", F.col("s").alias("o"))
-    # a cycle can make s reach itself — dedup against the reflexive seed
-    return _emit(reflexive.unionByName(reached).distinct(), ontology)
+    hedges, n = hierarchy_pairs(remaining, predicates)
+    return _closure("incremental_closure_delete", hedges, n, relevant, ontology)

@@ -252,37 +252,44 @@ def ngram_jaccard(documents: DataFrame, pairs: DataFrame) -> DataFrame:
     the pair key when it fits. But the cap bounds pairs PER BUCKET
     while bucket count grows with the corpus, so the capped set is
     corpus-sized at 100 TB: the pair set is therefore pinned and
-    measured, and both pair-keyed joins follow the one join-side rule
-    (``partitioning.py``) — broadcast up to ``BROADCAST_ROWS_MAX``
-    pairs, shuffle hash join on doc id above."""
-    pairs, bc = pin_fits(pairs, "ngram_jaccard")
-    tokset = doc_shingles(documents).distinct()
-    sizes = tokset.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ta = tokset.select(F.col("doc_id").alias("a"), "shingle")
-    tb = tokset.select(F.col("doc_id").alias("b"), "shingle")
-    # shuffle path: hash-join hints keep the pair joins off sort-merge
-    # (the shingle side is exploded-corpus-sized — sorting it would
-    # dominate the operator)
+    measured, and every pair-keyed side follows the one join-side rule
+    (``partitioning.py``, in :func:`_pair_overlap`) — broadcast up to
+    ``BROADCAST_ROWS_MAX`` pairs, shuffle hash join on doc id above."""
+    return _pair_overlap(documents, pairs, "ngram_jaccard").select(
+        "a",
+        "b",
+        (
+            F.col("n_inter").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("n_inter")).cast("double")
+        ).alias("jaccard"),
+    )
+
+
+def _pair_overlap(documents: DataFrame, pairs: DataFrame, op_name: str) -> DataFrame:
+    """``(a, b, n_inter, na, nb)`` per candidate pair: the distinct
+    shingles the two docs share (0 when disjoint) and each doc's own
+    count; a pair whose doc is too short to shingle drops at the sizes
+    join. The pair set is pinned and measured; every pair-keyed side
+    follows the one join-side rule (``partitioning.py``), and the
+    corpus-sized shingle side of the ``(b, shingle)`` join is hinted
+    ``shuffle_hash`` whatever the count, so no join sorts."""
+    pairs, bc = pin_fits(pairs, op_name)
+    ds = doc_shingles(documents).distinct()
+    sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
+    ta = ds.select(F.col("doc_id").alias("a"), "shingle")
+    tb = ds.select(F.col("doc_id").alias("b"), "shingle")
     inter = (
-        join_side(pairs, bc).join(ta, "a").join(tb, ["b", "shingle"])
+        join_side(pairs, bc).join(ta, "a").join(tb.hint("shuffle_hash"), ["b", "shingle"])
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_inter"))
     )
-    return (
-        # inter is keyed by candidate pair — same bounded size as the
-        # capped pair set, so it broadcasts into the left join too
-        pairs.join(join_side(inter, bc), ["a", "b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a")
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
-        )
+    # inter is keyed by candidate pair: the same bounded size as the pairs
+    scored = pairs.join(join_side(inter, bc), ["a", "b"], "left").na.fill({"n_inter": 0})
+    sized = join_side(scored, bc).join(
+        sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a"
+    )
+    return join_side(sized, bc).join(
+        sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b"
     )
 
 
@@ -543,31 +550,13 @@ def containment_dedup(
     (ties broken by doc_id), so the direction is deterministic.
 
     Candidates default to :func:`rare_shingle_candidates` (bounded by
-    the rare-df cap); the intersection joins follow the
-    ``ngram_jaccard`` shape and its measured join-side rule. Ratio of
+    the rare-df cap); the overlap counts are ``ngram_jaccard``'s
+    (:func:`_pair_overlap`), joined by the same measured rule. Ratio of
     exact ints → bit-identical across engines."""
     if pairs is None:
         pairs = rare_shingle_candidates(documents)
-    pairs, bc = pin_fits(pairs, "containment_dedup")
-    ds = doc_shingles(documents).distinct()
-    sizes = ds.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ta = ds.select(F.col("doc_id").alias("a"), "shingle")
-    tb = ds.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        join_side(pairs, bc).join(ta, "a").join(tb, ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
     scored = (
-        # left join + zero-fill so disjoint candidate pairs score 0.0
-        # instead of vanishing (same shape as ngram_jaccard); pairs
-        # whose doc is too short to shingle drop at the sizes join
-        pairs.join(join_side(inter, bc), ["a", "b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(
-            sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na")), "a"
-        )
-        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb")), "b")
+        _pair_overlap(documents, pairs, "containment_dedup")
         .select(
             "a",
             "b",

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ontology_loader_spark.fixpoint import BORN, pin_count, semi_naive_fixpoint
 from ontology_loader_spark.operators.closure import hierarchy_pairs
-from ontology_loader_spark.partitioning import join_side, pin_fits
+from ontology_loader_spark.partitioning import fits, join_side, pin_fits
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 SCALE = 10 ** 12
@@ -301,9 +301,10 @@ def term_depth(
     all key on it. BFS from the roots on the shared semi-naive
     fixpoint: each round steps from the nodes settled in the last one
     to their children, and a node is settled in the FIRST (minimal)
-    round that reaches it, which is the fixpoint's ``born``. The edge
-    set broadcasts (ontology-bounded). The round bound is the distinct
-    edge count plus one: a shortest path uses each edge at most once.
+    round that reaches it, which is the fixpoint's ``born``. The
+    distinct edge count picks the edge join's side (``partitioning.py``'s
+    rule) and bounds the rounds at itself plus one: a shortest path uses
+    each edge at most once.
 
     Assumes the hierarchy is acyclic — run ``validate.cycle_members``
     first; a cycle's nodes have no root path, never enter the frontier,
@@ -315,9 +316,10 @@ def term_depth(
     roots = hedges.select(F.col("object").alias("id")).join(
         hedges.select(F.col("subject").alias("id")), "id", "left_anti"
     )
+    side = join_side(hedges, fits("term_depth", n))
     settled = semi_naive_fixpoint(
         roots,
-        lambda f: f.join(F.broadcast(hedges), f["id"] == hedges["object"]).select(
+        lambda f: f.join(side, f["id"] == hedges["object"]).select(
             hedges["subject"].alias("id")
         ),
         ["id"],

@@ -68,13 +68,14 @@ def transitive_reduction(
     witness. The walk's round bound is the distinct edge count plus
     one: a shortest path uses each edge at most once. That count also
     sizes the edge-keyed joins (``partitioning.py``'s join-side rule):
-    ``redundant`` is a subset of the edges. The walk is reach-sized, not
-    edge-sized, so its semi-join is shuffle-hashed whatever ``n``.
+    ``redundant`` is a subset of the edges, and the walk's own step
+    joins the edges. The walk is reach-sized, not edge-sized, so its
+    semi-join is shuffle-hashed whatever ``n``.
     """
     hedges, n = hierarchy_pairs(edges, predicates)
     bc = fits("transitive_reduction", n)
     seed = hedges.select(F.col("subject").alias("s"), F.col("object").alias("o"))
-    walk = _reach(seed, hedges, n + 1, "transitive_reduction")
+    walk = _reach(seed, hedges, n, "transitive_reduction", bc)
     # redundant (s, o): some edge s->m with m reaching o (path >= 2)
     redundant = (
         hedges.alias("e")

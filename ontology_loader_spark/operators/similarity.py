@@ -159,18 +159,6 @@ def lsh_bucket_sql(col: str, dims: int = LSH_DIMS) -> str:
     return f"CAST({parts} AS INTEGER)"
 
 
-def lsh_buckets(embeddings: DataFrame, dims: int = LSH_DIMS) -> DataFrame:
-    return embeddings.select(
-        "vec_id", lsh_bucket(F.col("embedding"), dims).alias("bucket")
-    )
-
-
-def lsh_buckets_sql(dims: int = LSH_DIMS) -> str:
-    return (
-        f"SELECT vec_id, {lsh_bucket_sql('embedding', dims)} AS bucket FROM embeddings"
-    )
-
-
 def _cap_bucket_members(vecs: DataFrame, max_bucket: int) -> DataFrame:
     """Deterministic per-bucket candidate sample: keep the first
     ``max_bucket`` members of each bucket in md5(vec_id) order. Buckets

@@ -41,6 +41,7 @@ from ontology_loader_spark.operators.closure import (
     hierarchy_pairs,
     select_hierarchy_edges,
 )
+from ontology_loader_spark.partitioning import fits
 from ontology_loader_spark.schemas import DEFAULT_PREDICATES
 
 
@@ -102,10 +103,11 @@ def cycle_members(
     only removes edges that provably lie on no cycle-reaching path.
     The walk's round bound is the distinct hierarchy-edge count plus
     one: a shortest path uses each edge at most once, so only a bug
-    can reach it.
+    can reach it. That count, an upper bound on the core's, also picks
+    the walk's edge-join side (``partitioning.py``'s rule).
     """
     hedges, n = hierarchy_pairs(edges, predicates)
     core = _trim_to_cycle_core(hedges, n)
     seed = core.select(F.col("subject").alias("s"), F.col("object").alias("o"))
-    reach = _reach(seed, core, n + 1, "cycle_members")
+    reach = _reach(seed, core, n, "cycle_members", fits("cycle_members", n))
     return reach.filter(F.col("s") == F.col("o")).select(F.col("s").alias("id"))

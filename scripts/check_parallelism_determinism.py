@@ -217,8 +217,8 @@ def _stream_conv_stats(spark, sf_dir: str, staged: dict, ckpt: str):
 def _stream_edge_cdc_replay(spark, sf_dir: str, staged: dict, ckpt: str):
     """The one remaining order-sensitive streaming composite: the
     4-batch edge-CDC replay's FINAL closure must be bit-identical at
-    any parallelism (adds, duplicate replays, delete cones and re-adds
-    all fold through DRed the same way regardless of partitioning).
+    any parallelism (adds, duplicate replays, deletes and re-adds all
+    fold into one net edge set per batch whatever the partitioning).
     The fixture is content-fingerprinted and shared by both levels;
     replay_edge_cdc manages its own throwaway checkpoint."""
     from pathlib import Path as _P

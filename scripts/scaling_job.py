@@ -7,9 +7,9 @@ This is the north-rule throughput job: read stored transcripts, detect
 mentions against the full hub dictionary (Arrow-batched Aho-Corasick
 UDF), score + top-1 link, canonicalize via redirect map + union-find,
 emit co-mention assertion triples, expand the ontology is_a/part_of
-closure (one task for a dictionary-bounded hierarchy, path doubling
-above the measured ceiling: either keeps the serial driver fraction
-negligible), merge everything distinct. Prints one
+closure (one task for a dictionary-bounded hierarchy, the shared
+semi-naive reach above the measured ceiling: either keeps the serial
+driver fraction negligible), merge everything distinct. Prints one
 JSON line with wall time and throughput.
 
 Corpus handling: the replicated fat-text corpus (R× the sf transcripts

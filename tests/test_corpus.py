@@ -614,7 +614,8 @@ def test_ngram_jaccard_shuffle_path_matches_broadcast(spark, monkeypatch):
     """Corpus-sized candidate sets must take the shuffle-hash path with
     identical output: with the ceiling forced to 0 pairs, ngram_jaccard
     and containment_dedup return the broadcast arm's rows from
-    shuffled hash joins, with no sort-merge join."""
+    shuffled hash joins. On both arms no join is planned as a
+    sort-merge, before or after adaptive re-planning."""
     from ontology_loader_spark import partitioning
     from ontology_loader_spark.operators import dedup as dd
 
@@ -628,19 +629,26 @@ def test_ngram_jaccard_shuffle_path_matches_broadcast(spark, monkeypatch):
         [(1, big), (2, " ".join(big.split()[30:45]))], "doc_id long, text string"
     )
     ops = (lambda: dd.ngram_jaccard(docs, cand), lambda: dd.containment_dedup(embedded))
-    bcast = [sorted(map(tuple, op().collect())) for op in ops]
+
+    def run(op):
+        df = op()
+        rows = sorted(map(tuple, df.collect()))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final, initial = plan.split("== Initial Plan ==")
+        assert "SortMergeJoin" not in initial
+        return rows, final
+
+    bcast = [run(op)[0] for op in ops]
     assert all(bcast)
 
     # a ceiling of 0 pairs emulates a pair set beyond the broadcast
     # threshold
     monkeypatch.setattr(partitioning, "BROADCAST_ROWS_MAX", 0)
     for op, want in zip(ops, bcast):
-        shuf = op()
-        assert sorted(map(tuple, shuf.collect())) == want
+        rows, final = run(op)
+        assert rows == want
         # the final adaptive plan: the pair-set joins ran as shuffled
         # hash joins, not broadcasts, and nothing ran as a sort-merge
-        plan = shuf._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
         assert "ShuffledHashJoin [a" in final
         assert "SortMergeJoin" not in final
 

@@ -7,14 +7,17 @@ import logging
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from ontology_loader_spark import partitioning
+from ontology_loader_spark.fixpoint import semi_naive_fixpoint
 from ontology_loader_spark.operators import closure
 from ontology_loader_spark.operators.closure import (
     ancestor_closure,
+    hierarchy_pairs,
     incremental_closure_delete,
     incremental_closure_update,
     relevant_entities,
-    select_hierarchy_edges,
 )
 from ontology_loader_spark.operators.redirects import redirect_map
 from ontology_loader_spark.schemas import EDGE_SCHEMA, TERM_DICT_SCHEMA
@@ -37,52 +40,108 @@ def _chain(n):
     return [(f"P:{k}", ISA, f"P:{k - 1}") for k in range(1, n)]
 
 
-def _frontier(edges, rel, max_iterations=64):
-    """The distributed frontier arm, which only the delete's small-cone
-    re-derive dispatches to."""
-    hedges = select_hierarchy_edges(edges).select("subject", "object").distinct()
-    return closure._closure_frontier(hedges, rel, ONT, max_iterations)
+def _reflexive(rel):
+    return rel.select(F.col("id").alias("s"), F.col("id").alias("o"))
 
 
-@pytest.mark.parametrize("strategy,max_iterations", [("frontier", 3), ("doubling", 1)])
-def test_ancestor_closure_overrun_raises(spark, monkeypatch, strategy, max_iterations):
-    """The distributed arms raise; the local arm has no round bound."""
-    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+def test_fixpoint_overrun_raises_naming_op(spark):
+    """A bounded loop that still finds new rows in its last round
+    raises, naming its operator: an 8-chain needs seven hops."""
+    hedges, _ = hierarchy_pairs(_edges(spark, _chain(8)))
     rel = relevant_entities(_terms(spark, 8), ONT)
-    with pytest.raises(RuntimeError, match="ancestor_closure"):
-        if strategy == "frontier":
-            _frontier(_edges(spark, _chain(8)), rel, max_iterations)
-        else:
-            ancestor_closure(
-                _edges(spark, _chain(8)), rel, ONT, max_iterations=max_iterations
-            )
+    with pytest.raises(RuntimeError, match="x did not converge in 2"):
+        semi_naive_fixpoint(
+            _reflexive(rel),
+            lambda f: f.join(hedges, f["o"] == hedges["subject"]).select(
+                f["s"], hedges["object"].alias("o")
+            ),
+            ["s", "o"],
+            max_iterations=2,
+            op_name="x",
+        )
+
+
+def _cut_rounds(monkeypatch, rounds):
+    """Bound the closure family's distributed loop at ``rounds``, below
+    the distinct-edge bound it sets itself, and force that arm
+    (ceiling 0)."""
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+
+    def cut(*args, max_iterations: int, **kwargs):
+        return semi_naive_fixpoint(*args, max_iterations=rounds, **kwargs)
+
+    monkeypatch.setattr(closure, "semi_naive_fixpoint", cut)
+
+
+def _doubling_tree(n):
+    """P:k subClassOf P:k//2 for k in 2..n-1 — each level twice as wide
+    as the one above it."""
+    return [(f"P:{k}", ISA, f"P:{k // 2}") for k in range(2, n)]
+
+
+@pytest.mark.parametrize("graph,max_iterations", [("frontier", 3), ("doubling", 1)])
+def test_ancestor_closure_overrun_raises(spark, monkeypatch, graph, max_iterations):
+    """The distributed arm, cut short, raises naming ``ancestor_closure``
+    (the local arm has no round bound). ``frontier``: an 8-chain, whose
+    frontier gains one hop a round for seven rounds; ``doubling``: a
+    16-node binary tree, three hops deep."""
+    rows = _chain(8) if graph == "frontier" else _doubling_tree(16)
+    rel = relevant_entities(_terms(spark, 16), ONT)
+    _cut_rounds(monkeypatch, max_iterations)
+    with pytest.raises(
+        RuntimeError, match=f"ancestor_closure did not converge in {max_iterations}"
+    ):
+        ancestor_closure(_edges(spark, rows), rel, ONT)
 
 
 def test_incremental_update_overrun_raises(spark, monkeypatch):
-    """The bottom edge of the chain arrives last: the reverse pass
-    converges in one round, the forward pass needs seven."""
-    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+    """The bottom edge of the chain arrives last: the closure of the
+    net edge set needs seven rounds and raises at two, naming the
+    update."""
     edges = _chain(8)
     old, new = _edges(spark, edges[:-1]), _edges(spark, edges[-1:])
     rel = relevant_entities(_terms(spark, 8), ONT).localCheckpoint(eager=True)
     prior = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
+    _cut_rounds(monkeypatch, 2)
     with pytest.raises(RuntimeError, match="incremental_closure_update did not"):
-        incremental_closure_update(old, new, prior, rel, ONT, max_iterations=2)
+        incremental_closure_update(old, new, prior, rel, ONT)
 
 
 def test_incremental_delete_reverse_pass_overrun_raises(spark, monkeypatch):
-    """Deleting the top edge puts the whole chain in the delete cone."""
-    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+    """Deleting the top edge leaves a 7-chain to re-solve. The delete's
+    one distributed loop (the closure of the remaining edges, which
+    took the place of its reverse pass) raises at two rounds, naming
+    the delete."""
     edges = _chain(8)
     ed = _edges(spark, edges)
     rel = relevant_entities(_terms(spark, 8), ONT).localCheckpoint(eager=True)
     prior = ancestor_closure(ed, rel, ONT).localCheckpoint(eager=True)
-    with pytest.raises(
-        RuntimeError, match="incremental_closure_delete reverse pass"
-    ):
-        incremental_closure_delete(
-            ed, _edges(spark, edges[:1]), prior, rel, ONT, max_iterations=2
-        )
+    _cut_rounds(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="incremental_closure_delete did not"):
+        incremental_closure_delete(ed, _edges(spark, edges[:1]), prior, rel, ONT)
+
+
+def test_deep_chain_distributed_arm(spark, monkeypatch):
+    """A 70-edge chain on the distributed arm of all three operators
+    returns every pair: the round bound follows the distinct edge
+    count, where a fixed 64-round bound would raise."""
+    monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
+    n = 71
+    edges = _chain(n)
+    want = {(f"P:{k}", f"P:{j}") for k in range(n) for j in range(k + 1)}
+    rel = relevant_entities(_terms(spark, n), ONT).localCheckpoint(eager=True)
+    shortcut = [(f"P:{n - 1}", ISA, "P:0")]
+    old, new = _edges(spark, edges[:-1]), _edges(spark, edges[-1:])
+    prior = ancestor_closure(old, rel, ONT).localCheckpoint(eager=True)
+
+    def pairs(df):
+        return {(r["subject"], r["object"]) for r in df.collect()}
+
+    assert pairs(ancestor_closure(_edges(spark, edges), rel, ONT)) == want
+    assert pairs(incremental_closure_update(old, new, prior, rel, ONT)) == want
+    full = _edges(spark, edges + shortcut)
+    assert pairs(incremental_closure_delete(
+        full, _edges(spark, shortcut), prior, rel, ONT)) == want
 
 
 def _redirect_terms(spark, rows):
@@ -126,8 +185,9 @@ def test_redirect_map_long_chains_and_cycle_tail(spark):
 
 def test_fixpoint_logs_rounds_and_frontier_sizes(spark, caplog):
     rel = relevant_entities(_terms(spark, 5), ONT)
+    hedges, n = hierarchy_pairs(_edges(spark, _chain(5)))
     with caplog.at_level(logging.DEBUG, logger="ontology_loader_spark.fixpoint"):
-        _frontier(_edges(spark, _chain(5)), rel)
+        closure._reach(_reflexive(rel), hedges, n, "ancestor_closure", True)
     (rec,) = [r for r in caplog.records if r.name == "ontology_loader_spark.fixpoint"]
     assert rec.levelno == logging.DEBUG
     assert rec.op_name == "ancestor_closure"
@@ -193,7 +253,10 @@ def test_incremental_maintenance_job_budget(spark, monkeypatch, job_count):
     Distributed arm (ceiling forced to 0): the loops that pinned, then
     counted or ran ``isEmpty``, then re-pinned an accumulator every
     round spent 98-99 jobs on the add and 95 on the delete (local[4],
-    8 shuffle partitions); the budget is half of the lower count.
+    8 shuffle partitions); the delta derivations on the shared fixpoint
+    (a reverse pass, then a forward pass or a cone re-derive) 38 and
+    45. The closure of the net edge set, measured and asserted: 32 and
+    31.
 
     Local arm (the default at this size), measured and asserted: 2
     jobs for the add (the edge pin; the one-task solve under the
@@ -222,8 +285,8 @@ def test_incremental_maintenance_job_budget(spark, monkeypatch, job_count):
     assert del_jobs <= 4, del_jobs
     monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
     add_jobs, del_jobs = jobs()
-    assert add_jobs <= 98 // 2, add_jobs
-    assert del_jobs <= 95 // 2, del_jobs
+    assert add_jobs <= 32, add_jobs
+    assert del_jobs <= 31, del_jobs
 
 
 def test_hierarchy_walk_job_budget(spark, job_count):

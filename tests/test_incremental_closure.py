@@ -3,7 +3,7 @@ batch of added edges must equal a fresh full recompute — on random
 DAGs, on cyclic graphs, and on the foreign-intermediate trap (a new
 edge hanging off a node quirk Q2 filtered out of the stored closure).
 Every equivalence runs on both arms: the one-task local solve (the
-default at these sizes) and the distributed path (ceiling forced to
+default at these sizes) and the distributed reach (ceiling forced to
 0)."""
 
 import random
@@ -155,7 +155,7 @@ def test_delete_breaks_cycle(spark):
 def test_delete_through_foreign_intermediate(spark):
     """Deleting the foreign hop must retract ancestors reached through
     it, even though the stored closure holds no pair ending at the
-    foreign node (Q2) — the reverse pass runs on RAW edges."""
+    foreign node (Q2) — the closure walks the RAW edges."""
     terms = mk_terms(10)
     edges = [
         ("P:8", "rdfs:subClassOf", "Q:7"),

@@ -1,10 +1,9 @@
-"""Streaming KG maintenance: edge CDC micro-batches folded through the
-incremental closure must land on exactly the from-scratch closure of
+"""Streaming KG maintenance: edge CDC micro-batches folded into one net
+edge set each must land on exactly the from-scratch closure of
 the surviving edge set — adds, deletes, replayed duplicates and
 no-op deletes included. Every test runs on both arms: the one-task
-local solve (the default at these sizes) and the distributed path
-(ceiling forced to 0), where each batch's prior closure is the last
-incremental output."""
+local solve (the default at these sizes) and the distributed reach
+(ceiling forced to 0)."""
 
 import tempfile
 
@@ -175,10 +174,9 @@ def test_maintainer_job_budget_and_noop_batch(spark, monkeypatch, job_count):
     Local arm (the default at this size), measured and asserted: 5 jobs
     (the net edge set's shuffle and pin, the hierarchy pairs' shuffle
     and pin, the one-task solve). Distributed arm (ceiling forced to 0):
-    at most the incremental operators' own budgets, 49 for the add and
-    47 for the delete, plus one job for each of the maintainer's own
-    four pins (net edge set, hierarchy pairs, net adds, net deletes);
-    measured 92 (local[4], 8 shuffle partitions)."""
+    the net adds, then the net deletes, through the delta derivations
+    took 92 jobs (local[4], 8 shuffle partitions); one distributed
+    solve of the net edge set, measured and asserted, takes 31."""
     n = 200
     isa, part_of = "rdfs:subClassOf", "BFO:0000050"
     edges = [(f"P:{k}", isa, f"P:{k // 2}") for k in range(1, n)]
@@ -208,4 +206,4 @@ def test_maintainer_job_budget_and_noop_batch(spark, monkeypatch, job_count):
     assert local_jobs <= 5, local_jobs
     monkeypatch.setattr(closure, "LOCAL_CLOSURE_EDGES_MAX", 0)
     dist_jobs = jobs()
-    assert dist_jobs <= 49 + 47 + 4, dist_jobs
+    assert dist_jobs <= 31, dist_jobs
